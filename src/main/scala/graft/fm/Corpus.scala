@@ -1,6 +1,7 @@
 package graft.fm
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicLong
 import java.{util => ju}
 import scala.jdk.CollectionConverters._
 
@@ -17,13 +18,16 @@ final case class ParsedFile(path: String, ok: Boolean, error: String, fields: Se
 
 final case class ParseWarning(path: String, error: String)
 
-/** Distributed ingest: relative paths → parsed+serialized records →
+/** Corpus ingest: relative paths → parsed+serialized records →
   * union-of-keys all-strings `files` DataFrame (reference
-  * `query.py:23-59`). The reference collects every record on one node;
-  * here parsing/serialization runs in executors and only the distinct key
-  * set (bounded by the number of distinct frontmatter properties) and the
-  * warning list are collected — the two-pass shape that stays viable at
-  * 100 TB (SURVEY.md §7.4).
+  * `query.py:23-59`).
+  *
+  * Like the reference, the per-file metadata lives on the driver: files
+  * are read and parsed there ([[parseFiles]]), and the key union and the
+  * warning list are folds over the records ([[build]]) — no Spark job.
+  * Only the finished rows go to Spark, as the persisted serving frame.
+  * [[QueryEngine]] keeps the records in a per-file mtime cache, so a
+  * one-file edit re-reads one file.
   */
 object Corpus {
 
@@ -42,36 +46,63 @@ object Corpus {
     }
   }
 
-  /** Parse `relPaths` under `baseDir` in executors. */
-  def parse(spark: SparkSession, baseDir: String, relPaths: Seq[String]): Dataset[ParsedFile] = {
-    import spark.implicits._
-    val bd = baseDir
-    val parts = math.max(1, math.min(spark.sparkContext.defaultParallelism, relPaths.size / 32 + 1))
-    spark.createDataset(relPaths).repartition(parts).mapPartitions { it =>
-      it.map { rel =>
-        try {
-          val bytes = Files.readAllBytes(Paths.get(bd).resolve(rel))
-          ParsedFile(rel, ok = true, null, recordFields(rel, new String(bytes, "UTF-8")))
-        } catch {
-          case e: Exception =>
-            ParsedFile(rel, ok = false, s"${e.getClass.getSimpleName}: ${e.getMessage}", Nil)
-        }
-      }
+  /** Files read by [[parseFile]] since start-up (cache tests count re-reads). */
+  private[fm] val filesRead = new AtomicLong
+
+  /** Read and parse one file under `baseDir`; a failure becomes a
+    * not-ok record carrying the warning text.
+    */
+  def parseFile(baseDir: Path, rel: String): ParsedFile = {
+    filesRead.incrementAndGet()
+    try {
+      val bytes = Files.readAllBytes(baseDir.resolve(rel))
+      ParsedFile(rel, ok = true, null, recordFields(rel, new String(bytes, "UTF-8")))
+    } catch {
+      case e: Exception =>
+        ParsedFile(rel, ok = false, s"${e.getClass.getSimpleName}: ${e.getMessage}", Nil)
     }
   }
 
-  /** Union-of-keys all-strings DataFrame + parse warnings.
-    * Column order: `path` first, then sorted keys (deterministic; the
-    * reference's set-iteration order is arbitrary).
+  /** [[parseFile]] over `rels`, in order, spread over the driver's cores. */
+  def parseFiles(baseDir: Path, rels: Seq[String]): Seq[ParsedFile] =
+    new ju.ArrayList(rels.asJava).parallelStream()
+      .map[ParsedFile](parseFile(baseDir, _)).toList.asScala.toSeq
+
+  /** Records behind the Datasets [[parse]] returned, so [[filesDF]] and
+    * [[SchemaInfer.inspectFlat]] fold them without a Spark round trip.
     */
-  def filesDF(spark: SparkSession, parsed: Dataset[ParsedFile],
-      maxWarnings: Int = Settings.maxListed()): (DataFrame, Seq[ParseWarning]) = {
+  private val madeFrom =
+    ju.Collections.synchronizedMap(new ju.WeakHashMap[Dataset[ParsedFile], Seq[ParsedFile]]())
+
+  /** Parsed records as a Dataset, in the serving layout. */
+  def parse(spark: SparkSession, baseDir: String, relPaths: Seq[String]): Dataset[ParsedFile] = {
     import spark.implicits._
-    val good = parsed.filter(_.ok)
-    val keys = good.flatMap(_.fields.map(_.key)).distinct().collect().sorted
-    val ordered = "path" +: keys.filterNot(_ == "path").toSeq
+    val recs = parseFiles(Paths.get(baseDir), relPaths)
+    val ds = spark.createDataset(spark.sparkContext.parallelize(recs, servingParts(spark, recs.size)))
+    madeFrom.put(ds, recs)
+    ds
+  }
+
+  /** The records of `parsed`, in order. */
+  private[fm] def records(parsed: Dataset[ParsedFile]): Seq[ParsedFile] =
+    Option(madeFrom.get(parsed)).getOrElse(parsed.collect().toSeq)
+
+  /** [[build]] over a Dataset's records. */
+  def filesDF(spark: SparkSession, parsed: Dataset[ParsedFile],
+      maxWarnings: Int = Settings.maxListed()): (DataFrame, Seq[ParseWarning]) =
+    build(spark, records(parsed), maxWarnings)
+
+  /** Union-of-keys all-strings DataFrame + parse warnings, from records
+    * in path order. Column order: `path` first, then sorted keys
+    * (deterministic; the reference's set-iteration order is arbitrary).
+    */
+  def build(spark: SparkSession, records: Seq[ParsedFile],
+      maxWarnings: Int = Settings.maxListed()): (DataFrame, Seq[ParseWarning]) = {
+    val good = records.filter(_.ok)
+    val keys = good.iterator.flatMap(_.fields.iterator.map(_.key)).toSet - "path"
+    val ordered = "path" +: keys.toSeq.sorted
     val schema = StructType(ordered.map(k => StructField(k, StringType, nullable = k != "path")))
-    val rows = good.rdd.map { pf =>
+    val rows = good.map { pf =>
       val m = pf.fields.iterator.map(f => f.key -> f.value).toMap
       Row.fromSeq(ordered.map(m.getOrElse(_, null)))
     }
@@ -83,31 +114,34 @@ object Corpus {
     // while expression-heavy rows lost their scan parallelism — the 66
     // fm rows without their own r17 fixes regressed +2.4 s in
     // aggregate, led by q_fm_json_ops 0.20→0.48 s and q_fm_listfns
-    // 0.16→0.36 s (run spreads ≤ 0.03, i.e. real). The parse layout
-    // (Corpus.parse: ≥32 files per task, capped at defaultParallelism)
-    // is already the right serving layout at every scale probed.
-    // Warning list bounded at the driver (Settings.maxListed): the full
-    // list is reference parity and kept verbatim below the cap, but a
-    // corpus with 10⁹ unparseable files must not OOM the driver building
-    // it — above the cap the first N are listed plus one summary entry
-    // carrying the exact remainder count.
-    val cap = math.max(1, maxWarnings)
-    val bad = parsed.filter(!_.ok)
-    val head = bad.take(cap + 1)
-    val warnings =
-      if (head.length <= cap) head.map(p => ParseWarning(p.path, p.error)).toSeq
-      else {
-        val total = bad.count()
-        head.take(cap).map(p => ParseWarning(p.path, p.error)).toSeq :+
-          ParseWarning("(truncated)",
-            s"... ${total - cap} more parse warnings not listed (listing capped at $cap; set FRONTMATTER_MAX_LIST to raise)")
-      }
-    (spark.createDataFrame(rows, schema), warnings)
+    // 0.16→0.36 s (run spreads ≤ 0.03, i.e. real). servingParts is the
+    // right serving layout at every scale probed.
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, servingParts(spark, records.size)), schema)
+    (df, warnings(records, maxWarnings))
   }
 
-  /** Corpus fingerprint over (relPath, mtime): the Spark-shaped analogue of
-    * the reference's per-file mtime cache (`files.py:19-49`) — when
-    * unchanged, a cached parsed DataFrame is reused (see [[QueryEngine]]).
+  /** Serving layout: ≥32 files per partition, capped at defaultParallelism. */
+  private def servingParts(spark: SparkSession, files: Int): Int =
+    math.max(1, math.min(spark.sparkContext.defaultParallelism, files / 32 + 1))
+
+  /** Warning list bounded at the driver (Settings.maxListed): the full
+    * list is reference parity and kept verbatim below the cap, but a
+    * corpus with 10⁹ unparseable files must not put 10⁹ entries in every
+    * response — above the cap the first N are listed plus one summary
+    * entry carrying the exact remainder count.
+    */
+  private def warnings(records: Seq[ParsedFile], maxWarnings: Int): Seq[ParseWarning] = {
+    val cap = math.max(1, maxWarnings)
+    val bad = records.filterNot(_.ok)
+    val listed = bad.iterator.take(cap).map(p => ParseWarning(p.path, p.error)).toVector
+    if (bad.size <= cap) listed
+    else listed :+ ParseWarning("(truncated)",
+      s"... ${bad.size - cap} more parse warnings not listed (listing capped at $cap; set FRONTMATTER_MAX_LIST to raise)")
+  }
+
+  /** Corpus fingerprint over (relPath, mtime): when unchanged, the
+    * engine reuses its persisted `files` frame (see [[QueryEngine]]).
     */
   def fingerprint(pathsWithMtime: Seq[(String, Long)]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -115,37 +149,5 @@ object Corpus {
       md.update(p.getBytes("UTF-8")); md.update(m.toString.getBytes("UTF-8")); md.update(0.toByte)
     }
     md.digest().map("%02x".format(_)).mkString
-  }
-
-  /** Driver-side parse with the reference's per-file mtime cache — the
-    * exact `parse_files` semantics (`files.py:70-107`) as an API-parity
-    * path for embedders that want the reference's driver-local shape.
-    * The query engine uses the distributed [[parse]] + fingerprint cache
-    * instead, and the mutation tools read files directly (as the
-    * reference's own update path does).
-    */
-  def parseFilesLocal(
-      paths: Seq[java.nio.file.Path],
-      baseDir: java.nio.file.Path,
-      cache: FileRecordCache): (Seq[Map[String, Any]], Seq[ParseWarning]) = {
-    val records = Seq.newBuilder[Map[String, Any]]
-    val warnings = Seq.newBuilder[ParseWarning]
-    paths.foreach { p =>
-      cache.get(p, baseDir) match {
-        case Some(rec) => records += rec
-        case None =>
-          try {
-            val post = Frontmatter.load(p)
-            val rec = (scala.collection.immutable.ListMap("path" -> (baseDir.relativize(p).toString: Any))
-              ++ post.metadata.asScala.toSeq)
-            records += rec
-            cache.set(p, baseDir, rec)
-          } catch {
-            case e: Exception =>
-              warnings += ParseWarning(baseDir.relativize(p).toString, String.valueOf(e.getMessage))
-          }
-      }
-    }
-    (records.result(), warnings.result())
   }
 }

@@ -30,8 +30,8 @@ final class FmTools(spark: SparkSession, val settings: Settings) {
 
   /** `query_inspect` (server.py:87-118). */
   def queryInspect(glob: String): Map[String, Any] = {
-    val (fileCount, schemaDf, warnings) = engine.inspect(glob)
-    val schema = schemaDf.collect().map { r =>
+    val (fileCount, rows, warnings) = engine.inspectRows(glob)
+    val schema = rows.map { r =>
       r.getString(0) -> Map(
         "type" -> r.getString(1),
         "nullable" -> r.getBoolean(2),

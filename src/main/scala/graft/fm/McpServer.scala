@@ -45,6 +45,7 @@ private[fm] object Json {
     case d: Double =>
       if (d.isNaN || d.isInfinite) sb ++= "null" else sb ++= d.toString
     case f: Float => write(f.toDouble, sb)
+    case w: ParseWarning => write(Map("path" -> w.path, "error" -> w.error), sb)
     case n: Number => sb ++= n.toString
     case m: collection.Map[_, _] =>
       sb += '{'

@@ -1,8 +1,10 @@
 package graft.fm
 
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Pluggable semantic extension surface (implemented in `graft.semantic`):
   * reference `semantic/context.py` gates on indexer readiness
@@ -38,15 +40,16 @@ final case class QueryResult(
 }
 
 /** The product's main read API (reference `server.py:121-169`):
-  * `query(glob, sql)` = glob scan → cached distributed parse → union-of-keys
+  * `query(glob, sql)` = glob scan → per-file parse cache → union-of-keys
   * all-strings `files` view (+ semantic embedding join when ready) →
   * dialect-translated Spark SQL.
   *
-  * The parsed DataFrame is persisted and keyed by a corpus fingerprint of
-  * (path, mtime) pairs — the Spark-shaped equivalent of the reference's
-  * mtime parse cache (`files.py:19-49`): any file change alters the
-  * fingerprint and triggers a re-parse; an unchanged corpus reuses the
-  * in-memory table across queries.
+  * Serving holds per-file metadata on the driver, as the reference does:
+  * one record cache, relPath → (mtime, parsed record), shared by every
+  * glob, re-reads only new files and files whose mtime moved (reference
+  * `files.py:19-49`). Each glob's `files` frame is built from the cached
+  * records and persisted, keyed by a fingerprint of its (path, mtime)
+  * pairs; an unchanged corpus reuses the frame across queries.
   */
 final class QueryEngine(
     val spark: SparkSession,
@@ -89,12 +92,20 @@ final class QueryEngine(
 
   private case class Cached(
       fingerprint: String,
-      parsed: Dataset[ParsedFile],
+      records: Seq[ParsedFile],
       files: DataFrame,
       warnings: Seq[ParseWarning],
       semanticApplied: Boolean)
 
   private val cache = TrieMap.empty[String, Cached]
+
+  /** relPath → (mtime, record), shared by every glob; guarded by the
+    * engine lock.
+    */
+  private val records = mutable.HashMap.empty[String, (Long, ParsedFile)]
+
+  /** Paths the record cache holds (cache tests). */
+  private[fm] def cachedPaths: Set[String] = synchronized(records.keySet.toSet)
 
   private def semanticReady: Boolean = semantic.exists(_.isReady)
 
@@ -110,27 +121,34 @@ final class QueryEngine(
     val wantSemantic = semanticReady
     cache.get(glob) match {
       case Some(c) if c.fingerprint == fp && c.semanticApplied == wantSemantic => c
-      case Some(c) if c.fingerprint == fp =>
-        // Corpus unchanged, only semantic readiness flipped: reuse the
-        // persisted parsed Dataset and rebuild just the files frame with
-        // (or without) the embedding join — no re-read, no re-parse.
-        c.files.unpersist()
-        val (base, warnings) = Corpus.filesDF(spark, c.parsed)
+      case prev =>
+        // A readiness flip alone (same fingerprint) rebuilds the frame
+        // from the cached records: no re-read.
+        val recs = prev.filter(_.fingerprint == fp).map(_.records)
+          .getOrElse(refresh(glob, pm))
+        prev.foreach(_.files.unpersist())
+        val (base, warnings) = Corpus.build(spark, recs)
         val files =
           (if (wantSemantic) semantic.get.withEmbedding(base) else base).persist()
-        val entry = Cached(fp, c.parsed, files, warnings, wantSemantic)
-        cache.put(glob, entry)
-        entry
-      case stale =>
-        stale.foreach { c => c.files.unpersist(); c.parsed.unpersist() }
-        val parsed = Corpus.parse(spark, settings.baseDir.toString, pm.map(_._1)).persist()
-        val (base, warnings) = Corpus.filesDF(spark, parsed)
-        val files =
-          (if (wantSemantic) semantic.get.withEmbedding(base) else base).persist()
-        val entry = Cached(fp, parsed, files, warnings, wantSemantic)
+        val entry = Cached(fp, recs, files, warnings, wantSemantic)
         cache.put(glob, entry)
         entry
     }
+  }
+
+  /** Records for the listing `pm` of `glob`: re-reads only files that are
+    * new or whose mtime moved, then drops entries no cached glob lists.
+    */
+  private def refresh(glob: String, pm: Seq[(String, Long)]): Seq[ParsedFile] = {
+    val stale = pm.filterNot { case (p, m) => records.get(p).exists(_._1 == m) }
+    stale.zip(Corpus.parseFiles(settings.baseDir, stale.map(_._1)))
+      .foreach { case ((p, m), r) => records(p) = (m, r) }
+    val recs = pm.map { case (p, _) => records(p)._2 }
+    val listed = mutable.HashSet.empty[String]
+    pm.foreach(listed += _._1)
+    for ((g, c) <- cache if g != glob; r <- c.records) listed += r.path
+    records.filterInPlace((p, _) => listed(p))
+    recs
   }
 
   /** `query` tool: run DuckDB-dialect SQL against the `files` view.
@@ -713,37 +731,22 @@ final class QueryEngine(
     }
   }
 
-  private val inspectCache =
-    TrieMap.empty[String, (String, Long, DataFrame)]
-
-  /** `query_inspect` tool: inferred schema rows + file count.
-    * Appends the `embedding FLOAT[dim]` row when semantic is ready
-    * (reference `semantic/query_schema.py:7-18`). The tiny result frame
-    * is cached by corpus fingerprint — repeated inspects of an unchanged
-    * corpus don't re-aggregate.
+  /** `query_inspect` tool: file count and one schema row per property,
+    * one fold over the glob's cached records. Appends the
+    * `embedding FLOAT[dim]` row when semantic is ready (reference
+    * `semantic/query_schema.py:7-18`).
     */
-  def inspect(glob: String): (Long, DataFrame, Seq[ParseWarning]) = {
-    import org.apache.spark.sql.functions.lit
+  def inspectRows(glob: String): (Long, Seq[Row], Seq[ParseWarning]) = {
     val entry = cachedParse(glob)
-    val (fileCount, base) = inspectCache.get(glob) match {
-      case Some((fp, n, df)) if fp == entry.fingerprint => (n, df)
-      case _ =>
-        val n = entry.parsed.filter(_.ok).count()
-        val rows = SchemaInfer.inspectFlat(spark, entry.parsed)
-        val materialized = spark.createDataFrame(
-          java.util.Arrays.asList(rows.collect(): _*), rows.schema)
-        inspectCache.put(glob, (entry.fingerprint, n, materialized))
-        (n, materialized)
-    }
-    val withSem = semantic.filter(_.isReady) match {
-      case Some(p) =>
-        val row = spark.createDataFrame(
-          java.util.List.of(
-            org.apache.spark.sql.Row("embedding", s"FLOAT[${p.dim}]", false, "[]")),
-          base.schema)
-        base.union(row)
-      case None => base
-    }
-    (fileCount, withSem, entry.warnings)
+    val (fileCount, rows) = SchemaInfer.infer(entry.records)
+    val embedding = semantic.filter(_.isReady).map(p =>
+      Row("embedding", s"FLOAT[${p.dim}]", false, "[]"))
+    (fileCount, rows ++ embedding, entry.warnings)
+  }
+
+  /** [[inspectRows]] as a DataFrame. */
+  def inspect(glob: String): (Long, DataFrame, Seq[ParseWarning]) = {
+    val (fileCount, rows, warnings) = inspectRows(glob)
+    (fileCount, spark.createDataFrame(rows.asJava, SchemaInfer.Schema), warnings)
   }
 }

@@ -1,8 +1,10 @@
 package graft.fm
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
 
 /** `query_inspect` schema inference (reference `query_schema.py:19-69`):
   * per property `{type, nullable, examples}` where type is "array" iff any
@@ -10,64 +12,58 @@ import org.apache.spark.sql.functions._
   * non-null value (`path` hard-wired non-null), and examples are the first
   * `maxSamples` distinct values in record order.
   *
-  * Implemented as a distributed aggregation, not a driver fold: per-key
-  * counts are a hash aggregate, and first-seen examples are
-  * groupBy(key,value)→min(path) followed by a bounded top-k aggregator —
-  * both partial-aggregate friendly, no per-key sort (record order is path
-  * order because [[FileScan.collect]] sorts).
+  * One fold over the driver-held records, as the reference does. Record
+  * order is path order by code point (the order of UTF-8 bytes, and of
+  * Spark's string `min`), not Java's UTF-16 `compareTo`.
   */
 object SchemaInfer {
 
-  /** Rows: (property, type, nullable, examples) with examples rendered as
-    * a JSON array string of the serialized values.
+  val Schema: StructType = StructType(Seq(
+    StructField("property", StringType, nullable = false),
+    StructField("type", StringType, nullable = false),
+    StructField("nullable", BooleanType, nullable = false),
+    StructField("examples", StringType, nullable = false)))
+
+  /** Code-point order: UTF-16 order with surrogates moved above
+    * U+E000–U+FFFF, so a non-BMP character sorts after every BMP one.
     */
-  def inspect(spark: SparkSession, parsed: Dataset[ParsedFile], maxSamples: Int = 5): DataFrame = {
-    import spark.implicits._
-    val good = parsed.filter(_.ok)
-    val totalFiles = good.count()
-    val kv = good
-      .flatMap(pf => pf.fields.map(f => (f.key, f.value, f.isArray, pf.path)))
-      .toDF("key", "value", "is_array", "path")
-      .cache()
-
-    val stats = kv
-      .groupBy("key")
-      .agg(
-        count(col("value")).as("cnt"), // count() skips NULLs, like the reference's non_null filter
-        max(when(col("value").isNotNull && col("is_array"), 1).otherwise(0)).as("arr"))
-
-    // First occurrence path per distinct (key, value); then first-5 by path.
-    graft.ops.GraftAggregates.register(spark)
-    val examples = kv
-      .filter(col("value").isNotNull)
-      .groupBy("key", "value")
-      .agg(min("path").as("fp"))
-      .groupBy("key")
-      .agg(expr(s"graft_top_k(struct(fp, value), $maxSamples)").as("ex"))
-      .select(col("key"), col("ex.value").as("examples"))
-
-    val out = stats
-      .join(examples, Seq("key"), "left")
-      .select(
-        col("key").as("property"),
-        when(col("arr") === 1, "array").otherwise("string").as("type"),
-        when(col("key") === "path", false)
-          .otherwise(col("cnt") < totalFiles)
-          .as("nullable"),
-        col("examples"))
-    kv.unpersist()
-    out
+  val byCodePoint: Ordering[String] = (a: String, b: String) => {
+    def fix(c: Char): Int =
+      if (c < 0xD800) c else if (c >= 0xE000) c - 0x800 else c + 0x2000
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+    if (i < n) fix(a.charAt(i)) - fix(b.charAt(i)) else a.length - b.length
   }
 
-  /** Same, with examples rendered as one JSON string column — a stable,
-    * oracle-comparable shape for Verify.
+  /** Ok-file count and one row per property: (property, type, nullable,
+    * examples as a JSON array string of the serialized values).
     */
-  def inspectFlat(spark: SparkSession, parsed: Dataset[ParsedFile], maxSamples: Int = 5): DataFrame = {
-    val jsonQuote = udf { (xs: Seq[String]) =>
-      if (xs == null) "[]"
-      else xs.map(PyValue.jsonDumps(_)).mkString("[", ", ", "]")
+  def infer(records: Seq[ParsedFile], maxSamples: Int = 5): (Long, Seq[Row]) = {
+    final class Acc {
+      var nonNull = 0L
+      var array = false
+      val examples = mutable.LinkedHashSet.empty[String]
     }
-    inspect(spark, parsed, maxSamples)
-      .withColumn("examples", jsonQuote(col("examples")))
+    val good = records.filter(_.ok).sortBy(_.path)(byCodePoint)
+    val props = mutable.HashMap.empty[String, Acc]
+    for (pf <- good; f <- pf.fields) {
+      val acc = props.getOrElseUpdate(f.key, new Acc)
+      if (f.value != null) {
+        acc.nonNull += 1
+        acc.array ||= f.isArray
+        if (acc.examples.size < maxSamples) acc.examples += f.value
+      }
+    }
+    val rows = props.toSeq.sortBy(_._1).map { case (k, acc) =>
+      Row(k, if (acc.array) "array" else "string",
+        k != "path" && acc.nonNull < good.size,
+        acc.examples.iterator.map(PyValue.jsonDumps(_)).mkString("[", ", ", "]"))
+    }
+    (good.size.toLong, rows)
   }
+
+  /** [[infer]]'s rows over a Dataset's records, as a local DataFrame. */
+  def inspectFlat(spark: SparkSession, parsed: Dataset[ParsedFile], maxSamples: Int = 5): DataFrame =
+    spark.createDataFrame(infer(Corpus.records(parsed), maxSamples)._2.asJava, Schema)
 }

@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * reliable-checkpoint mode as the template if executor-loss survival
   * of a very deep run ever matters here).
   *
-  * Callers must feed an edge set where EVERY node has at least one
-  * incoming edge (e.g. a symmetrized graph), otherwise in-degree-0
+  * An empty edge frame yields an empty rank frame. Callers must feed an
+  * edge set where EVERY node has at least one incoming edge (e.g. a symmetrized graph), otherwise in-degree-0
   * nodes drop out of the rank frame after one iteration.
   */
 object PageRank {
@@ -61,6 +61,13 @@ object PageRank {
     // to the SQL `DIV` the oracle replays.
     val nodes = e.select(col("src").as("node")).distinct().persist()
     val n = nodes.count()
+    if (n == 0) {
+      // An empty edge frame has no nodes to rank: an empty (node, pr).
+      val schema = nodes.select(col("node"), lit(0L).as("pr")).schema
+      withDeg.unpersist(blocking = false)
+      nodes.unpersist(blocking = false)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    }
     val base = Scale / n
     var ranks = nodes.select(col("node"), lit(base).as("pr"))
     var prevCut: Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]] = None

@@ -692,7 +692,7 @@ object FrontmatterQueries {
         |FROM (DESCRIBE SELECT * FROM files)
         |ORDER BY column_name""".stripMargin),
 
-    // A7: query_inspect schema inference as a distributed aggregation
+    // A7: query_inspect schema inference, one fold over the cached records
     "q_fm_inspect" -> ((s, d) => {
       val (_, schemaDf, _) = engine(s, d).inspect("**/*.md")
       schemaDf.orderBy("property")

@@ -75,6 +75,27 @@ class McpSpec extends AnyFunSuite {
     assert(structured("row_count") == 2)
   }
 
+  test("parse warnings go over the wire as {path, error} objects") {
+    val (server, dir) = mkServer()
+    Files.write(dir.resolve("bad.md"), "---\n{ not: valid: yaml: [\n---\n".getBytes)
+    for ((tool, args) <- Seq(
+        "query" -> """{"glob":"**/*.md","sql":"SELECT path FROM files"}""",
+        "query_inspect" -> """{"glob":"**/*.md"}""")) {
+      val r = rpc(server,
+        s"""{"jsonrpc":"2.0","id":5,"method":"tools/call","params":{"name":"$tool","arguments":$args}}""")
+      val result = r("result").asInstanceOf[Map[String, Any]]
+      val text = result("content").asInstanceOf[Seq[Map[String, Any]]].head("text").toString
+      for (payload <- Seq(Json.parse(text), result("structuredContent"))) {
+        val ws = payload.asInstanceOf[Map[String, Any]]("warnings").asInstanceOf[Seq[Any]]
+        assert(ws.length == 1, tool)
+        val w = ws.head.asInstanceOf[Map[String, Any]]
+        assert(w.keySet == Set("path", "error"), tool)
+        assert(w("path") == "bad.md", tool)
+        assert(w("error").toString.nonEmpty, tool)
+      }
+    }
+  }
+
   test("tools/call query handles the statement surface: DESCRIBE and COPY TO") {
     val (server, dir) = mkServer()
     val d = rpc(server,

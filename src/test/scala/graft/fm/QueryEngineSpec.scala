@@ -157,15 +157,152 @@ class QueryEngineSpec extends AnyFunSuite {
     assert(ex == "[\"v1\", \"v2\", \"v3\", \"v4\", \"v5\"]")
   }
 
-  test("FileRecordCache mtime semantics (files.py:19-49)") {
-    val dir = corpus("a.md" -> "---\nx: 1\n---\n")
-    val cache = new FileRecordCache
-    val p = dir.resolve("a.md")
-    val (recs1, _) = Corpus.parseFilesLocal(Seq(p), dir, cache)
-    assert(recs1.head("x") == Integer.valueOf(1))
-    assert(cache.get(p, dir).isDefined)
-    cache.invalidate(Seq(p), dir)
-    assert(cache.get(p, dir).isEmpty)
+  private def reads[A](f: => A): (A, Long) = {
+    val before = Corpus.filesRead.get()
+    val a = f
+    (a, Corpus.filesRead.get() - before)
+  }
+
+  private def write(dir: Path, rel: String, content: String, mtime: Long): Unit = {
+    val p = dir.resolve(rel)
+    Files.createDirectories(p.getParent)
+    Files.write(p, content.getBytes("UTF-8"))
+    Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(mtime))
+  }
+
+  private def col(e: QueryEngine, glob: String, c: String): Seq[(String, String)] =
+    e.query(glob, s"SELECT path, $c FROM files ORDER BY path").results.collect()
+      .map(r => r.getString(0) -> r.getString(1)).toSeq
+
+  test("record cache mtime semantics (files.py:19-49)") {
+    val dir = corpus()
+    val t0 = System.currentTimeMillis() - 60000
+    write(dir, "a.md", "---\nx: 1\n---\n", t0)
+    write(dir, "b.md", "---\nx: 9\n---\n", t0)
+    val e = eng(dir)
+    val (first, n1) = reads(col(e, "**/*.md", "x"))
+    assert(first == Seq("a.md" -> "1", "b.md" -> "9") && n1 == 2)
+    assert(e.cachedPaths == Set("a.md", "b.md"))
+    // Unchanged (path, mtime): served from the cache, nothing read.
+    assert(reads(col(e, "**/*.md", "x")) == (first, 0L))
+    // New content under the SAME mtime is not re-read — the reference's
+    // cache keys on mtime alone.
+    write(dir, "a.md", "---\nx: 2\n---\n", t0)
+    assert(reads(col(e, "**/*.md", "x")) == (first, 0L))
+    // A moved mtime invalidates that entry alone.
+    write(dir, "a.md", "---\nx: 3\n---\n", t0 + 1000)
+    assert(reads(col(e, "**/*.md", "x")) == (Seq("a.md" -> "3", "b.md" -> "9"), 1L))
+    // A deleted file leaves the cache.
+    Files.delete(dir.resolve("a.md"))
+    assert(reads(col(e, "**/*.md", "x")) == (Seq("b.md" -> "9"), 0L))
+    assert(e.cachedPaths == Set("b.md"))
+  }
+
+  test("a one-file edit re-reads exactly one file") {
+    val dir = corpus()
+    val t0 = System.currentTimeMillis() - 60000
+    (0 until 6).foreach(i => write(dir, s"n$i.md", s"---\nv: a$i\n---\n", t0))
+    val e = eng(dir)
+    assert(reads(e.filesTable("**/*.md"))._2 == 6)
+    write(dir, "n3.md", "---\nv: edited\nw: new\n---\n", t0 + 1000)
+    val (rows, n) = reads(col(e, "**/*.md", "v"))
+    assert(n == 1)
+    assert(rows == (0 until 6).map(i => s"n$i.md" -> (if (i == 3) "edited" else s"a$i")))
+    // the new key joins the union of keys
+    assert(col(e, "**/*.md", "w").filter(_._2 != null) == Seq("n3.md" -> "new"))
+  }
+
+  test("added and deleted files appear and disappear") {
+    val dir = corpus(threeDocs: _*)
+    val e = eng(dir)
+    assert(col(e, "**/*.md", "title").map(_._1) == Seq("a.md", "b.md", "sub/c.md"))
+    Files.write(dir.resolve("sub/d.md"), "---\ntitle: Delta\n---\n".getBytes("UTF-8"))
+    val (added, n) = reads(col(e, "**/*.md", "title"))
+    assert(n == 1)
+    assert(added == Seq("a.md" -> "Alpha", "b.md" -> "Beta", "sub/c.md" -> "Gamma", "sub/d.md" -> "Delta"))
+    Files.delete(dir.resolve("b.md"))
+    val (left, n2) = reads(e.query("**/*.md", "SELECT * FROM files ORDER BY path"))
+    assert(n2 == 0)
+    assert(left.results.collect().map(_.getString(0)).toSeq == Seq("a.md", "sub/c.md", "sub/d.md"))
+    // b.md held the only `extra` value: the key leaves the union too
+    assert(!left.columns.contains("extra"))
+    assert(!e.cachedPaths.contains("b.md"))
+  }
+
+  test("two overlapping globs share records") {
+    val dir = corpus(threeDocs: _*)
+    val e = eng(dir)
+    assert(reads(e.filesTable("**/*.md"))._2 == 3)
+    val (sub, n) = reads(col(e, "sub/*.md", "title"))
+    assert(sub == Seq("sub/c.md" -> "Gamma") && n == 0)
+    assert(reads(e.inspect("*.md"))._2 == 0)
+    // A deleted file's record stays while any cached glob still lists
+    // it, and goes once none does.
+    Files.delete(dir.resolve("a.md"))
+    e.filesTable("**/*.md")
+    assert(e.cachedPaths == Set("a.md", "b.md", "sub/c.md"))
+    e.filesTable("*.md")
+    assert(e.cachedPaths == Set("b.md", "sub/c.md"))
+  }
+
+  test("a semantic readiness flip rebuilds the frame without re-reading") {
+    val dir = corpus(threeDocs: _*)
+    val flag = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val provider = new SemanticProvider {
+      def isReady: Boolean = flag.get()
+      def dim: Int = 2
+      def withEmbedding(files: org.apache.spark.sql.DataFrame) =
+        files.withColumn("embedding", org.apache.spark.sql.functions.lit(null).cast("array<float>"))
+      def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit = ()
+    }
+    val e = new QueryEngine(spark, Settings(dir.toString, enableSemantic = true, "", None), Some(provider))
+    assert(!e.filesTable("**/*.md")._1.columns.contains("embedding"))
+    flag.set(true)
+    val (df, n) = reads(e.filesTable("**/*.md")._1)
+    assert(n == 0 && df.columns.contains("embedding") && df.count() == 3)
+    val (_, schemaDf, _) = e.inspect("**/*.md")
+    assert(schemaDf.collect().exists(r => r.getString(0) == "embedding" && r.getString(1) == "FLOAT[2]"))
+  }
+
+  test("the warning cap keeps its exact remainder through the record builder") {
+    val recs = ParsedFile("good.md", ok = true, null, Seq(ParsedField("path", "good.md", false))) +:
+      (0 until 4).map(i => ParsedFile(s"bad$i.md", ok = false, s"E$i", Nil))
+    val (df, exact) = Corpus.build(spark, recs, maxWarnings = 4)
+    assert(exact == (0 until 4).map(i => ParseWarning(s"bad$i.md", s"E$i")))
+    assert(df.count() == 1)
+    val (_, capped) = Corpus.build(spark, recs, maxWarnings = 3)
+    assert(capped.take(3) == exact.take(3))
+    assert(capped.length == 4 && capped.last.path == "(truncated)")
+    assert(capped.last.error.startsWith("... 1 more parse warnings not listed (listing capped at 3"))
+    // A Dataset the adapter did not make is collected, with the same result.
+    import spark.implicits._
+    assert(Corpus.filesDF(spark, spark.createDataset(recs), maxWarnings = 3)._2 == capped)
+  }
+
+  test("the files frame keeps the parse layout's partition count") {
+    val recs = (0 until 100).map(i => ParsedFile(f"f$i%03d.md", ok = true, null,
+      Seq(ParsedField("path", f"f$i%03d.md", false))))
+    for (n <- Seq(0, 1, 31, 32, 100)) {
+      val want = math.max(1, math.min(spark.sparkContext.defaultParallelism, n / 32 + 1))
+      assert(Corpus.build(spark, recs.take(n))._1.rdd.getNumPartitions == want, s"n=$n")
+    }
+  }
+
+  test("inspect examples follow code-point path order, not UTF-16 order") {
+    // U+1F600 is a surrogate pair (D83D DE00): it sorts BEFORE U+E000 by
+    // UTF-16 code unit and AFTER it by code point.
+    val astral = new String(Character.toChars(0x1F600)) + ".md"
+    val bmp = "\uE000.md"
+    def rec(p: String, v: String) =
+      ParsedFile(p, ok = true, null, Seq(ParsedField("path", p, false), ParsedField("k", v, false)))
+    val listed = Seq(rec(astral, "astral"), rec(bmp, "bmp")) // FileScan's UTF-16 order
+    assert(astral < bmp)
+    val (n, rows) = SchemaInfer.infer(listed)
+    assert(n == 2)
+    val ex = rows.map(r => r.getString(0) -> r.getString(3)).toMap
+    assert(ex("k") == "[\"bmp\", \"astral\"]")
+    assert(ex("path") == s"[${PyValue.jsonDumps(bmp)}, ${PyValue.jsonDumps(astral)}]")
+    assert(SchemaInfer.byCodePoint.lt(bmp, astral) && SchemaInfer.byCodePoint.lt("a", "ab"))
   }
 
   test("mixed YAML/JSON/TOML frontmatter corpus queries uniformly") {

@@ -120,6 +120,15 @@ class StatsSpec extends AnyFunSuite {
     assert(sr(1L) == sr(2L) && sr(2L) == sr(3L), "leaves are symmetric")
   }
 
+  test("PageRank on an empty edge frame returns an empty (node, pr) frame") {
+    import spark.implicits._
+    val ranks = graft.ops.PageRank.run(Seq.empty[(Long, Long)].toDF("src", "dst"), iterations = 3)
+    assert(ranks.columns.toSeq == Seq("node", "pr"))
+    assert(ranks.schema("node").dataType == org.apache.spark.sql.types.LongType)
+    assert(ranks.schema("pr").dataType == org.apache.spark.sql.types.LongType)
+    assert(ranks.collect().isEmpty)
+  }
+
   test("q_session_funnel stage timestamps are strictly ordered") {
     val rows = SparkEntry.queries("q_session_funnel")(spark, sf).collect()
     assert(rows.nonEmpty)
