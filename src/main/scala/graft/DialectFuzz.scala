@@ -336,6 +336,46 @@ object DialectFuzz {
          |$kind JOIN (SELECT $k AS kk FROM files WHERE ${predicate(r)}) d ON f.$k = d.kk$second""".stripMargin)
   }
 
+  /** DuckDB double-quoted identifiers — columns, qualified columns and
+    * aliases spelled with quote, comment and keyword text — next to the
+    * rewrites whose text scans they used to confuse (QUALIFY, brackets,
+    * FROM-first, DISTINCT ON). Aliases stay lowercase: the compare keys
+    * on column names.
+    */
+  private def quotedIdent(r: Random): Stmt = {
+    val c = pick(r, allCols.filter(_ != "path"))
+    val k = pick(r, keyCols)
+    val alias = pick(r, Seq("\"qualify\"", "\"it's\"", "\"a--b\"", "\"x/*y\"",
+      "\"from\"", "\"q\"\"d\"", "\"semi\""))
+    r.nextInt(4) match {
+      case 0 => shared(
+        s"""SELECT "path", "$c" AS $alias FROM files${whereOpt(r)} ORDER BY "path" LIMIT 40""")
+      case 1 => shared(
+        s"""SELECT f."path", f."$k" AS $alias FROM files f${whereOpt(r)}
+           |QUALIFY row_number() OVER (PARTITION BY f."$k" ORDER BY f."path") <= ${1 + r.nextInt(2)}""".stripMargin)
+      case 2 => shared(
+        s"""FROM files SELECT "path", string_split("path", '/')[${1 + r.nextInt(2)}] AS $alias
+           |WHERE "$k" IS NOT NULL ORDER BY "path" LIMIT 40""".stripMargin)
+      case _ => shared(
+        s"""SELECT DISTINCT ON ("$k") "$k" AS $alias, "path" FROM files
+           |ORDER BY "$k" NULLS LAST, "path"""".stripMargin)
+    }
+  }
+
+  /** Select-list UNNEST (one per select list): JSON-decoded tag lists
+    * (NULL on the no-frontmatter rows), split paths, and bracket lists
+    * holding NULL elements, bare and under an aggregate.
+    */
+  private def unnestSelect(r: Random): Stmt = {
+    val src = pick(r, Seq("from_json(tags, '[\"VARCHAR\"]')", "string_split(path, '/')",
+      "[lang, category]"))
+    if (r.nextBoolean())
+      shared(s"SELECT path, UNNEST($src) AS u FROM files${whereOpt(r)} ORDER BY path, u NULLS FIRST")
+    else
+      shared(s"SELECT u, COUNT(*) AS n FROM (SELECT UNNEST($src) AS u FROM files${whereOpt(r)}) " +
+        "GROUP BY u ORDER BY u NULLS FIRST")
+  }
+
   private def mathOps(r: Random): Stmt = {
     val ie = intExpr(r)
     val parts = mutable.Buffer(
@@ -1305,7 +1345,9 @@ object DialectFuzz {
     "unpivot" -> unpivot _,
     "ordered_agg" -> orderedAgg _,
     "json_ops" -> jsonOps _,
-    "fn_parity2" -> fnParity2 _)
+    "fn_parity2" -> fnParity2 _,
+    "quoted_ident" -> quotedIdent _,
+    "unnest_select" -> unnestSelect _)
 
   /** Pure generation for spec use: statement i of family `fam`. */
   def generate(fam: String, i: Int): Stmt = {

@@ -245,7 +245,10 @@ object PlanAudit {
       "graft.WindowFrameProbe times the direct frame at 1.14/11.9/201.8 s for\n" +
       "partition widths 5k/20k/80k (O(width²) confirmed) against 0.1–0.2 s for\n" +
       "both O(rows) alternatives — which diverge from the direct frame's bit\n" +
-      "pattern on ~98% of rows, the parity the 4440-case fuzz pins. No exact\n" +
+      "pattern on ~97% of rows by summation order alone (width 5k, 4 cores:\n" +
+      "39,009 subtractive and 38,886 inverted of 40,000; the 8 empty-frame\n" +
+      "rows, NULL direct against 0.0 subtractive, are counted apart), the\n" +
+      "parity the dialect fuzz pins. No exact\n" +
       "O(rows) recombination exists for left-fold suffix semantics; cost is\n" +
       "bounded by window partition width, not corpus size — a floor with\n" +
       "numbers, not prose."))

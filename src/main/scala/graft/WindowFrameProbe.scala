@@ -72,19 +72,26 @@ object WindowFrameProbe {
       // bit-parity of the alternatives against the direct frame
       def col2(e: String) = df.selectExpr("p", "k", s"$e AS s")
       val dir = col2(s"sum(x) OVER ($over ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)")
-      def mismatches(e: String): Long =
-        dir.as("a").join(col2(e).as("b"), Seq("p", "k"))
-          .filter("NOT (a.s <=> b.s) OR " +
-            "(a.s IS NOT NULL AND CAST(a.s AS STRING) <> CAST(b.s AS STRING))")
-          .count()
-      val mSub = mismatches(
+      // (bit-pattern drift, NULL-vs-value) row counts: drift is two
+      // non-NULL sums that differ in the last ulps (summation order);
+      // NULL-vs-value is each partition's last row, where the direct
+      // frame is empty (NULL) and the subtractive fold reads 0.0 — a
+      // frame-emptiness difference, not drift.
+      def mismatches(e: String): (Long, Long) = {
+        val j = dir.as("a").join(col2(e).as("b"), Seq("p", "k"))
+        val drift = j.filter("a.s IS NOT NULL AND b.s IS NOT NULL AND " +
+          "CAST(a.s AS STRING) <> CAST(b.s AS STRING)").count()
+        val nullVsValue = j.filter("(a.s IS NULL) <> (b.s IS NULL)").count()
+        (drift, nullVsValue)
+      }
+      val (dSub, nSub) = mismatches(
         s"(sum(x) OVER ($over ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) - " +
           s"sum(x) OVER ($over ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))")
-      val mInv = mismatches(
+      val (dInv, nInv) = mismatches(
         s"sum(x) OVER (PARTITION BY p ORDER BY k DESC NULLS LAST " +
           "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)")
-      println(s"[wfp] width=$w ulp-mismatch rows: subtractive=$mSub inverted=$mInv " +
-        s"of ${w.toLong * nPart}")
+      println(s"[wfp] width=$w ulp-drift rows: subtractive=$dSub inverted=$dInv; " +
+        s"NULL-vs-value rows: subtractive=$nSub inverted=$nInv of ${w.toLong * nPart}")
       val perRowNs = direct / (w.toLong * nPart) * 1e9
       println(f"[wfp] width=$w direct per-row cost $perRowNs%.0f ns (quadratic: ~width x add)")
       df.unpersist()

@@ -18,7 +18,18 @@ import org.apache.spark.sql.SparkSession
   *    Spark's `* EXCEPT (...)`, `* REPLACE (expr AS col)` → EXCEPT +
   *    re-projection, and list comprehensions `[e FOR x IN l IF p]` →
   *    `transform`/`filter` higher-order functions. (`WITH RECURSIVE`
-  *    needs no rewrite — Spark 4 parses it natively.)
+  *    and bare `SEMI`/`ANTI JOIN` need no rewrite — Spark 4.1 parses
+  *    them natively.)
+  *
+  * Every rewrite is a text rewrite over one [[Scan]] of the statement:
+  * the scanner classifies each character once (code, `'…'` literal,
+  * `"…"`/`` `…` `` identifier, comment), so keyword sites, bracket
+  * matching, top-level keyword search and splitting never look inside
+  * a quoted token or a comment, and indices found on its masked text
+  * splice into the original. A rewrite is one step — find the first
+  * site it applies to, return the whole rewritten statement — driven by
+  * [[Scan.fixpoint]], which re-scans after each step until no site is
+  * left.
   */
 object Dialect {
 
@@ -30,6 +41,11 @@ object Dialect {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction(
       "list_contains", exprs => ArrayContains(exprs(0), exprs(1)), "built-in")
+    // Select-list UNNEST(list): one output row per element, none for an
+    // empty or NULL list — Spark's explode generator exactly. The
+    // FROM-position form is rewritten by rewriteUnnest, and two
+    // select-list UNNESTs are refused there (DuckDB zips them).
+    reg.createOrReplaceTempFunction("unnest", exprs => Explode(exprs(0)), "built-in")
     // DuckDB's separator is a LITERAL; Spark's split() takes a regex —
     // literal separators are Pattern.quote'd (r12; '.' and '|' now split
     // correctly), non-literal ones keep regex behavior.
@@ -948,9 +964,9 @@ object Dialect {
       rewriteDistinctOn(rewriteReplace(rewriteBrackets(rewriteListComp(
         rewriteStructLit(rewriteStructPack(rewriteUsingSample(rewriteUnpivot(
           rewriteNullsModifier(rewriteTypeNames(rewriteDateDiffUnit(rewriteOrderedAgg(rewriteMathOps(
-            rewriteGlob(rewriteSimilarTo(rewriteSemiAnti(
+            rewriteGlob(rewriteSimilarTo(
               rewriteSeriesFrom(rewriteFromFirst(rewriteJsonOps(
-                rewriteTrailingBackslash(sql)))))))))))))))))))))))))
+                rewriteTrailingBackslash(sql))))))))))))))))))))))))
 
   /** DuckDB string literals ending in a backslash (`'\'`, `'a\'`) can
     * NEVER reach Spark's parser: its lexer consumes `\'` as an escaped
@@ -960,38 +976,24 @@ object Dialect {
     * (the lexer keeps `\x` pairs and the escaped-literals conf restores
     * them verbatim).
     */
-  private[fm] def rewriteTrailingBackslash(sql: String): String = {
-    var out = sql
-    var changed = true
-    var guard = 0
-    while (changed && guard < 64) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val lit = literalMask(msk)
-      var i = 0
-      while (i < msk.length && !changed) {
-        // closing quote of a literal whose last content char is '\'
-        if (msk.charAt(i) == '\'' && i >= 2 && lit(i - 1) &&
-          msk.charAt(i - 1) == '\\' && (i + 1 >= msk.length || !lit(i + 1))) {
-          var k = i - 1
-          while (k > 0 && msk.charAt(k - 1) == '\\' && lit(k - 1)) k -= 1
-          val run = i - k
-          // literal opens where the mask stops being content
-          var open = k - 1
-          while (open >= 0 && lit(open)) open -= 1
-          val prefix = out.substring(open, k) + "'" // '...rest' without the run
-          val tail = if (run == 1) "chr(92)" else s"repeat(chr(92), $run)"
-          val repl =
-            if (k == open + 1) s"($tail)" // the literal was ONLY backslashes
-            else s"($prefix || $tail)"
-          out = out.substring(0, open) + repl + out.substring(i + 1)
-          changed = true
-        }
-        i += 1
-      }
+  private[fm] def rewriteTrailingBackslash(sql: String): String = Scan.fixpoint(sql) { s =>
+    import s.{msk, str}
+    // closing quote of a literal whose last content char is '\'
+    (2 until msk.length).find(i => msk.charAt(i) == '\'' && str(i - 1) &&
+      msk.charAt(i - 1) == '\\' && (i + 1 >= msk.length || !str(i + 1))).map { i =>
+      var k = i - 1
+      while (k > 0 && msk.charAt(k - 1) == '\\' && str(k - 1)) k -= 1
+      val run = i - k
+      // the literal opens where the string run starts
+      var open = k - 1
+      while (open > 0 && str(open - 1)) open -= 1
+      val prefix = s.sql.substring(open, k) + "'" // '...rest' without the run
+      val tail = if (run == 1) "chr(92)" else s"repeat(chr(92), $run)"
+      val repl =
+        if (k == open + 1) s"($tail)" // the literal was ONLY backslashes
+        else s"($prefix || $tail)"
+      s.sql.substring(0, open) + repl + s.sql.substring(i + 1)
     }
-    out
   }
 
   /** DuckDB type spellings Spark's parser rejects, mapped in CAST
@@ -1014,9 +1016,6 @@ object Dialect {
     "INT8" -> "BIGINT", "SIGNED" -> "INT", "LOGICAL" -> "BOOLEAN")
 
   // ---- JSON -> / ->> operator rewrite ------------------------------------
-
-  private def isIdentCh(c: Char): Boolean =
-    Character.isLetterOrDigit(c) || c == '_' || c == '$'
 
   /** Lambda-taking functions: a `->` whose bare-identifier LHS sits at an
     * argument start of one of these is a lambda arrow, not JSON. DuckDB
@@ -1084,46 +1083,14 @@ object Dialect {
     "jaro_similarity", "jaro_winkler_similarity", "damerau_levenshtein",
     "array_length", "list_extract", "list_element", "array_extract")
 
-  /** Matching `[` for the `]` at `close`, scanning backwards over MASKED
-    * text, skipping literal contents; -1 if unbalanced.
+  /** Start of the `.`-joined identifier chain (words or quoted
+    * identifiers) whose last character is `at`; -1 if `at` isn't in one.
     */
-  private def backwardMatchBracket(
-      msk: String, lit: Array[Boolean], close: Int): Int = {
-    var depth = 0
-    var i = close
-    while (i >= 0) {
-      val c = msk.charAt(i)
-      if (!lit(i)) {
-        if (c == ']') depth += 1
-        else if (c == '[') { depth -= 1; if (depth == 0) return i }
-      }
-      i -= 1
-    }
-    -1
-  }
-
-  /** Start index of the (possibly dotted / double-quoted) identifier chain
-    * whose last character is `at`; -1 if `at` isn't in one.
-    */
-  private def identStartBack(msk: String, at: Int): Int = {
-    var l = at
-    var start = -1
-    var more = true
-    while (more && l >= 0) {
-      more = false
-      if (msk.charAt(l) == '"') {
-        var j = l - 1
-        while (j >= 0 && msk.charAt(j) != '"') j -= 1
-        if (j < 0) return -1
-        start = j
-        l = j - 1
-      } else if (isIdentCh(msk.charAt(l))) {
-        var j = l
-        while (j >= 0 && isIdentCh(msk.charAt(j))) j -= 1
-        start = j + 1
-        l = j
-      } else return -1
-      if (l >= 0 && msk.charAt(l) == '.') { l -= 1; more = true }
+  private def identChainStart(s: Scan, at: Int): Int = {
+    var start = s.identStart(at)
+    while (start > 1 && s.msk.charAt(start - 1) == '.') {
+      start = s.identStart(start - 2)
+      if (start < 0) return -1
     }
     start
   }
@@ -1131,37 +1098,36 @@ object Dialect {
   /** Start of the single operand (literal / ident chain / call / paren
     * group / bracket-suffixed base) ENDING at `at`; -1 if none.
     */
-  private def operandStartBack(msk: String, lit: Array[Boolean], at: Int): Int = {
+  private def operandStartBack(s: Scan, at: Int): Int = {
     var l = at
     var start = -1
     var consumeBase = true
     while (consumeBase && l >= 0) {
       consumeBase = false
-      val c = msk.charAt(l)
-      if (lit(l)) {
+      val c = s.msk.charAt(l)
+      if (s.str(l)) {
         var j = l
-        while (j >= 0 && lit(j)) j -= 1
+        while (j >= 0 && s.str(j)) j -= 1
         start = j + 1
       } else if (c == ')') {
-        val open = backwardMatchParen(msk, lit, l)
+        val open = s.open(l)
         if (open < 0) return -1
         start = open
-        if (open > 0 && (isIdentCh(msk.charAt(open - 1)) || msk.charAt(open - 1) == '"')) {
-          val s2 = identStartBack(msk, open - 1)
+        if (open > 0) {
+          val s2 = identChainStart(s, open - 1)
           if (s2 >= 0) start = s2
         }
       } else if (c == ']') {
         // bracket suffix: keep walking for its base (x['k'], tags[1])
-        val open = backwardMatchBracket(msk, lit, l)
+        val open = s.open(l)
         if (open <= 0) return -1
         start = open
         l = open - 1
         consumeBase = true
-      } else if (isIdentCh(c) || c == '"') {
-        val s2 = identStartBack(msk, l)
-        if (s2 < 0) return -1
-        start = s2
-      } else return -1
+      } else {
+        start = identChainStart(s, l)
+        if (start < 0) return -1
+      }
     }
     start
   }
@@ -1170,12 +1136,13 @@ object Dialect {
     * Accepts literals, signed integers, paren groups, and ident chains
     * with optional call-parens and bracket suffixes.
     */
-  private def operandEndFwd(msk: String, lit: Array[Boolean], at: Int): Int = {
+  private def operandEndFwd(s: Scan, at: Int): Int = {
+    val msk = s.msk
     if (at >= msk.length) return -1
     val c = msk.charAt(at)
-    if (lit(at)) {
+    if (s.str(at)) {
       var j = at
-      while (j < msk.length && lit(j)) j += 1
+      while (j < msk.length && s.str(j)) j += 1
       j
     } else if (c.isDigit || ((c == '-' || c == '+') &&
         at + 1 < msk.length && msk.charAt(at + 1).isDigit)) {
@@ -1183,31 +1150,24 @@ object Dialect {
       while (j < msk.length && msk.charAt(j).isDigit) j += 1
       j
     } else if (c == '(') {
-      val close = matchParen(msk, at)
+      val close = s.close(at)
       if (close < 0) -1 else close + 1
-    } else if (isIdentCh(c) || c == '"') {
+    } else if (s.identEnd(at) > at) {
       var j = at
       var done = false
       while (!done) {
-        if (j < msk.length && msk.charAt(j) == '"') {
-          var k = j + 1
-          while (k < msk.length && msk.charAt(k) != '"') k += 1
-          if (k >= msk.length) return -1
-          j = k + 1
-        } else {
-          val e = identEndAt(msk, j)
-          if (e <= j) return -1
-          j = e
-        }
+        val e = s.identEnd(j)
+        if (e <= j) return -1
+        j = e
         if (j < msk.length && msk.charAt(j) == '.') j += 1 else done = true
       }
       if (j < msk.length && msk.charAt(j) == '(') {
-        val close = matchParen(msk, j)
+        val close = s.close(j)
         if (close < 0) return -1
         j = close + 1
       }
       while (j < msk.length && msk.charAt(j) == '[') {
-        val close = matchBracket(msk, j)
+        val close = s.close(j)
         if (close < 0) return -1
         j = close + 1
       }
@@ -1252,156 +1212,116 @@ object Dialect {
     * `SELECT tags -> 0 FROM files` and `SELECT j -> path_col FROM t`
     * rewrite.
     */
-  private[fm] def rewriteJsonOps(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 256) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val lit = literalMask(msk)
-      var i = 0
-      while (i + 1 < msk.length && !changed) {
-        if (!lit(i) && msk.charAt(i) == '-' && msk.charAt(i + 1) == '>') {
-          val isText = i + 2 < msk.length && msk.charAt(i + 2) == '>'
-          val opEnd = i + (if (isText) 3 else 2)
-          var advanced = false
-          // ---- RHS ----
-          var r = opEnd
-          while (r < msk.length && msk.charAt(r).isWhitespace) r += 1
-          val literalStart = r < msk.length && (lit(r) || msk.charAt(r).isDigit ||
-            ((msk.charAt(r) == '-' || msk.charAt(r) == '+') &&
-              r + 1 < msk.length && msk.charAt(r + 1).isDigit))
-          // column-ref RHS is legal for '->' too: the lambda case is
-          // excluded by the LHS guard below (a lambda's LHS is a bare
-          // ident / ident list at an argument start of a lambdaHof).
-          // r16 (verdict r15 "what's missing" item 2): a PAREN-GROUP
-          // RHS is now admitted for '->' under the SAME guard — a
-          // paren group is also a legal lambda body, but a lambda can
-          // only occur as a function argument, and that position is
-          // exactly what the LHS guard gates (rewrite only under
-          // provably-non-lambda fns; unknown fns left alone to fail
-          // loudly). Outside argument starts `j -> (expr)` is
-          // unambiguously JSON, matching DuckDB's dynamic-path grant.
-          val identStart = r < msk.length && !lit(r) &&
-            (msk.charAt(r) == '"' ||
-              (isIdentCh(msk.charAt(r)) && !msk.charAt(r).isDigit))
-          val parenStart = r < msk.length && !lit(r) && msk.charAt(r) == '('
-          var rhsEnd =
-            if (!isText && !literalStart && !identStart && !parenStart) -1
-            else operandEndFwd(msk, lit, r)
-          // absorb tighter-binding arithmetic on the right (not || — it
-          // associates LEFT onto the completed arrow)
-          var growR = rhsEnd > 0
-          while (growR) {
-            growR = false
-            var q = rhsEnd
-            while (q < msk.length && msk.charAt(q).isWhitespace) q += 1
-            if (q < msk.length && !lit(q)) {
-              val c = msk.charAt(q)
-              val opLen =
-                if (c == '/' && q + 1 < msk.length && msk.charAt(q + 1) == '/') 2
-                else if ("+*/%^".indexOf(c) >= 0) 1
-                else if (c == '-' && !(q + 1 < msk.length && msk.charAt(q + 1) == '>')) 1
-                else 0
-              if (opLen > 0) {
-                var p = q + opLen
-                while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-                val e2 = operandEndFwd(msk, lit, p)
-                if (e2 > 0) { rhsEnd = e2; growR = true }
-              }
-            }
-          }
-          if (rhsEnd > 0) {
-            // ---- LHS ----
-            var l = i - 1
-            while (l >= 0 && msk.charAt(l).isWhitespace) l -= 1
-            val lhsEnd = l + 1
-            var lhsStart = if (l < 0) -1 else operandStartBack(msk, lit, l)
-            // absorb ||, arithmetic, and :: chains on the left
-            var growL = lhsStart >= 0
-            while (growL) {
-              growL = false
-              var q = lhsStart - 1
-              while (q >= 0 && msk.charAt(q).isWhitespace) q -= 1
-              if (q >= 0 && !lit(q)) {
-                val c = msk.charAt(q)
-                val opLen =
-                  if (c == '|' && q > 0 && msk.charAt(q - 1) == '|') 2
-                  else if (c == ':' && q > 0 && msk.charAt(q - 1) == ':') 2
-                  else if (c == '/' && q > 0 && msk.charAt(q - 1) == '/') 2
-                  else if ("+*/%^".indexOf(c) >= 0) 1
-                  else if (c == '-') 1
-                  else 0
-                if (opLen > 0) {
-                  var p = q - opLen
-                  while (p >= 0 && msk.charAt(p).isWhitespace) p -= 1
-                  val s2 = if (p < 0) -1 else operandStartBack(msk, lit, p)
-                  if (s2 >= 0) { lhsStart = s2; growL = true }
-                  else if (c == '-' || c == '+') lhsStart = q // unary sign
-                }
-              }
-            }
-            if (lhsStart >= 0) {
-              // ---- lambda guard (2-char arrow only) ----
-              var isLambda = false
-              if (!isText) {
-                val lhsText = msk.substring(lhsStart, lhsEnd)
-                val bareIdent = lhsText.nonEmpty && lhsText.forall(isIdentCh)
-                val parenIdents = lhsText.length >= 2 &&
-                  lhsText.head == '(' && lhsText.last == ')' &&
-                  lhsText.substring(1, lhsText.length - 1).split(",", -1)
-                    .forall(s => s.trim.nonEmpty && s.trim.forall(isIdentCh))
-                if (bareIdent || parenIdents) {
-                  var q = lhsStart - 1
-                  while (q >= 0 && msk.charAt(q).isWhitespace) q -= 1
-                  if (q >= 0 && !lit(q) && (msk.charAt(q) == '(' || msk.charAt(q) == ',')) {
-                    // governing '(' of the argument list this arrow starts in
-                    var open = -1
-                    if (msk.charAt(q) == '(') open = q
-                    else {
-                      var depth = 0
-                      var p = q - 1
-                      while (p >= 0 && open < 0) {
-                        val ch = msk.charAt(p)
-                        if (!lit(p)) {
-                          if (ch == ')') depth += 1
-                          else if (ch == '(') {
-                            if (depth == 0) open = p else depth -= 1
-                          }
-                        }
-                        p -= 1
-                      }
-                    }
-                    if (open >= 1 && isIdentCh(msk.charAt(open - 1))) {
-                      var s = open - 1
-                      while (s >= 0 && isIdentCh(msk.charAt(s))) s -= 1
-                      val fnName = msk.substring(s + 1, open).toLowerCase
-                      // lambda-shaped position inside a call: rewrite
-                      // ONLY under provably-non-lambda functions; an
-                      // unknown name is treated as a potential HOF so
-                      // it fails loudly instead of miscompiling
-                      // (nonLambdaFns scaladoc)
-                      if (!nonLambdaFns.contains(fnName)) isLambda = true
-                    }
-                  }
-                }
-              }
-              if (!isLambda) {
-                val fn = if (isText) "json_extract_string" else "json_extract"
-                out = out.substring(0, lhsStart) + fn + "(" +
-                  out.substring(lhsStart, lhsEnd) + ", " +
-                  out.substring(r, rhsEnd) + ")" + out.substring(rhsEnd)
-                changed = true
-              } else { i = opEnd; advanced = true }
-            } else { i = opEnd; advanced = true }
-          } else { i = opEnd; advanced = true }
-          if (!changed && !advanced) i = opEnd
-        } else i += 1
+  private[fm] def rewriteJsonOps(sql: String): String = Scan.fixpoint(sql) { s =>
+    (0 until s.length - 1).iterator
+      .filter(i => !s.lit(i) && s.msk.charAt(i) == '-' && s.msk.charAt(i + 1) == '>')
+      .flatMap(jsonArrowAt(s, _)).nextOption()
+  }
+
+  /** The statement with the arrow at `i` rewritten to its json_extract
+    * call; None when its operands are not rewritable or it sits in a
+    * lambda position.
+    */
+  private def jsonArrowAt(s: Scan, i: Int): Option[String] = {
+    val msk = s.msk
+    val n = msk.length
+    val isText = i + 2 < n && msk.charAt(i + 2) == '>'
+    val opEnd = i + (if (isText) 3 else 2)
+    // ---- RHS ----
+    val r = s.skipWs(opEnd)
+    val literalStart = r < n && (s.str(r) || msk.charAt(r).isDigit ||
+      ((msk.charAt(r) == '-' || msk.charAt(r) == '+') &&
+        r + 1 < n && msk.charAt(r + 1).isDigit))
+    // column-ref RHS is legal for '->' too: the lambda case is
+    // excluded by the LHS guard below (a lambda's LHS is a bare
+    // ident / ident list at an argument start of a lambdaHof).
+    // r16 (verdict r15 "what's missing" item 2): a PAREN-GROUP
+    // RHS is now admitted for '->' under the SAME guard — a
+    // paren group is also a legal lambda body, but a lambda can
+    // only occur as a function argument, and that position is
+    // exactly what the LHS guard gates (rewrite only under
+    // provably-non-lambda fns; unknown fns left alone to fail
+    // loudly). Outside argument starts `j -> (expr)` is
+    // unambiguously JSON, matching DuckDB's dynamic-path grant.
+    val identStart = r < n && !s.str(r) && !msk.charAt(r).isDigit && s.identEnd(r) > r
+    val parenStart = r < n && !s.lit(r) && msk.charAt(r) == '('
+    var rhsEnd =
+      if (!isText && !literalStart && !identStart && !parenStart) -1
+      else operandEndFwd(s, r)
+    // absorb tighter-binding arithmetic on the right (not || — it
+    // associates LEFT onto the completed arrow)
+    var growR = rhsEnd > 0
+    while (growR) {
+      growR = false
+      val q = s.skipWs(rhsEnd)
+      if (q < n && !s.lit(q)) {
+        val c = msk.charAt(q)
+        val opLen =
+          if (c == '/' && q + 1 < n && msk.charAt(q + 1) == '/') 2
+          else if ("+*/%^".indexOf(c) >= 0) 1
+          else if (c == '-' && !(q + 1 < n && msk.charAt(q + 1) == '>')) 1
+          else 0
+        if (opLen > 0) {
+          val e2 = operandEndFwd(s, s.skipWs(q + opLen))
+          if (e2 > 0) { rhsEnd = e2; growR = true }
+        }
       }
     }
-    out
+    if (rhsEnd <= 0) return None
+    // ---- LHS ----
+    val l = s.prevNonWs(i - 1)
+    val lhsEnd = l + 1
+    var lhsStart = if (l < 0) -1 else operandStartBack(s, l)
+    // absorb ||, arithmetic, and :: chains on the left
+    var growL = lhsStart >= 0
+    while (growL) {
+      growL = false
+      val q = s.prevNonWs(lhsStart - 1)
+      if (q >= 0 && !s.lit(q)) {
+        val c = msk.charAt(q)
+        val opLen =
+          if (c == '|' && q > 0 && msk.charAt(q - 1) == '|') 2
+          else if (c == ':' && q > 0 && msk.charAt(q - 1) == ':') 2
+          else if (c == '/' && q > 0 && msk.charAt(q - 1) == '/') 2
+          else if ("+*/%^".indexOf(c) >= 0) 1
+          else if (c == '-') 1
+          else 0
+        if (opLen > 0) {
+          val p = s.prevNonWs(q - opLen)
+          val s2 = if (p < 0) -1 else operandStartBack(s, p)
+          if (s2 >= 0) { lhsStart = s2; growL = true }
+          else if (c == '-' || c == '+') lhsStart = q // unary sign
+        }
+      }
+    }
+    if (lhsStart < 0 || (!isText && lambdaShaped(s, lhsStart, lhsEnd))) return None
+    val fn = if (isText) "json_extract_string" else "json_extract"
+    Some(s.sql.substring(0, lhsStart) + fn + "(" +
+      s.sql.substring(lhsStart, lhsEnd) + ", " +
+      s.sql.substring(r, rhsEnd) + ")" + s.sql.substring(rhsEnd))
+  }
+
+  /** A `->` whose LHS `[lhsStart, lhsEnd)` is a bare identifier or an
+    * `(a, b)` identifier list at an argument start of a call: rewritten
+    * ONLY under provably-non-lambda functions; an unknown name is
+    * treated as a potential HOF so it fails loudly instead of
+    * miscompiling ([[nonLambdaFns]] scaladoc).
+    */
+  private def lambdaShaped(s: Scan, lhsStart: Int, lhsEnd: Int): Boolean = {
+    val msk = s.msk
+    val lhsText = msk.substring(lhsStart, lhsEnd)
+    val bareIdent = lhsText.nonEmpty && lhsText.forall(Scan.wordChar)
+    val parenIdents = lhsText.length >= 2 &&
+      lhsText.head == '(' && lhsText.last == ')' &&
+      lhsText.substring(1, lhsText.length - 1).split(",", -1)
+        .forall(x => x.trim.nonEmpty && x.trim.forall(Scan.wordChar))
+    val q = s.prevNonWs(lhsStart - 1)
+    if (!(bareIdent || parenIdents) || q < 0 || s.lit(q) ||
+      (msk.charAt(q) != '(' && msk.charAt(q) != ',')) return false
+    // governing '(' of the argument list this arrow starts in
+    val open = s.enclosingParen(q + 1)
+    open >= 1 && !s.lit(open - 1) && Scan.wordChar(msk.charAt(open - 1)) &&
+      !nonLambdaFns.contains(msk.substring(s.identStart(open - 1), open).toLowerCase)
   }
 
   /** Resolve a DuckDB type token starting at `j` in a cast context:
@@ -1410,14 +1330,15 @@ object Dialect {
     * Returns (sparkSpelling, endIndex); endIndex == j when there is
     * nothing to rewrite at `j` (no alias hit and no array suffix).
     */
-  private def sparkTypeTokenAt(msk: String, u: String, j: Int): (String, Int) = {
-    val end = identEndAt(msk, j)
+  private def sparkTypeTokenAt(s: Scan, j: Int): (String, Int) = {
+    val msk = s.msk
+    val end = s.identEnd(j)
     if (end <= j) return ("", j)
-    val word = u.substring(j, end)
+    val word = s.u.substring(j, end)
     var afterBase = end
     var base =
       if (afterBase < msk.length && msk.charAt(afterBase) == '(') {
-        val close = matchParen(msk, afterBase)
+        val close = s.close(afterBase)
         if (close < 0) return ("", j)
         afterBase = close + 1
         // parameterized types (DECIMAL(p,s)) keep their args; no alias
@@ -1435,118 +1356,49 @@ object Dialect {
     (base, afterBase)
   }
 
-  private[fm] def rewriteTypeNames(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 128) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      // `expr::TYPE`
-      var i = 0
-      while (i + 1 < msk.length && !changed) {
-        if (msk.charAt(i) == ':' && msk.charAt(i + 1) == ':' && !lit(i)) {
-          var j = i + 2
-          while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-          val (spelled, tEnd) = sparkTypeTokenAt(msk, u, j)
-          if (tEnd > j && spelled != msk.substring(j, tEnd)) {
-            out = out.substring(0, j) + spelled + out.substring(tEnd)
-            changed = true
-          }
-        }
-        i += 1
-      }
-      // last top-level `AS <type>` inside CAST(...) / TRY_CAST(...)
-      if (!changed) {
-        var k = u.indexOf("CAST")
-        while (k >= 0 && !changed) {
-          val isCastKw = isKeywordAt(u, k + 3, "CAST") ||
-            (k >= 4 && u.regionMatches(k - 4, "TRY_CAST", 0, 8) &&
-              isKeywordAt(u, k + 3, "TRY_CAST"))
-          if (!lit(k) && isCastKw) {
-            var p = k + 4
-            while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-            if (p < msk.length && msk.charAt(p) == '(') {
-              val close = matchParen(msk, p)
-              if (close > p) {
-                var asAt = -1
-                var q = p + 1
-                var d = 0
-                while (q < close) {
-                  val c = msk.charAt(q)
-                  if (lit(q)) ()
-                  else if (c == '(') d += 1
-                  else if (c == ')') d -= 1
-                  else if (d == 0 && u.regionMatches(q, "AS", 0, 2) &&
-                    isKeywordAt(u, q + 1, "AS")) asAt = q
-                  q += 1
-                }
-                if (asAt > 0) {
-                  var j = asAt + 2
-                  while (j < close && msk.charAt(j).isWhitespace) j += 1
-                  val (spelled, tEnd) = sparkTypeTokenAt(msk, u, j)
-                  if (tEnd > j && spelled != msk.substring(j, tEnd)) {
-                    out = out.substring(0, j) + spelled + out.substring(tEnd)
-                    changed = true
-                  }
-                }
-              }
-            }
-          }
-          if (!changed) k = u.indexOf("CAST", k + 1)
-        }
-      }
+  private[fm] def rewriteTypeNames(sql: String): String = Scan.fixpoint(sql) { s =>
+    import s.{msk, u}
+    def retype(j: Int): Option[String] = {
+      val (spelled, tEnd) = sparkTypeTokenAt(s, j)
+      if (tEnd > j && spelled != msk.substring(j, tEnd))
+        Some(s.sql.substring(0, j) + spelled + s.sql.substring(tEnd))
+      else None
     }
-    out
+    // `expr::TYPE`
+    (0 until msk.length - 1).iterator
+      .filter(i => msk.charAt(i) == ':' && msk.charAt(i + 1) == ':' && !s.lit(i))
+      .flatMap(i => retype(s.skipWs(i + 2))).nextOption()
+      .orElse {
+        // last top-level `AS <type>` inside CAST(...) / TRY_CAST(...)
+        (s.sites("CAST") ++ s.sites("TRY_CAST")).flatMap { k =>
+          val p = s.skipWs(u.indexOf("CAST", k) + 4)
+          val close = if (p < msk.length && msk.charAt(p) == '(') s.close(p) else -1
+          val asAt = if (close > p) s.lastTopKeyword(p + 1, close, "AS") else -1
+          if (asAt > 0) retype(s.skipWs(asAt + 2)) else None
+        }.nextOption()
+      }
   }
-
   /** DuckDB spells the nulls modifier INSIDE the window function's
     * argument list — `lag(x IGNORE NULLS) OVER (…)` — where Spark wants
     * it between the call and OVER: `lag(x) IGNORE NULLS OVER (…)`.
     * Only calls directly followed by OVER rewrite; both modifiers
     * (IGNORE/RESPECT) move.
     */
-  private[fm] def rewriteNullsModifier(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 64) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = u.indexOf(" NULLS")
-      while (i >= 0 && !changed) {
-        val kw =
-          if (i >= 6 && u.regionMatches(i - 6, "IGNORE", 0, 6) && !lit(i)) "IGNORE"
-          else if (i >= 7 && u.regionMatches(i - 7, "RESPECT", 0, 7) && !lit(i)) "RESPECT"
-          else ""
-        if (kw.nonEmpty) {
-          val start = i - kw.length
-          val end = i + 6 // " NULLS"
-          // must sit at the END of an argument list whose ')' is
-          // directly followed by OVER
-          var j = end
-          while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-          if (j < msk.length && msk.charAt(j) == ')') {
-            var k = j + 1
-            while (k < msk.length && msk.charAt(k).isWhitespace) k += 1
-            if (u.regionMatches(k, "OVER", 0, 4) && isKeywordAt(u, k + 3, "OVER")) {
-              out = out.substring(0, start).stripSuffix(" ").stripSuffix(",") +
-                ") " + out.substring(start, end).trim.toUpperCase + " " +
-                out.substring(j + 1).stripPrefix(" ")
-              changed = true
-            }
-          }
-        }
-        if (!changed) i = u.indexOf(" NULLS", i + 1)
+  private[fm] def rewriteNullsModifier(sql: String): String = Scan.fixpoint(sql) { s =>
+    import s.msk
+    s.sites("NULLS").flatMap { i =>
+      val b = s.prevNonWs(i - 1)
+      Seq("IGNORE", "RESPECT").find(s.kwEndingAt(b, _)).flatMap { kw =>
+        val start = b - kw.length + 1
+        // must sit at the END of an argument list whose ')' is
+        // directly followed by OVER
+        val j = s.skipWs(i + 5)
+        if (j < msk.length && msk.charAt(j) == ')' && s.kwAt(s.skipWs(j + 1), "OVER"))
+          Some(s.sql.substring(0, start).stripSuffix(" ").stripSuffix(",") +
+            s") $kw NULLS " + s.sql.substring(j + 1).stripPrefix(" "))
+        else None
       }
-    }
-    out
+    }.nextOption()
   }
 
   /** DuckDB `struct_pack(name := expr, …)` → `named_struct('name',
@@ -1554,52 +1406,26 @@ object Dialect {
     * `identifier := value` pair rewrite; anything else passes through
     * for the parser to reject loudly.
     */
-  private[fm] def rewriteStructPack(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 32) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = u.indexOf("STRUCT_PACK")
-      while (i >= 0 && !changed) {
-        if (!lit(i) && isKeywordAt(u, i + 10, "STRUCT_PACK")) {
-          var j = i + 11
-          while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-          if (j < msk.length && msk.charAt(j) == '(') {
-            val close = matchParen(msk, j)
-            if (close > j) {
-              val body = out.substring(j + 1, close)
-              val args = splitTopLevelArgs(body).map {
-                case (s, e) => body.substring(s, e)
-              }
-              val pairs = args.map { a =>
-                val at = a.indexOf(":=")
-                if (at < 0) null
-                else {
-                  val name = a.substring(0, at).trim
-                  val value = a.substring(at + 2).trim
-                  if (name.matches("[A-Za-z_][A-Za-z0-9_]*") && value.nonEmpty)
-                    s"'$name', $value"
-                  else null
-                }
-              }
-              if (pairs.nonEmpty && !pairs.contains(null)) {
-                out = out.substring(0, i) +
-                  s"named_struct(${pairs.mkString(", ")})" +
-                  out.substring(close + 1)
-                changed = true
-              }
-            }
-          }
+  private[fm] def rewriteStructPack(sql: String): String = Scan.fixpoint(sql) { s =>
+    s.sites("STRUCT_PACK").flatMap { i =>
+      val j = s.skipWs(i + 11)
+      val close = if (j < s.length && s.msk.charAt(j) == '(') s.close(j) else -1
+      val pairs = if (close <= j) Nil else s.splitTopText(j + 1, close).map { a =>
+        val at = a.indexOf(":=")
+        if (at < 0) null
+        else {
+          val name = a.substring(0, at).trim
+          val value = a.substring(at + 2).trim
+          if (name.matches("[A-Za-z_][A-Za-z0-9_]*") && value.nonEmpty)
+            s"'$name', $value"
+          else null
         }
-        if (!changed) i = u.indexOf("STRUCT_PACK", i + 1)
       }
-    }
-    out
+      if (pairs.nonEmpty && !pairs.contains(null))
+        Some(s.sql.substring(0, i) + s"named_struct(${pairs.mkString(", ")})" +
+          s.sql.substring(close + 1))
+      else None
+    }.nextOption()
   }
 
   /** DuckDB's `generate_series` / `range` TABLE functions: a
@@ -1613,39 +1439,19 @@ object Dialect {
     * DuckDB 1.0.0 rejects lateral column references in these calls, so
     * literal-expression arguments are the whole surface.
     */
-  private[fm] def rewriteSeriesFrom(sql: String): String = {
-    var out = sql
-    var changed = true
-    var guard = 0
-    while (changed && guard < 100) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      for (fn <- Seq("GENERATE_SERIES", "RANGE") if !changed) {
-        var i = u.indexOf(fn)
-        while (i >= 0 && !changed) {
-          if (!lit(i) && isKeywordAt(u, i + fn.length - 1, fn) &&
-            fromContext(u, i - 1)) {
-            var k = i + fn.length
-            while (k < msk.length && msk.charAt(k).isWhitespace) k += 1
-            if (k < msk.length && msk.charAt(k) == '(') {
-              val close = matchParen(msk, k)
-              require(close > k, s"unbalanced parens in ${fn.toLowerCase}(…)")
-              val lower = fn.toLowerCase
-              val call = out.substring(i, close + 1)
-              out = out.substring(0, i) +
-                s"(SELECT explode($call) AS $lower)" +
-                out.substring(close + 1)
-              changed = true
-            }
-          }
-          if (!changed) i = u.indexOf(fn, i + 1)
-        }
+  private[fm] def rewriteSeriesFrom(sql: String): String = Scan.fixpoint(sql) { s =>
+    Seq("GENERATE_SERIES", "RANGE").iterator.flatMap { fn =>
+      s.sites(fn).filter(i => s.inFrom(i - 1)).flatMap { i =>
+        val k = s.skipWs(i + fn.length)
+        if (k < s.length && s.msk.charAt(k) == '(') {
+          val close = s.close(k)
+          require(close > k, s"unbalanced parens in ${fn.toLowerCase}(…)")
+          val call = s.sql.substring(i, close + 1)
+          Some(s.sql.substring(0, i) + s"(SELECT explode($call) AS ${fn.toLowerCase})" +
+            s.sql.substring(close + 1))
+        } else None
       }
-    }
-    out
+    }.nextOption()
   }
 
   /** DuckDB's FROM-first statement form: `FROM t [WHERE …]` selects `*`,
@@ -1656,143 +1462,118 @@ object Dialect {
     * CTE list — DuckDB allows `WITH c AS (…) FROM c`) and inside
     * parenthesized subqueries (`SELECT * FROM (FROM t WHERE …)`).
     */
-  private[fm] def rewriteFromFirst(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 64) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      // (a) statement start (after optional WITH clause)
-      val mainAt = mainQueryStart(msk, u, lit)
-      if (mainAt >= 0 && u.regionMatches(mainAt, "FROM", 0, 4) &&
-        isKeywordAt(u, mainAt + 3, "FROM")) {
-        out = out.substring(0, mainAt) +
-          fromFirstToSelect(out.substring(mainAt), msk.substring(mainAt))
-        changed = true
-      } else {
-        // (b) parenthesized subquery whose first token is FROM
-        var i = 0
-        while (i < msk.length && !changed) {
-          if (msk.charAt(i) == '(' && !lit(i)) {
-            var j = i + 1
-            while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-            if (u.regionMatches(j, "FROM", 0, 4) && isKeywordAt(u, j + 3, "FROM")) {
-              val close = matchParen(msk, i)
-              if (close > i) {
-                val inner = out.substring(j, close)
-                out = out.substring(0, j) +
-                  fromFirstToSelect(inner, msk.substring(j, close)) +
-                  out.substring(close)
-                changed = true
-              }
-            }
-          }
-          i += 1
-        }
+  private[fm] def rewriteFromFirst(sql: String): String = Scan.fixpoint(sql) { s =>
+    import s.msk
+    val text = s.sql
+    // (a) statement start (after optional WITH clause)
+    val mainAt = mainQueryStart(s)
+    if (mainAt >= 0 && s.kwAt(mainAt, "FROM"))
+      Some(text.substring(0, mainAt) + fromFirstToSelect(text.substring(mainAt)))
+    else {
+      // (b) parenthesized subquery whose first token is FROM
+      (0 until msk.length).iterator.filter(i => msk.charAt(i) == '(' && !s.lit(i)).flatMap { i =>
+        val j = s.skipWs(i + 1)
+        val close = if (s.kwAt(j, "FROM")) s.close(i) else -1
+        if (close > i)
+          Some(text.substring(0, j) + fromFirstToSelect(text.substring(j, close)) +
+            text.substring(close))
+        else None
+      }.nextOption().orElse {
         // (c) FROM-first as a set-operation operand:
         // `... UNION [ALL|DISTINCT] FROM t ...` — the operand region
         // runs to the next set operator / result clause within the
         // enclosing parenthesis level.
-        i = 0
-        while (i < msk.length && !changed) {
-          val op = Seq("UNION", "INTERSECT", "EXCEPT").find(o =>
-            !lit(i) && u.regionMatches(i, o, 0, o.length) &&
-              isKeywordAt(u, i + o.length - 1, o))
-          if (op.isDefined) {
-            var j = i + op.get.length
-            def skipWs(): Unit =
-              while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-            skipWs()
-            Seq("ALL", "DISTINCT").foreach { m =>
-              if (u.regionMatches(j, m, 0, m.length) &&
-                isKeywordAt(u, j + m.length - 1, m)) { j += m.length; skipWs() }
-            }
-            if (u.regionMatches(j, "FROM", 0, 4) && isKeywordAt(u, j + 3, "FROM")) {
-              val (_, regionEnd) = enclosingRegion(msk, u, lit, j)
-              val end0 = nextTopKeywordIn(msk, u, lit, j + 4, regionEnd,
-                Seq("UNION", "INTERSECT", "EXCEPT", "ORDER", "LIMIT", "OFFSET"))
-              val end = if (end0 < 0) regionEnd else end0
-              val tail = out.substring(end)
-              val sep = if (tail.nonEmpty && !tail.head.isWhitespace) " " else ""
-              out = out.substring(0, j) +
-                fromFirstToSelect(out.substring(j, end), msk.substring(j, end)) +
-                sep + tail
-              changed = true
-            }
-          }
-          i += 1
-        }
+        SetOps.flatMap(s.sites).sorted.iterator.flatMap { i =>
+          var j = s.skipWs(s.identEnd(i))
+          for (m <- Seq("ALL", "DISTINCT")) if (s.kwAt(j, m)) j = s.skipWs(j + m.length)
+          if (s.kwAt(j, "FROM")) {
+            val (_, regionEnd) = enclosingRegion(s, j)
+            val end0 = s.topKeyword(j + 4, regionEnd, SetOps ++ ResultClauses: _*)
+            val end = if (end0 < 0) regionEnd else end0
+            val tail = text.substring(end)
+            val sep = if (tail.nonEmpty && !tail.head.isWhitespace) " " else ""
+            Some(text.substring(0, j) + fromFirstToSelect(text.substring(j, end)) + sep + tail)
+          } else None
+        }.nextOption()
       }
     }
-    out
   }
 
-  /** Start index of the main query body: 0 normally, or just past a
-    * top-level `WITH [RECURSIVE] name [(cols)] AS (…) [, …]` CTE list.
-    * -1 when the shape is not recognized (pass through untouched).
+  private val SetOps = Seq("UNION", "INTERSECT", "EXCEPT")
+  private val ResultClauses = Seq("ORDER", "LIMIT", "OFFSET")
+
+  /** One member of a statement-level WITH list. `body` excludes the
+    * wrapping parens; `bodyStart`/`bodyEnd` are its offsets in the
+    * original text (start inclusive, end exclusive).
     */
-  private def mainQueryStart(msk: String, u: String, lit: Array[Boolean]): Int = {
-    var p = 0
-    while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-    if (p >= msk.length) return -1
-    if (!(u.regionMatches(p, "WITH", 0, 4) && isKeywordAt(u, p + 3, "WITH"))) return p
-    p += 4
-    def skipWs(): Unit = while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-    skipWs()
-    if (u.regionMatches(p, "RECURSIVE", 0, 9) && isKeywordAt(u, p + 8, "RECURSIVE")) {
-      p += 9; skipWs()
-    }
-    var more = true
-    while (more) {
-      // cte name
-      val nameEnd = identEndAt(msk, p)
-      if (nameEnd == p) return -1
-      p = nameEnd; skipWs()
-      // optional column list
+  private[fm] final case class CteDef(
+      name: String,
+      columns: Option[Seq[String]],
+      body: String,
+      nameStart: Int,
+      bodyStart: Int,
+      bodyEnd: Int)
+
+  /** A statement-level `WITH [RECURSIVE] name [(cols)] AS (…) [, …]`
+    * list as far as it parses: its members, whether the whole list
+    * parsed, and the index of what follows it.
+    */
+  private final case class WithList(
+      recursive: Boolean, members: Seq[CteDef], complete: Boolean, end: Int)
+
+  /** The statement's leading WITH list; None when it has none. */
+  private def withList(s: Scan): Option[WithList] = {
+    import s.msk
+    var p = s.skipWs(0)
+    if (!s.kwAt(p, "WITH")) return None
+    p = s.skipWs(p + 4)
+    val recursive = s.kwAt(p, "RECURSIVE")
+    if (recursive) p = s.skipWs(p + 9)
+    val members = Seq.newBuilder[CteDef]
+    def done(complete: Boolean) = Some(WithList(recursive, members.result(), complete, p))
+    while (true) {
+      val nameStart = p
+      val nameEnd = s.identEnd(p)
+      if (nameEnd == p) return done(false)
+      p = s.skipWs(nameEnd)
+      var cols: Option[Seq[String]] = None
       if (p < msk.length && msk.charAt(p) == '(') {
-        val c = matchParen(msk, p); if (c < 0) return -1
-        p = c + 1; skipWs()
+        val c = s.close(p)
+        if (c < 0) return done(false)
+        cols = Some(s.sql.substring(p + 1, c).split(',').map(_.trim).toSeq)
+        p = s.skipWs(c + 1)
       }
-      if (!(u.regionMatches(p, "AS", 0, 2) && isKeywordAt(u, p + 1, "AS"))) return -1
-      p += 2; skipWs()
-      if (p >= msk.length || msk.charAt(p) != '(') return -1
-      val c = matchParen(msk, p); if (c < 0) return -1
-      p = c + 1; skipWs()
-      if (p < msk.length && msk.charAt(p) == ',') { p += 1; skipWs() }
-      else more = false
+      if (!s.kwAt(p, "AS")) return done(false)
+      p = s.skipWs(p + 2)
+      if (p >= msk.length || msk.charAt(p) != '(') return done(false)
+      val c = s.close(p)
+      if (c < 0) return done(false)
+      members += CteDef(s.sql.substring(nameStart, nameEnd), cols,
+        s.sql.substring(p + 1, c), nameStart, p + 1, c)
+      p = s.skipWs(c + 1)
+      if (p < msk.length && msk.charAt(p) == ',') p = s.skipWs(p + 1)
+      else return done(true)
     }
-    p
+    None
   }
 
-  /** Desugar ONE FROM-first region (text starting at its FROM keyword).
-    * `region` is the original text, `rmsk` its comment-masked twin.
+  /** Start index of the main query body: the first token normally, or
+    * the token just past a top-level WITH list. -1 when the text is
+    * empty or the WITH list is not recognized (pass through untouched).
     */
-  private def fromFirstToSelect(region: String, rmsk: String): String = {
-    val u = rmsk.toUpperCase
-    val lit = literalMask(rmsk)
+  private def mainQueryStart(s: Scan): Int = withList(s) match {
+    case Some(w) => if (w.complete) w.end else -1
+    case None =>
+      val p = s.skipWs(0)
+      if (p >= s.length) -1 else p
+  }
+
+  /** Desugar ONE FROM-first region (text starting at its FROM keyword). */
+  private def fromFirstToSelect(region: String): String = {
+    val s = new Scan(region)
     val clauses = Seq("SELECT", "WHERE", "GROUP", "HAVING", "QUALIFY",
       "WINDOW", "ORDER", "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT")
-    def nextClause(from: Int, kws: Seq[String]): Int = {
-      var i = from
-      var depth = 0
-      while (i < rmsk.length) {
-        val c = rmsk.charAt(i)
-        if (!lit(i)) {
-          if (c == '(' || c == '[') depth += 1
-          else if (c == ')' || c == ']') depth -= 1
-          else if (depth == 0 && kws.exists(kw =>
-            u.regionMatches(i, kw, 0, kw.length) &&
-              isKeywordAt(u, i + kw.length - 1, kw))) return i
-        }
-        i += 1
-      }
-      -1
-    }
-    val setOps = Seq("UNION", "INTERSECT", "EXCEPT")
+    def nextClause(from: Int, kws: Seq[String]): Int = s.topKeyword(from, region.length, kws: _*)
     val teStart = 4 // past FROM
     val teEnd0 = nextClause(teStart, clauses)
     val teEnd = if (teEnd0 < 0) region.length else teEnd0
@@ -1801,7 +1582,7 @@ object Dialect {
     // A SELECT belonging to a set-operation operand is NOT this
     // statement's reordered projection: never search past the first
     // top-level set operator (`FROM t UNION SELECT 1` keeps `SELECT *`).
-    val setAt = nextClause(teEnd, setOps)
+    val setAt = nextClause(teEnd, SetOps)
     val selAt = nextClause(teEnd, Seq("SELECT"))
     if (selAt < 0 || (setAt >= 0 && selAt > setAt))
       return s"SELECT * FROM $te ${region.substring(teEnd)}"
@@ -1820,71 +1601,31 @@ object Dialect {
     * rewritten — a non-literal right side passes through and fails loudly
     * at parse rather than silently mis-matching.
     */
-  private[fm] def rewriteSimilarTo(sql: String): String = {
-    val sb = new StringBuilder(sql)
-    var changed = true
-    while (changed) {
-      changed = false
-      val msk = maskComments(sb.toString)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = u.indexOf("SIMILAR")
-      while (i >= 0 && !changed) {
-        if (!lit(i) && isKeywordAt(u, i + 6, "SIMILAR")) {
-          var j = i + 7
-          while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-          if (u.regionMatches(j, "TO", 0, 2) && isKeywordAt(u, j + 1, "TO")) {
-            var k = j + 2
-            while (k < msk.length && msk.charAt(k).isWhitespace) k += 1
-            if (k < msk.length && msk.charAt(k) == '\'') {
-              val close = literalEnd(msk, k)
-              if (close > k) {
-                val pat = sb.substring(k + 1, close)
-                sb.replace(i, close + 1, s"RLIKE '^(?:$pat)$$'")
-                changed = true
-              }
-            }
-          }
-        }
-        i = u.indexOf("SIMILAR", i + 1)
-      }
-    }
-    sb.toString
-  }
+  private[fm] def rewriteSimilarTo(sql: String): String =
+    rewritePatternOp(sql, "SIMILAR", "TO")(pat => s"RLIKE '^(?:$pat)$$'")
 
   /** DuckDB's `GLOB` operator: case-sensitive fnmatch-style globbing
     * (`*`, `?`, `[…]`/`[!…]` classes, backslash escapes, `.` literal) as
     * a FULL match. Spark has no glob operator — translate the literal
     * pattern to an anchored Java regex and rewrite to RLIKE.
     */
-  private[fm] def rewriteGlob(sql: String): String = {
-    val sb = new StringBuilder(sql)
-    var changed = true
-    while (changed) {
-      changed = false
-      val msk = maskComments(sb.toString)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = u.indexOf("GLOB")
-      while (i >= 0 && !changed) {
-        if (!lit(i) && isKeywordAt(u, i + 3, "GLOB")) {
-          var k = i + 4
-          while (k < msk.length && msk.charAt(k).isWhitespace) k += 1
-          if (k < msk.length && msk.charAt(k) == '\'') {
-            val close = literalEnd(msk, k)
-            if (close > k) {
-              val pat = sb.substring(k + 1, close)
-              val re = globToRegex(pat)
-              sb.replace(i, close + 1, s"RLIKE '^$re$$'")
-              changed = true
-            }
-          }
+  private[fm] def rewriteGlob(sql: String): String =
+    rewritePatternOp(sql, "GLOB")(pat => s"RLIKE '^${globToRegex(pat)}$$'")
+
+  /** Every `<kws…> '<pattern>'` operator → `rlike(pattern text)`. */
+  private def rewritePatternOp(sql: String, kws: String*)(rlike: String => String): String =
+    Scan.fixpoint(sql) { s =>
+      s.sites(kws.head).flatMap { i =>
+        val k = kws.tail.foldLeft(s.skipWs(i + kws.head.length)) { (k, kw) =>
+          if (k >= 0 && s.kwAt(k, kw)) s.skipWs(k + kw.length) else -1
         }
-        i = u.indexOf("GLOB", i + 1)
-      }
+        val close = if (k >= 0 && k < s.length && s.str(k)) s.tokenEnd(k) else -1
+        if (close > k)
+          Some(s.sql.substring(0, i) + rlike(s.sql.substring(k + 1, close)) +
+            s.sql.substring(close + 1))
+        else None
+      }.nextOption()
     }
-    sb.toString
-  }
 
   private[fm] def globToRegex(glob: String): String = {
     val sb = new StringBuilder
@@ -1930,28 +1671,8 @@ object Dialect {
     * parens); empty statements are dropped.
     */
   def splitStatements(sql: String): Seq[String] = {
-    val msk = maskComments(sql)
-    val lit = literalMask(msk)
-    val out = Seq.newBuilder[String]
-    var start = 0
-    var depth = 0
-    var i = 0
-    while (i < msk.length) {
-      val c = msk.charAt(i)
-      if (!lit(i)) {
-        if (c == '(' || c == '[') depth += 1
-        else if (c == ')' || c == ']') depth -= 1
-        else if (c == ';' && depth == 0) {
-          val s = sql.substring(start, i)
-          if (s.trim.nonEmpty) out += s
-          start = i + 1
-        }
-      }
-      i += 1
-    }
-    val last = sql.substring(start)
-    if (last.trim.nonEmpty) out += last
-    out.result()
+    val s = new Scan(sql)
+    s.splitTopText(0, s.length, ';').filter(_.trim.nonEmpty)
   }
 
   /** Session-scoped table DDL (the DuckDB connection model: a script
@@ -1991,29 +1712,23 @@ object Dialect {
     * supported (unsupported shapes return None and fail loudly at parse).
     */
   def parseCreateMacro(stmt: String): Option[Macro] = {
-    val msk = maskComments(stmt)
-    val u = msk.toUpperCase
+    val s = new Scan(stmt)
+    import s.msk
     var p = 0
-    def skipWs(): Unit = while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
     def kw(k: String): Boolean = {
-      skipWs()
-      if (u.regionMatches(p, k, 0, k.length) && isKeywordAt(u, p + k.length - 1, k)) {
-        p += k.length; true
-      } else false
+      p = s.skipWs(p)
+      if (s.kwAt(p, k)) { p += k.length; true } else false
     }
     if (!kw("CREATE")) return None
-    val save = p
     if (kw("OR") && !kw("REPLACE")) return None
-    if (p == save) () // no OR REPLACE
     if (!kw("MACRO") && !kw("FUNCTION")) return None
-    skipWs()
-    val nameEnd = identEndAt(msk, p)
+    p = s.skipWs(p)
+    val nameEnd = s.identEnd(p)
     if (nameEnd == p) return None
     val name = stmt.substring(p, nameEnd)
-    p = nameEnd
-    skipWs()
+    p = s.skipWs(nameEnd)
     if (p >= msk.length || msk.charAt(p) != '(') return None
-    val close = matchParen(msk, p)
+    val close = s.close(p)
     if (close < 0) return None
     val inner = stmt.substring(p + 1, close).trim
     val params =
@@ -2023,10 +1738,9 @@ object Dialect {
       !x.forall(c => Character.isLetterOrDigit(c) || c == '_'))) return None
     p = close + 1
     if (!kw("AS")) return None
-    val save2 = p
-    val isTable = kw("TABLE")
-    if (!isTable) p = save2
-    skipWs()
+    val save = p
+    if (!kw("TABLE")) p = save
+    val isTable = p != save
     val body = stmt.substring(p).trim.stripSuffix(";").trim
     if (body.isEmpty) None
     else Some(Macro(name, params, body, isTable))
@@ -2040,67 +1754,42 @@ object Dialect {
   def expandMacros(sql: String, macros: Map[String, Macro]): String = {
     if (macros.isEmpty) return sql
     val byUpper = macros.map { case (k, v) => k.toUpperCase -> v }
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 32) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = 0
-      while (i < msk.length && !changed) {
-        byUpper.foreach { case (un, m) =>
-          if (!changed && !lit(i) && u.regionMatches(i, un, 0, un.length) &&
-            isKeywordAt(u, i + un.length - 1, un)) {
-            // not a qualified reference (a.name) and not its own definition
-            var b = i - 1
-            while (b >= 0 && Character.isWhitespace(msk.charAt(b))) b -= 1
-            val qualified = b >= 0 && msk.charAt(b) == '.'
-            if (!qualified) {
-              var j = i + un.length
-              while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-              if (j < msk.length && msk.charAt(j) == '(') {
-                val close = matchParen(msk, j)
-                if (close > j) {
-                  val args =
-                    if (msk.substring(j + 1, close).trim.isEmpty) Vector.empty
-                    else splitTopLevelArgs(msk.substring(j + 1, close))
-                      .map { case (s, e) => out.substring(j + 1 + s, j + 1 + e) }
-                  if (args.length == m.params.length) {
-                    var body = m.body
-                    m.params.zip(args).foreach { case (param, arg) =>
-                      body = substituteParam(body, param, s"(${arg.trim})")
-                    }
-                    out = out.substring(0, i) + s"($body)" + out.substring(close + 1)
-                    changed = true
-                  }
-                }
-              }
+    Scan.fixpoint(sql) { s =>
+      import s.msk
+      (0 until msk.length).iterator.flatMap { i =>
+        byUpper.iterator.filter { case (un, _) => s.kwAt(i, un) }.flatMap { case (un, m) =>
+          // not a qualified reference (a.name) and not its own definition
+          val b = s.prevNonWs(i - 1)
+          val j = s.skipWs(i + un.length)
+          val close =
+            if (!(b >= 0 && msk.charAt(b) == '.') && j < msk.length && msk.charAt(j) == '(')
+              s.close(j)
+            else -1
+          val args =
+            if (close <= j) null
+            else if (msk.substring(j + 1, close).trim.isEmpty) Nil
+            else s.splitTopText(j + 1, close)
+          if (args != null && args.length == m.params.length) {
+            val body = m.params.zip(args).foldLeft(m.body) { case (b, (param, arg)) =>
+              substituteParam(b, param, s"(${arg.trim})")
             }
-          }
+            Some(s.sql.substring(0, i) + s"($body)" + s.sql.substring(close + 1))
+          } else None
         }
-        i += 1
-      }
+      }.nextOption()
     }
-    out
   }
 
   /** Replace keyword-bounded occurrences of `param` (outside literals)
     * in a macro body with `repl`.
     */
   private def substituteParam(body: String, param: String, repl: String): String = {
-    val msk = maskComments(body)
-    val u = msk.toUpperCase
-    val lit = literalMask(msk)
+    val s = new Scan(body)
     val up = param.toUpperCase
     val sb = new StringBuilder
     var i = 0
     while (i < body.length) {
-      if (!lit(i) && u.regionMatches(i, up, 0, up.length) &&
-        isKeywordAt(u, i + up.length - 1, up) &&
-        !(i > 0 && msk.charAt(i - 1) == '.')) {
+      if (s.kwAt(i, up) && !(i > 0 && s.msk.charAt(i - 1) == '.')) {
         sb.append(repl)
         i += up.length
       } else {
@@ -2109,21 +1798,6 @@ object Dialect {
       }
     }
     sb.toString
-  }
-
-  /** Index of the quote CLOSING the string literal opened at `open`
-    * (doubling-aware: `''` inside is an escaped quote, not an end); -1 if
-    * unterminated.
-    */
-  private[fm] def literalEnd(msk: String, open: Int): Int = {
-    var i = open + 1
-    while (i < msk.length) {
-      if (msk.charAt(i) == '\'') {
-        if (i + 1 < msk.length && msk.charAt(i + 1) == '\'') i += 2
-        else return i
-      } else i += 1
-    }
-    -1
   }
 
   /** DuckDB arithmetic operators Spark lacks: `a // b` integer division
@@ -2135,141 +1809,92 @@ object Dialect {
     * through untouched.
     */
   private[fm] def rewriteMathOps(sql: String): String = {
-    var out = rewritePower(sql)
     // DuckDB's prefix abs operator, parenthesized form only: `@(x)` →
     // `abs(x)`. The bare `@x` spelling stays untouched for Spark's
     // parser to reject loudly (no silent guess at operand extent).
-    var changed = true
-    while (changed) {
-      changed = false
-      val msk = maskComments(out)
-      val lit = literalMask(msk)
-      var i = 0
-      while (i < msk.length && !changed) {
-        if (msk.charAt(i) == '@' && !lit(i)) {
-          var j = i + 1
-          while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-          if (j < msk.length && msk.charAt(j) == '(') {
-            out = out.substring(0, i) + "abs" + out.substring(i + 1)
-            changed = true
-          }
+    val withAbs = Scan.fixpoint(rewritePower(sql)) { s =>
+      (0 until s.length).find { i =>
+        s.msk.charAt(i) == '@' && !s.lit(i) && {
+          val j = s.skipWs(i + 1)
+          j < s.length && s.msk.charAt(j) == '('
         }
-        i += 1
-      }
+      }.map(i => s.sql.substring(0, i) + "abs" + s.sql.substring(i + 1))
     }
     // `//` → DIV: same token length not needed; straight splice.
-    changed = true
-    while (changed) {
-      changed = false
-      val msk = maskComments(out)
-      val lit = literalMask(msk)
-      var i = 0
-      while (i + 1 < msk.length && !changed) {
-        if (msk.charAt(i) == '/' && msk.charAt(i + 1) == '/' && !lit(i)) {
-          out = out.substring(0, i) + " DIV " + out.substring(i + 2)
-          changed = true
-        }
-        i += 1
-      }
+    Scan.fixpoint(withAbs) { s =>
+      (0 until s.length - 1).find(i =>
+        s.msk.charAt(i) == '/' && s.msk.charAt(i + 1) == '/' && !s.lit(i))
+        .map(i => s.sql.substring(0, i) + " DIV " + s.sql.substring(i + 2))
     }
-    out
   }
 
-  private def rewritePower(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 64) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = 0
-      while (i < msk.length && !changed) {
-        val c = msk.charAt(i)
-        val isPow = !lit(i) &&
-          ((c == '*' && i + 1 < msk.length && msk.charAt(i + 1) == '*') || c == '^')
-        if (isPow) {
-          val opEnd = if (c == '^') i + 1 else i + 2
-          // left operand: base segment, absorbing a unary sign in prefix
-          // position (DuckDB: -2 ** 2 = 4, the sign binds tighter)
-          var j = i - 1
-          while (j >= 0 && Character.isWhitespace(msk.charAt(j))) j -= 1
-          var ls = if (j < 0) -2 else baseStartAt(msk, u, lit, j)
-          // baseStartAt refuses bare numbers (-1, bracket disambiguation);
-          // for power a number IS a valid operand — recover it here.
-          if (ls < 0 && j >= 0 && !lit(j)) {
-            var p = j
-            while (p >= 0 && (Character.isLetterOrDigit(msk.charAt(p)) ||
-              msk.charAt(p) == '.' || msk.charAt(p) == '_')) p -= 1
-            if (p < j) ls = p + 1
-          }
-          if (ls >= 0) {
-            // unary sign absorption
-            var s = ls
-            var q = ls - 1
-            while (q >= 0 && Character.isWhitespace(msk.charAt(q))) q -= 1
-            if (q >= 0 && (msk.charAt(q) == '-' || msk.charAt(q) == '+')) {
-              var r = q - 1
-              while (r >= 0 && Character.isWhitespace(msk.charAt(r))) r -= 1
-              // binary iff the previous token can END an operand: a close
-              // paren/bracket, a literal, or an identifier that is NOT a
-              // clause keyword (SELECT -2 ** 2 is unary; x -2 ** 2 binary)
-              val binary = r >= 0 && {
-                val c2 = msk.charAt(r)
-                if (c2 == ')' || c2 == ']' || c2 == '`' || lit(r)) true
-                else if (Character.isLetterOrDigit(c2) || c2 == '_') {
-                  var p2 = r
-                  while (p2 >= 0 && (Character.isLetterOrDigit(msk.charAt(p2)) ||
-                    msk.charAt(p2) == '_')) p2 -= 1
-                  !NonBaseKeywords(u.substring(p2 + 1, r + 1))
-                } else false
-              }
-              if (!binary) s = q
-            }
-            val re = forwardSegEnd(msk, lit, opEnd)
-            if (re > opEnd) {
-              val lhs = out.substring(s, j + 1)
-              val rhs = out.substring(opEnd, re).trim
-              out = out.substring(0, s) + s"power($lhs, $rhs)" + out.substring(re)
-              changed = true
-            }
-          }
-        }
-        i += 1
+  private def rewritePower(sql: String): String = Scan.fixpoint(sql) { s =>
+    import s.{msk, u}
+    (0 until msk.length).iterator.filter { i =>
+      val c = msk.charAt(i)
+      !s.lit(i) && ((c == '*' && i + 1 < msk.length && msk.charAt(i + 1) == '*') || c == '^')
+    }.flatMap { i =>
+      val opEnd = if (msk.charAt(i) == '^') i + 1 else i + 2
+      // left operand: base segment, absorbing a unary sign in prefix
+      // position (DuckDB: -2 ** 2 = 4, the sign binds tighter)
+      val j = s.prevNonWs(i - 1)
+      var ls = if (j < 0) -2 else baseStartAt(s, j)
+      // baseStartAt refuses bare numbers (-1, bracket disambiguation);
+      // for power a number IS a valid operand — recover it here.
+      if (ls < 0 && j >= 0 && !s.lit(j)) {
+        var p = j
+        while (p >= 0 && (Scan.wordChar(msk.charAt(p)) || msk.charAt(p) == '.')) p -= 1
+        if (p < j) ls = p + 1
       }
-    }
-    out
+      if (ls < 0) None
+      else {
+        // unary sign absorption
+        var st = ls
+        val q = s.prevNonWs(ls - 1)
+        if (q >= 0 && (msk.charAt(q) == '-' || msk.charAt(q) == '+')) {
+          val r = s.prevNonWs(q - 1)
+          // binary iff the previous token can END an operand: a close
+          // paren/bracket, a literal, or an identifier that is NOT a
+          // clause keyword (SELECT -2 ** 2 is unary; x -2 ** 2 binary)
+          val binary = r >= 0 && {
+            val c2 = msk.charAt(r)
+            if (c2 == ')' || c2 == ']' || s.lit(r)) true
+            else if (Scan.wordChar(c2)) !NonBaseKeywords(u.substring(s.identStart(r), r + 1))
+            else false
+          }
+          if (!binary) st = q
+        }
+        val re = forwardSegEnd(s, opEnd)
+        if (re > opEnd) {
+          val lhs = s.sql.substring(st, j + 1)
+          val rhs = s.sql.substring(opEnd, re).trim
+          Some(s.sql.substring(0, st) + s"power($lhs, $rhs)" + s.sql.substring(re))
+        } else None
+      }
+    }.nextOption()
   }
 
   /** End (exclusive) of the operand starting at/after `from`: optional
     * unary sign, then a number / identifier chain / function call /
     * parenthesized expression, with `.`-joined tails. -1 if unsupported.
     */
-  private def forwardSegEnd(msk: String, lit: Array[Boolean], from: Int): Int = {
-    var i = from
-    while (i < msk.length && msk.charAt(i).isWhitespace) i += 1
+  private def forwardSegEnd(s: Scan, from: Int): Int = {
+    val msk = s.msk
+    var i = s.skipWs(from)
     if (i >= msk.length) return -1
-    if (msk.charAt(i) == '-' || msk.charAt(i) == '+') {
-      i += 1
-      while (i < msk.length && msk.charAt(i).isWhitespace) i += 1
-    }
+    if (msk.charAt(i) == '-' || msk.charAt(i) == '+') i = s.skipWs(i + 1)
     if (i >= msk.length) return -1
-    def isIdent(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
     val c = msk.charAt(i)
     if (c == '(') {
-      val close = matchParen(msk, i)
+      val close = s.close(i)
       if (close < 0) -1 else close + 1
-    } else if (isIdent(c)) {
+    } else if (!s.lit(i) && Scan.wordChar(c)) {
       var e = i
-      while (e < msk.length && (isIdent(msk.charAt(e)) || msk.charAt(e) == '.')) e += 1
+      while (e < msk.length && (Scan.wordChar(msk.charAt(e)) || msk.charAt(e) == '.')) e += 1
       // function call?
-      var w = e
-      while (w < msk.length && msk.charAt(w).isWhitespace) w += 1
-      if (w < msk.length && msk.charAt(w) == '(' &&
-        !Character.isDigit(msk.charAt(i))) {
-        val close = matchParen(msk, w)
+      val w = s.skipWs(e)
+      if (w < msk.length && msk.charAt(w) == '(' && !Character.isDigit(c)) {
+        val close = s.close(w)
         if (close < 0) -1 else close + 1
       } else e
     } else -1
@@ -2279,38 +1904,21 @@ object Dialect {
     * Spark's `string_agg(x, sep) WITHIN GROUP (ORDER BY k)` (same
     * function since 4.0; `listagg` gets the same treatment).
     */
-  private[fm] def rewriteOrderedAgg(sql: String): String = {
-    var out = sql
-    var changed = true
-    while (changed) {
-      changed = false
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      for (fn <- Seq("STRING_AGG", "LISTAGG", "GROUP_CONCAT") if !changed) {
-        var i = u.indexOf(fn)
-        while (i >= 0 && !changed) {
-          if (!lit(i) && isKeywordAt(u, i + fn.length - 1, fn)) {
-            var j = i + fn.length
-            while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-            if (j < msk.length && msk.charAt(j) == '(') {
-              val close = matchParen(msk, j)
-              val ob = if (close > j)
-                findTopKeyword(u, msk, lit, j + 1, close, "ORDER") else -1
-              if (ob >= 0) {
-                val orderTail = out.substring(ob, close).trim
-                val args = out.substring(j + 1, ob).trim
-                out = out.substring(0, j) +
-                  s"($args) WITHIN GROUP ($orderTail)" + out.substring(close + 1)
-                changed = true
-              }
-            }
-          }
-          i = u.indexOf(fn, i + 1)
+  private[fm] def rewriteOrderedAgg(sql: String): String = Scan.fixpoint(sql) { s =>
+    Seq("STRING_AGG", "LISTAGG", "GROUP_CONCAT").iterator.flatMap { fn =>
+      s.sites(fn).flatMap { i =>
+        val j = s.skipWs(i + fn.length)
+        val close = if (j < s.length && s.msk.charAt(j) == '(') s.close(j) else -1
+        val ob = if (close > j) s.topKeyword(j + 1, close, "ORDER") else -1
+        if (ob < 0) None
+        else {
+          val orderTail = s.sql.substring(ob, close).trim
+          val args = s.sql.substring(j + 1, ob).trim
+          Some(s.sql.substring(0, j) + s"($args) WITHIN GROUP ($orderTail)" +
+            s.sql.substring(close + 1))
         }
       }
-    }
-    out
+    }.nextOption()
   }
 
   /** DuckDB `date_diff('day', a, b)` / `datediff(…)` count BOUNDARY
@@ -2323,81 +1931,19 @@ object Dialect {
     * counting — truncate-both-then-diff for boundaries, plain
     * timestampdiff for complete units.
     */
-  private[fm] def rewriteDateDiffUnit(sql: String): String = {
-    var out = sql
-    val renames = Seq(
+  private[fm] def rewriteDateDiffUnit(sql: String): String = Scan.fixpoint(sql) { s =>
+    Seq(
       "DATE_DIFF" -> "graft_date_diff", "DATEDIFF" -> "graft_date_diff",
-      "DATE_SUB" -> "graft_date_part_sub", "DATESUB" -> "graft_date_part_sub")
-    for ((name, target) <- renames) {
-      var changed = true
-      while (changed) {
-        changed = false
-        val msk = maskComments(out)
-        val u = msk.toUpperCase
-        val lit = literalMask(msk)
-        var i = u.indexOf(name)
-        while (i >= 0 && !changed) {
-          if (!lit(i) && isKeywordAt(u, i + name.length - 1, name)) {
-            var j = i + name.length
-            while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-            if (j < msk.length && msk.charAt(j) == '(') {
-              var k = j + 1
-              while (k < msk.length && msk.charAt(k).isWhitespace) k += 1
-              // only the quoted-unit form is DuckDB's part-counting call;
-              // e.g. Spark-style date_sub(date, n) passes through
-              if (k < msk.length && msk.charAt(k) == '\'') {
-                out = out.substring(0, i) + target + out.substring(i + name.length)
-                changed = true
-              }
-            }
-          }
-          if (!changed) i = u.indexOf(name, i + 1)
-        }
-      }
-    }
-    out
-  }
-
-  /** DuckDB's bare `SEMI JOIN` / `ANTI JOIN` keywords → Spark's
-    * `LEFT SEMI JOIN` / `LEFT ANTI JOIN` (identical semantics: DuckDB's
-    * unprefixed forms are left variants). Already-prefixed `LEFT SEMI`
-    * passes through (Spark-native); `RIGHT SEMI`/`RIGHT ANTI` have no
-    * Spark SQL spelling and pass through to fail loudly at parse rather
-    * than silently flipping sides.
-    */
-  private[fm] def rewriteSemiAnti(sql: String): String = {
-    var out = sql
-    var changed = true
-    while (changed) {
-      changed = false
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      for (kw <- Seq("SEMI", "ANTI") if !changed) {
-        var i = u.indexOf(kw)
-        while (i >= 0 && !changed) {
-          if (!lit(i) && isKeywordAt(u, i + kw.length - 1, kw)) {
-            var j = i + kw.length
-            while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-            if (u.regionMatches(j, "JOIN", 0, 4) && isKeywordAt(u, j + 3, "JOIN")) {
-              // previous word must not be LEFT or RIGHT
-              var b = i - 1
-              while (b >= 0 && Character.isWhitespace(msk.charAt(b))) b -= 1
-              var ws = b
-              while (ws >= 0 && (Character.isLetterOrDigit(msk.charAt(ws)) ||
-                msk.charAt(ws) == '_')) ws -= 1
-              val prev = u.substring(ws + 1, b + 1)
-              if (prev != "LEFT" && prev != "RIGHT") {
-                out = out.substring(0, i) + "LEFT " + out.substring(i)
-                changed = true
-              }
-            }
-          }
-          i = u.indexOf(kw, i + 1)
-        }
-      }
-    }
-    out
+      "DATE_SUB" -> "graft_date_part_sub", "DATESUB" -> "graft_date_part_sub"
+    ).iterator.flatMap { case (name, target) =>
+      // only the quoted-unit form is DuckDB's part-counting call;
+      // e.g. Spark-style date_sub(date, n) passes through
+      s.sites(name).find { i =>
+        val j = s.skipWs(i + name.length)
+        val k = s.skipWs(j + 1)
+        j < s.length && s.msk.charAt(j) == '(' && k < s.length && s.str(k)
+      }.map(i => s.sql.substring(0, i) + target + s.sql.substring(i + name.length))
+    }.nextOption()
   }
 
   /** DuckDB's `UNION [ALL] BY NAME`: columns are matched by name, the
@@ -2410,74 +1956,47 @@ object Dialect {
     * INTERSECT/EXCEPT BY NAME are not rewritten (pass through to fail
     * loudly rather than guess shared-column semantics).
     */
-  def rewriteUnionByName(sql: String, columnsOf: String => Seq[String]): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 32) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      def skipWs(k0: Int): Int = {
-        var k = k0
-        while (k < msk.length && msk.charAt(k).isWhitespace) k += 1
-        k
-      }
-      var i = 0
-      while (i < msk.length && !changed) {
-        if (!lit(i) && u.regionMatches(i, "UNION", 0, 5) &&
-          isKeywordAt(u, i + 4, "UNION")) {
-          var j = skipWs(i + 5)
-          var all = false
-          if (u.regionMatches(j, "ALL", 0, 3) && isKeywordAt(u, j + 2, "ALL")) {
-            all = true; j = skipWs(j + 3)
-          } else if (u.regionMatches(j, "DISTINCT", 0, 8) &&
-            isKeywordAt(u, j + 7, "DISTINCT")) {
-            j = skipWs(j + 8)
-          }
-          if (u.regionMatches(j, "BY", 0, 2) && isKeywordAt(u, j + 1, "BY")) {
-            val k = skipWs(j + 2)
-            if (u.regionMatches(k, "NAME", 0, 4) && isKeywordAt(u, k + 3, "NAME")) {
-              // region: innermost paren enclosing i, else the statement
-              // body (past any WITH prefix)
-              val (regionStart, regionEnd) = enclosingRegion(msk, u, lit, i)
-              // Probe prefix: only the COMPLETE CTE definitions that end
-              // before this region. When the BY NAME being rewritten sits
-              // INSIDE a CTE body, the full WITH prefix would carry the
-              // unrewritten BY NAME into the probe and fail analysis —
-              // earlier CTEs are exactly what the operands can reference.
-              val withPrefix = cteprefixBefore(out, msk, u, lit, regionStart)
-              val left = out.substring(regionStart, i).trim
-              val rEnd0 = nextTopKeywordIn(msk, u, lit, k + 4, regionEnd,
-                Seq("UNION", "INTERSECT", "EXCEPT", "ORDER", "LIMIT", "OFFSET"))
-              val rightEnd = if (rEnd0 < 0) regionEnd else rEnd0
-              val right = out.substring(k + 4, rightEnd).trim
-              def probe(frag: String): Seq[String] = columnsOf(
-                s"${withPrefix}SELECT * FROM (\n$frag\n) __graft_ubn_probe LIMIT 0")
-              val lc = probe(left)
-              val rc = probe(right)
-              val merged = lc ++ rc.filterNot(c => lc.exists(_.equalsIgnoreCase(c)))
-              def sel(cols: Seq[String]): String = merged.map { m =>
-                if (cols.exists(_.equalsIgnoreCase(m))) s"`$m`"
-                else s"NULL AS `$m`"
-              }.mkString(", ")
-              val op = if (all) "UNION ALL" else "UNION"
-              val repl = s"SELECT ${sel(lc)} FROM ($left) __graft_ubn_l $op " +
-                s"SELECT ${sel(rc)} FROM ($right) __graft_ubn_r"
-              val tail = out.substring(rightEnd)
-              val sep = if (tail.nonEmpty && !tail.head.isWhitespace) " " else ""
-              out = out.substring(0, regionStart) + repl + sep + tail
-              changed = true
-            }
-          }
+  def rewriteUnionByName(sql: String, columnsOf: String => Seq[String]): String =
+    Scan.fixpoint(sql) { s =>
+      s.sites("UNION").flatMap { i =>
+        var j = s.skipWs(i + 5)
+        var all = false
+        if (s.kwAt(j, "ALL")) { all = true; j = s.skipWs(j + 3) }
+        else if (s.kwAt(j, "DISTINCT")) j = s.skipWs(j + 8)
+        val k = if (s.kwAt(j, "BY")) s.skipWs(j + 2) else -1
+        if (k < 0 || !s.kwAt(k, "NAME")) None
+        else {
+          // region: innermost paren enclosing i, else the statement
+          // body (past any WITH prefix)
+          val (regionStart, regionEnd) = enclosingRegion(s, i)
+          // Probe prefix: only the COMPLETE CTE definitions that end
+          // before this region. When the BY NAME being rewritten sits
+          // INSIDE a CTE body, the full WITH prefix would carry the
+          // unrewritten BY NAME into the probe and fail analysis —
+          // earlier CTEs are exactly what the operands can reference.
+          val withPrefix = ctePrefixBefore(s, regionStart)
+          val left = s.sql.substring(regionStart, i).trim
+          val rEnd0 = s.topKeyword(k + 4, regionEnd, SetOps ++ ResultClauses: _*)
+          val rightEnd = if (rEnd0 < 0) regionEnd else rEnd0
+          val right = s.sql.substring(k + 4, rightEnd).trim
+          def probe(frag: String): Seq[String] = columnsOf(
+            s"${withPrefix}SELECT * FROM (\n$frag\n) __graft_ubn_probe LIMIT 0")
+          val lc = probe(left)
+          val rc = probe(right)
+          val merged = lc ++ rc.filterNot(c => lc.exists(_.equalsIgnoreCase(c)))
+          def sel(cols: Seq[String]): String = merged.map { m =>
+            if (cols.exists(_.equalsIgnoreCase(m))) Scan.tick(m)
+            else s"NULL AS ${Scan.tick(m)}"
+          }.mkString(", ")
+          val op = if (all) "UNION ALL" else "UNION"
+          val repl = s"SELECT ${sel(lc)} FROM ($left) __graft_ubn_l $op " +
+            s"SELECT ${sel(rc)} FROM ($right) __graft_ubn_r"
+          val tail = s.sql.substring(rightEnd)
+          val sep = if (tail.nonEmpty && !tail.head.isWhitespace) " " else ""
+          Some(s.sql.substring(0, regionStart) + repl + sep + tail)
         }
-        i += 1
-      }
+      }.nextOption()
     }
-    out
-  }
 
   /** A parsed `COPY <source> TO '<path>' [(options)]` statement:
     * `sourceSql` is the query to materialize (a bare table name becomes
@@ -2492,38 +2011,33 @@ object Dialect {
     * pass-through fails loudly at parse).
     */
   def parseCopyTo(stmt: String): Option[CopyTo] = {
-    val msk = maskComments(stmt)
-    val u = msk.toUpperCase
-    var p = 0
-    def skipWs(): Unit =
-      while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-    skipWs()
-    if (!(u.regionMatches(p, "COPY", 0, 4) && isKeywordAt(u, p + 3, "COPY")))
-      return None
-    p += 4; skipWs()
+    val s = new Scan(stmt)
+    import s.msk
+    var p = s.skipWs(0)
+    if (!s.kwAt(p, "COPY")) return None
+    p = s.skipWs(p + 4)
     val source: String =
       if (p < msk.length && msk.charAt(p) == '(') {
-        val close = matchParen(msk, p)
+        val close = s.close(p)
         if (close < 0) return None
         val q = stmt.substring(p + 1, close); p = close + 1; q
       } else {
-        val e = identEndAt(msk, p)
+        val e = s.identEnd(p)
         if (e == p) return None
         val name = stmt.substring(p, e); p = e; s"SELECT * FROM $name"
       }
-    skipWs()
-    if (!(u.regionMatches(p, "TO", 0, 2) && isKeywordAt(u, p + 1, "TO")))
-      return None
-    p += 2; skipWs()
-    if (p >= msk.length || msk.charAt(p) != '\'') return None
-    val close = literalEnd(msk, p)
+    p = s.skipWs(p)
+    if (!s.kwAt(p, "TO")) return None
+    p = s.skipWs(p + 2)
+    if (p >= msk.length || !s.str(p)) return None
+    val close = s.tokenEnd(p)
     if (close < 0) return None
     val path = stmt.substring(p + 1, close).replace("''", "'")
-    p = close + 1; skipWs()
+    p = s.skipWs(close + 1)
     var format = ""
     var header: Option[Boolean] = None
     if (p < msk.length && msk.charAt(p) == '(') {
-      val c2 = matchParen(msk, p)
+      val c2 = s.close(p)
       if (c2 < 0) return None
       // Every option must be recognized — an option this engine cannot
       // honor (DELIMITER, COMPRESSION, ...) would silently produce a
@@ -2598,16 +2112,11 @@ object Dialect {
     * (which must run after this).
     */
   private[fm] def rewriteShow(sql: String, tables: Seq[String]): String = {
-    val msk = maskComments(sql)
-    val u = msk.toUpperCase
-    var p = 0
-    while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-    if (!(u.regionMatches(p, "SHOW", 0, 4) && isKeywordAt(u, p + 3, "SHOW")))
-      return sql
-    var q = p + 4
-    while (q < msk.length && msk.charAt(q).isWhitespace) q += 1
-    if (u.regionMatches(q, "TABLES", 0, 6) && isKeywordAt(u, q + 5, "TABLES") &&
-      sql.substring(q + 6).trim.stripSuffix(";").trim.isEmpty) {
+    val s = new Scan(sql)
+    val p = s.skipWs(0)
+    if (!s.kwAt(p, "SHOW")) return sql
+    val q = s.skipWs(p + 4)
+    if (s.kwAt(q, "TABLES") && sql.substring(q + 6).trim.stripSuffix(";").trim.isEmpty) {
       val rows = tables.sorted
         .map(t => s"('${t.replace("'", "''")}')").mkString(", ")
       s"SELECT * FROM (VALUES $rows) AS __graft_show(name)"
@@ -2623,63 +2132,45 @@ object Dialect {
     * query fragment and returns (name, duckdb-type) pairs.
     */
   def rewriteDescribe(
-      sql: String, schemaOf: String => Seq[(String, String)]): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 16) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
+      sql: String, schemaOf: String => Seq[(String, String)]): String =
+    Scan.fixpoint(sql) { s =>
+      import s.msk
       def kwLen(i: Int): Int =
-        if (u.regionMatches(i, "DESCRIBE", 0, 8) && isKeywordAt(u, i + 7, "DESCRIBE")) 8
-        else if (u.regionMatches(i, "DESC", 0, 4) && isKeywordAt(u, i + 3, "DESC")) 4
-        else -1
+        if (s.kwAt(i, "DESCRIBE")) 8 else if (s.kwAt(i, "DESC")) 4 else -1
       // splice [from, end) where the region is `DESCRIBE <target>`
-      def tryAt(from: Int, end: Int): Boolean = {
-        var i = from
-        while (i < end && msk.charAt(i).isWhitespace) i += 1
+      def tryAt(from: Int, end: Int): Option[String] = {
+        val i = s.skipWs(from)
         val k = kwLen(i)
-        if (k < 0) return false
-        val inner = out.substring(i + k, end).trim
-        if (inner.isEmpty) return false
-        val frag =
-          if (inner.matches("[A-Za-z_][A-Za-z0-9_.]*")) s"SELECT * FROM $inner"
-          else inner
-        val rows = schemaOf(frag).map { case (n, t) =>
-          s"('${n.replace("'", "''")}', '$t', 'YES', " +
-            "CAST(NULL AS STRING), CAST(NULL AS STRING), CAST(NULL AS STRING))"
-        }.mkString(", ")
-        val repl = s"SELECT * FROM (VALUES $rows) AS __graft_describe(" +
-          "column_name, column_type, `null`, `key`, `default`, `extra`)"
-        out = out.substring(0, from) + repl + out.substring(end)
-        true
+        val inner = if (k < 0) "" else s.sql.substring(i + k, end).trim
+        if (inner.isEmpty) None
+        else {
+          val frag =
+            if (inner.matches("[A-Za-z_][A-Za-z0-9_.]*")) s"SELECT * FROM $inner"
+            else inner
+          val rows = schemaOf(frag).map { case (n, t) =>
+            s"('${n.replace("'", "''")}', '$t', 'YES', " +
+              "CAST(NULL AS STRING), CAST(NULL AS STRING), CAST(NULL AS STRING))"
+          }.mkString(", ")
+          val repl = s"SELECT * FROM (VALUES $rows) AS __graft_describe(" +
+            "column_name, column_type, `null`, `key`, `default`, `extra`)"
+          Some(s.sql.substring(0, from) + repl + s.sql.substring(end))
+        }
       }
       // (a) whole statement
-      var p = 0
-      while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-      if (kwLen(p) > 0) changed = tryAt(p, out.length)
-      // (b) parenthesized table-function position. Only the full
-      // DESCRIBE spelling here: a parenthesized expression over a column
-      // named `desc` must not trigger (the DESC shorthand stays
-      // statement-level, like DuckDB's own contextual resolution).
-      var i = 0
-      while (i < msk.length && !changed) {
-        if (msk.charAt(i) == '(' && !lit(i)) {
-          var j = i + 1
-          while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-          if (kwLen(j) == 8) {
-            val close = matchParen(msk, i)
-            if (close > i) changed = tryAt(j, close)
-          }
-        }
-        i += 1
+      val p = s.skipWs(0)
+      (if (kwLen(p) > 0) tryAt(p, s.length) else None).orElse {
+        // (b) parenthesized table-function position. Only the full
+        // DESCRIBE spelling here: a parenthesized expression over a column
+        // named `desc` must not trigger (the DESC shorthand stays
+        // statement-level, like DuckDB's own contextual resolution).
+        (0 until msk.length).iterator.filter(i => msk.charAt(i) == '(' && !s.lit(i))
+          .flatMap { i =>
+            val j = s.skipWs(i + 1)
+            val close = if (kwLen(j) == 8) s.close(i) else -1
+            if (close > i) tryAt(j, close) else None
+          }.nextOption()
       }
     }
-    out
-  }
 
   /** The statement's WITH prefix truncated to the complete CTE
     * definitions whose bodies END before `pos` (empty when there are
@@ -2688,123 +2179,19 @@ object Dialect {
     * it contains every CTE the fragment can reference and nothing after
     * it (in particular not the CTE the fragment sits inside).
     */
-  private def cteprefixBefore(
-      out: String, msk: String, u: String, lit: Array[Boolean],
-      pos: Int): String = {
-    var p = 0
-    while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-    if (!(u.regionMatches(p, "WITH", 0, 4) && isKeywordAt(u, p + 3, "WITH")))
-      return ""
-    p += 4
-    def skipWs(): Unit =
-      while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-    skipWs()
-    if (u.regionMatches(p, "RECURSIVE", 0, 9) && isKeywordAt(u, p + 8, "RECURSIVE")) {
-      p += 9; skipWs()
-    }
-    var lastComplete = -1
-    var more = true
-    while (more) {
-      val nameEnd = identEndAt(msk, p)
-      if (nameEnd == p) more = false
-      else {
-        p = nameEnd; skipWs()
-        if (p < msk.length && msk.charAt(p) == '(') {
-          val c = matchParen(msk, p)
-          if (c < 0) return finishCte(out, lastComplete)
-          p = c + 1; skipWs()
-        }
-        if (!(u.regionMatches(p, "AS", 0, 2) && isKeywordAt(u, p + 1, "AS")))
-          return finishCte(out, lastComplete)
-        p += 2; skipWs()
-        if (p >= msk.length || msk.charAt(p) != '(')
-          return finishCte(out, lastComplete)
-        val c = matchParen(msk, p)
-        if (c < 0) return finishCte(out, lastComplete)
-        p = c + 1
-        if (p <= pos) lastComplete = p
-        skipWs()
-        if (p < msk.length && msk.charAt(p) == ',' && p < pos) { p += 1; skipWs() }
-        else more = false
-      }
-    }
-    finishCte(out, lastComplete)
-  }
-
-  private def finishCte(out: String, lastComplete: Int): String =
-    if (lastComplete < 0) "" else out.substring(0, lastComplete) + " "
+  private def ctePrefixBefore(s: Scan, pos: Int): String =
+    withList(s).flatMap(_.members.filter(_.bodyEnd + 1 <= pos).lastOption)
+      .fold("")(m => s.sql.substring(0, m.bodyEnd + 1) + " ")
 
   /** (start, end) of the query region holding position `at`: the content
     * span of the innermost parenthesis pair enclosing `at`, or the
     * statement body (past any top-level WITH prefix) when unparenthesized.
     */
-  private def enclosingRegion(
-      msk: String, u: String, lit: Array[Boolean], at: Int): (Int, Int) = {
-    var best = -1
-    var bestClose = msk.length
-    var i = 0
-    while (i < at) {
-      if (msk.charAt(i) == '(' && !lit(i)) {
-        val close = matchParen(msk, i)
-        if (close > at && i > best) { best = i; bestClose = close }
-      }
-      i += 1
-    }
-    if (best >= 0) (best + 1, bestClose)
-    else {
-      val ms = mainQueryStart(msk, u, lit)
-      (math.max(ms, 0), msk.length)
-    }
-  }
-
-  /** First depth-0 occurrence of any of `kws` as a keyword in
-    * [from, until); -1 when none.
-    */
-  private def nextTopKeywordIn(msk: String, u: String, lit: Array[Boolean],
-      from: Int, until: Int, kws: Seq[String]): Int = {
-    var i = from
-    var depth = 0
-    while (i < until) {
-      val c = msk.charAt(i)
-      if (!lit(i)) {
-        if (c == '(' || c == '[') depth += 1
-        else if (c == ')' || c == ']') depth -= 1
-        else if (depth == 0 && kws.exists(kw =>
-          u.regionMatches(i, kw, 0, kw.length) &&
-            isKeywordAt(u, i + kw.length - 1, kw))) return i
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Length-preserving comment mask: every character inside a `--` line
-    * comment or a bracketed comment is replaced by a space, so
-    * index-based syntax scanning (quote parity, paren matching, keyword
-    * search) never sees quotes or parens that live in comments, while
-    * splice positions stay aligned with the original text. Comment
-    * openers inside single-quoted literals are data and left alone.
-    */
-  private[fm] def maskComments(sql: String): String = {
-    val a = sql.toCharArray
-    var i = 0
-    var inStr = false
-    while (i < a.length) {
-      val c = a(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else if (c == '-' && i + 1 < a.length && a(i + 1) == '-') {
-        while (i < a.length && a(i) != '\n') { a(i) = ' '; i += 1 }
-      } else if (c == '/' && i + 1 < a.length && a(i + 1) == '*') {
-        a(i) = ' '; a(i + 1) = ' '; i += 2
-        while (i < a.length && !(a(i) == '*' && i + 1 < a.length && a(i + 1) == '/')) {
-          a(i) = ' '; i += 1
-        }
-        if (i + 1 < a.length) { a(i) = ' '; a(i + 1) = ' '; i += 2 }
-        else if (i < a.length) { a(i) = ' '; i += 1 }
-      } else i += 1
-    }
-    new String(a)
+  private def enclosingRegion(s: Scan, at: Int): (Int, Int) = {
+    val open = s.enclosingParen(at)
+    val close = if (open >= 0) s.close(open) else -1
+    if (close > at) (open + 1, close)
+    else (math.max(mainQueryStart(s), 0), s.length)
   }
 
   /** DuckDB JSON-literal schema hints — rewritten ONLY when they are the
@@ -2812,78 +2199,22 @@ object Dialect {
     * in the query is DATA (the JSON encoding of an empty array, which the
     * files table stores per ADR-0006) and must pass through untouched.
     */
-  private[fm] def rewriteFromJsonHints(sql: String): String = {
-    val m = maskComments(sql)
-    val u = m.toUpperCase
-    val out = new StringBuilder
-    var i = 0
-    var last = 0
-    while (i >= 0 && i < sql.length) {
-      i = u.indexOf("FROM_JSON", i)
-      if (i >= 0) {
-        val insideLiteral = m.substring(0, i).count(_ == '\'') % 2 == 1
-        var k = i + "FROM_JSON".length
-        while (k < m.length && Character.isWhitespace(m.charAt(k))) k += 1
-        if (!insideLiteral && k < m.length && m.charAt(k) == '(') {
-          val close = matchParen(m, k)
-          if (close > 0) {
-            // Scan argument structure on the masked text (quotes/parens in
-            // comments are spaces there); extract arg text from the original.
-            val bounds = splitTopLevelArgs(m.substring(k + 1, close))
-            val args = bounds.map { case (s0, e0) => sql.substring(k + 1 + s0, k + 1 + e0) }
-            val argsMasked = bounds.map { case (s0, e0) => m.substring(k + 1 + s0, k + 1 + e0) }
-            val rewrittenArgs =
-              if (args.length >= 2) {
-                val a2 = argsMasked(1).trim
-                val hinted =
-                  if (a2.length >= 2 && a2.head == '\'' && a2.last == '\'')
-                    hintToDdl(a2.substring(1, a2.length - 1)).map(d => s"'$d'")
-                  else None
-                hinted match {
-                  case Some(h) =>
-                    val a2raw = argsMasked(1)
-                    val lead = a2raw.takeWhile(_.isWhitespace)
-                    val trail = a2raw.reverse.takeWhile(_.isWhitespace).reverse
-                    args.updated(1, lead + h + trail)
-                  case None => args
-                }
-              } else args
-            out.append(sql.substring(last, k + 1))
-            // recurse for nested from_json in the first argument
-            out.append(rewrittenArgs.map(rewriteFromJsonHints).mkString(","))
-            out.append(')')
-            last = close + 1
-            i = close + 1
-          } else i = k
-        } else i = k
+  private[fm] def rewriteFromJsonHints(sql: String): String = Scan.fixpoint(sql) { s =>
+    s.sites("FROM_JSON").flatMap { i =>
+      val k = s.skipWs(i + 9)
+      val close = if (k < s.length && s.msk.charAt(k) == '(') s.close(k) else -1
+      val args = if (close > k) s.splitTop(k + 1, close) else Nil
+      if (args.length < 2) None
+      else {
+        // the second argument, trimmed, must be one string literal
+        val st = s.skipWs(args(1)._1)
+        val en = s.prevNonWs(args(1)._2 - 1)
+        if (st < en && s.str(st) && s.tokenEnd(st) == en)
+          hintToDdl(s.sql.substring(st + 1, en))
+            .map(d => s.sql.substring(0, st) + s"'$d'" + s.sql.substring(en + 1))
+        else None
       }
-    }
-    out.append(sql.substring(last))
-    out.toString
-  }
-
-  /** Split a paren-free-at-top-level argument list into (start, end)
-    * index pairs, respecting nested parens and single-quoted literals.
-    * Callers pass the MASKED text so comment contents never confuse the
-    * scan, then slice the original at the returned boundaries.
-    */
-  private def splitTopLevelArgs(s: String): Vector[(Int, Int)] = {
-    val args = Vector.newBuilder[(Int, Int)]
-    var depth = 0
-    var inStr = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (c == ',' && depth == 0) { args += ((start, i)); start = i + 1 }
-      i += 1
-    }
-    args += ((start, s.length))
-    args.result()
+    }.nextOption()
   }
 
   /** `["VARCHAR"]` → `array<string>`, `[""]` → `array<string>`,
@@ -2929,75 +2260,77 @@ object Dialect {
     * context (so `SELECT a, UNNEST(x)` projections are left alone).
     */
   private[fm] def rewriteUnnest(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 16) {
-      changed = false
-      guard += 1
+    val out = Scan.fixpoint(sql) { s =>
+      import s.msk
       // All syntax decisions scan the masked text (comments → spaces, so a
       // quote or comma living in a comment is never syntax and a comment
       // between ',' and UNNEST reads as whitespace); replacement text is
       // sliced from the original.
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      var i = u.indexOf("UNNEST")
-      while (i >= 0 && !changed) {
-        // preceding non-whitespace must be ','; occurrences inside
-        // single-quoted string literals are data, not syntax (doubled ''
-        // escapes keep the parity count correct)
-        var j = i - 1
-        while (j >= 0 && Character.isWhitespace(msk.charAt(j))) j -= 1
-        val insideLiteral = msk.substring(0, i).count(_ == '\'') % 2 == 1
-        val inFrom = !insideLiteral &&
-          j >= 0 && msk.charAt(j) == ',' && fromContext(u, j)
-        if (inFrom) {
-          // parse UNNEST ( <balanced> )
-          var k = i + "UNNEST".length
-          while (k < msk.length && Character.isWhitespace(msk.charAt(k))) k += 1
-          if (k < msk.length && msk.charAt(k) == '(') {
-            val close = matchParen(msk, k)
-            if (close > 0) {
-              val expr = out.substring(k + 1, close)
-              // optional: AS alias(col) | AS col
-              var p = close + 1
-              while (p < msk.length && Character.isWhitespace(msk.charAt(p))) p += 1
-              var alias = "_unnest"
-              var colName = "unnest"
-              var end = close + 1
-              if (p + 2 <= msk.length && u.startsWith("AS", p)) {
-                var q = p + 2
-                while (q < msk.length && Character.isWhitespace(msk.charAt(q))) q += 1
-                val identEnd = identEndAt(msk, q)
-                if (identEnd > q) {
-                  val ident = out.substring(q, identEnd)
-                  var r = identEnd
-                  while (r < msk.length && Character.isWhitespace(msk.charAt(r))) r += 1
-                  if (r < msk.length && msk.charAt(r) == '(') {
-                    val pc = matchParen(msk, r)
-                    if (pc > 0) {
-                      alias = ident
-                      colName = out.substring(r + 1, pc).trim
-                      end = pc + 1
-                    }
-                  } else {
-                    alias = "_unnest"
-                    colName = ident
-                    end = identEnd
-                  }
+      s.sites("UNNEST").flatMap { i =>
+        // preceding non-whitespace must be ',' in FROM context
+        val j = s.prevNonWs(i - 1)
+        val k = s.skipWs(i + 6)
+        val close =
+          if (j >= 0 && msk.charAt(j) == ',' && s.inFrom(j) &&
+            k < msk.length && msk.charAt(k) == '(') s.close(k)
+          else -1
+        if (close <= 0) None
+        else {
+          val expr = s.sql.substring(k + 1, close)
+          // optional: AS alias(col) | AS col
+          val p = s.skipWs(close + 1)
+          var alias = "_unnest"
+          var colName = "unnest"
+          var end = close + 1
+          if (s.kwAt(p, "AS")) {
+            val q = s.skipWs(p + 2)
+            val identEnd = s.identEnd(q)
+            if (identEnd > q) {
+              val ident = s.sql.substring(q, identEnd)
+              val r = s.skipWs(identEnd)
+              if (r < msk.length && msk.charAt(r) == '(') {
+                val pc = s.close(r)
+                if (pc > 0) {
+                  alias = ident
+                  colName = s.sql.substring(r + 1, pc).trim
+                  end = pc + 1
                 }
+              } else {
+                colName = ident
+                end = identEnd
               }
-              val replacement = s" LATERAL VIEW explode($expr) $alias AS $colName"
-              out = out.substring(0, j) + replacement + out.substring(end)
-              changed = true
             }
           }
+          Some(s.sql.substring(0, j) + s" LATERAL VIEW explode($expr) $alias AS $colName" +
+            s.sql.substring(end))
         }
-        if (!changed) i = u.indexOf("UNNEST", i + 1)
-      }
+      }.nextOption()
     }
+    requireOneSelectUnnest(new Scan(out))
     out
   }
+
+  /** Select-list `UNNEST(list)` is the `unnest` generator alias
+    * registered in [[register]]. DuckDB zips two or more of them in one
+    * select list (padding the shorter lists with NULL); Spark would
+    * cross-multiply them, so that shape fails here instead of answering
+    * with the wrong rows.
+    */
+  private def requireOneSelectUnnest(s: Scan): Unit =
+    if (s.sites("UNNEST").hasNext) s.sites("SELECT").foreach { at =>
+      val listEnd = s.clauseEnd(at + 6, "FROM" +: SelectClauses: _*)
+      val unnests = s.splitTop(at + 6, listEnd).count { case (a, b) =>
+        s.topKeyword(a, b, "UNNEST") >= 0
+      }
+      require(unnests <= 1,
+        "two or more UNNEST calls in one select list are not supported: " +
+          "DuckDB zips them and Spark would cross-multiply them; unnest the " +
+          "lists in separate subqueries, or unnest one list of arrays_zip(…) structs")
+    }
+
+  /** Clause keywords that end a SELECT list (besides FROM). */
+  private val SelectClauses = Seq("WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW",
+    "ORDER", "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT")
 
   /** DuckDB `SELECT * EXCLUDE (a, b)` / `t.* EXCLUDE a` star modifier →
     * Spark's `* EXCEPT (a, b)` (supported since Spark 3.4). Only fires
@@ -3005,40 +2338,19 @@ object Dialect {
     * keyword anywhere else (e.g. an identifier) survives; the bare
     * single-column form gains the parens Spark requires.
     */
-  private[fm] def rewriteExclude(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 16) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      var i = u.indexOf("EXCLUDE")
-      while (i >= 0 && !changed) {
-        val insideLiteral = msk.substring(0, i).count(_ == '\'') % 2 == 1
-        val kwOk = isKeywordAt(u, i + "EXCLUDE".length - 1, "EXCLUDE")
-        var j = i - 1
-        while (j >= 0 && Character.isWhitespace(msk.charAt(j))) j -= 1
-        if (!insideLiteral && kwOk && j >= 0 && msk.charAt(j) == '*') {
-          var k = i + "EXCLUDE".length
-          while (k < msk.length && Character.isWhitespace(msk.charAt(k))) k += 1
-          if (k < msk.length && msk.charAt(k) == '(') {
-            out = out.substring(0, i) + "EXCEPT" + out.substring(i + "EXCLUDE".length)
-            changed = true
-          } else {
-            val identEnd = identEndAt(msk, k)
-            if (identEnd > k) {
-              val ident = out.substring(k, identEnd)
-              out = out.substring(0, i) + s"EXCEPT ($ident)" + out.substring(identEnd)
-              changed = true
-            }
-          }
-        }
-        if (!changed) i = u.indexOf("EXCLUDE", i + 1)
-      }
-    }
-    out
+  private[fm] def rewriteExclude(sql: String): String = Scan.fixpoint(sql) { s =>
+    s.sites("EXCLUDE").flatMap { i =>
+      val j = s.prevNonWs(i - 1)
+      val k = s.skipWs(i + 7)
+      val identEnd = s.identEnd(k)
+      if (j < 0 || s.msk.charAt(j) != '*') None
+      else if (k < s.length && s.msk.charAt(k) == '(')
+        Some(s.sql.substring(0, i) + "EXCEPT" + s.sql.substring(i + 7))
+      else if (identEnd > k)
+        Some(s.sql.substring(0, i) + s"EXCEPT (${s.sql.substring(k, identEnd)})" +
+          s.sql.substring(identEnd))
+      else None
+    }.nextOption()
   }
 
   /** DuckDB `QUALIFY pred` (post-window filter; Spark SQL has none) →
@@ -3053,121 +2365,50 @@ object Dialect {
     *    (pred) AS __graft_qualify FROM <rest> ) WHERE __graft_qualify`.
     *
     * The block's trailing ORDER BY / LIMIT stays outside the wrap (its
-    * aliases remain visible through `SELECT *`). Same pre-pass
-    * discipline as [[rewriteUnnest]]: all syntax decisions on the
-    * comment-masked text, splices from the original.
+    * aliases remain visible through `SELECT *`).
     */
-  /** Per-index "inside a single-quoted literal" flags over MASKED text
-    * (the opening/closing quotes themselves read as inside).
-    */
-  private[fm] def literalMask(msk: String): Array[Boolean] = {
-    val in = new Array[Boolean](msk.length)
-    var i = 0
-    var s = false
-    while (i < msk.length) {
-      if (msk.charAt(i) == '\'') { in(i) = true; s = !s }
-      else in(i) = s
-      i += 1
-    }
-    in
-  }
-
-  private[fm] def rewriteQualify(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 16) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = u.indexOf("QUALIFY")
-      while (i >= 0 && !changed) {
-        val insideLiteral = msk.substring(0, i).count(_ == '\'') % 2 == 1
-        if (!insideLiteral && isKeywordAt(u, i + "QUALIFY".length - 1, "QUALIFY")) {
-          // Enclosing block start: nearest SELECT walking backwards at the
-          // same paren depth.
-          var blockStart = -1
-          var depth = 0
-          var j = i - 1
-          while (j >= 0 && blockStart < 0) {
-            val c = msk.charAt(j)
-            if (lit(j)) () // literal contents are data, not syntax
-            else if (c == ')') depth += 1
-            else if (c == '(') depth -= 1
-            else if (depth == 0 && u.charAt(j) == 'T' && j >= 5 &&
-              u.regionMatches(j - 5, "SELECT", 0, 6) &&
-              (j - 5 == 0 || !Character.isLetterOrDigit(u.charAt(j - 6))) &&
-              (j == u.length - 1 || !Character.isLetterOrDigit(u.charAt(j + 1))))
-              blockStart = j - 5
-            j -= 1
-          }
-          // Predicate end: first same-depth ORDER/LIMIT/WINDOW/set-op
-          // keyword, a block-closing ')', or end of text.
-          var predEnd = -1
-          var k = i + "QUALIFY".length
-          var d2 = 0
-          while (k < msk.length && predEnd < 0) {
-            val c = msk.charAt(k)
-            if (lit(k)) () // literal contents are data, not syntax
-            else if (c == '(') d2 += 1
-            else if (c == ')') { if (d2 == 0) predEnd = k else d2 -= 1 }
-            else if (d2 == 0 && Seq("ORDER", "LIMIT", "WINDOW", "UNION", "INTERSECT", "EXCEPT")
-              .exists(kw => u.regionMatches(k, kw, 0, kw.length) &&
-                isKeywordAt(u, k + kw.length - 1, kw)))
-              predEnd = k
-            if (predEnd < 0) k += 1
-          }
-          if (predEnd < 0) predEnd = msk.length
-          if (blockStart >= 0) {
-            val head = out.substring(blockStart, i)
-            val pred = out.substring(i + "QUALIFY".length, predEnd).trim
-            val predMasked = msk.substring(i + "QUALIFY".length, predEnd)
-            val predOff = i + "QUALIFY".length
-            val hasWindow = {
-              val pu = predMasked.toUpperCase
-              (0 until pu.length).exists(p =>
-                !lit(predOff + p) &&
-                pu.regionMatches(p, "OVER", 0, 4) && isKeywordAt(pu, p + 3, "OVER"))
-            }
-            val replacement =
-              if (!hasWindow)
-                s"SELECT * FROM ( $head ) WHERE ($pred) "
-              else {
-                // Top-level FROM inside the block's head — the helper
-                // column splices in just before it.
-                val headMsk = msk.substring(blockStart, i)
-                val hu = headMsk.toUpperCase
-                var fromAt = -1
-                var d3 = 0
-                var p = 0
-                while (p < hu.length && fromAt < 0) {
-                  val c = headMsk.charAt(p)
-                  if (lit(blockStart + p)) ()
-                  else if (c == '(') d3 += 1
-                  else if (c == ')') d3 -= 1
-                  else if (d3 == 0 && hu.regionMatches(p, "FROM", 0, 4) &&
-                    isKeywordAt(hu, p + 3, "FROM")) fromAt = p
-                  p += 1
-                }
-                if (fromAt < 0) null
-                else {
-                  val withHelper = head.substring(0, fromAt) +
-                    s", ($pred) AS __graft_qualify " + head.substring(fromAt)
-                  s"SELECT * EXCEPT (__graft_qualify) FROM ( $withHelper ) WHERE __graft_qualify "
-                }
-              }
-            if (replacement != null) {
-              out = out.substring(0, blockStart) + replacement + out.substring(predEnd)
-              changed = true
-            }
+  private[fm] def rewriteQualify(sql: String): String = Scan.fixpoint(sql) { s =>
+    s.sites("QUALIFY").flatMap { i =>
+      // Enclosing block start: nearest SELECT walking backwards at the
+      // same paren depth.
+      val blockStart = selectBefore(s, i)
+      // Predicate end: first same-depth ORDER/LIMIT/WINDOW/set-op
+      // keyword, a block-closing ')', or end of text.
+      val predEnd = s.clauseEnd(i + 7, "ORDER" +: "LIMIT" +: "WINDOW" +: SetOps: _*)
+      val pred = s.sql.substring(i + 7, predEnd).trim
+      val replacement =
+        if (blockStart < 0) None
+        else if (!s.sites("OVER").exists(p => p > i && p + 4 <= predEnd))
+          Some(s"SELECT * FROM ( ${s.sql.substring(blockStart, i)} ) WHERE ($pred) ")
+        else {
+          // Top-level FROM inside the block's head — the helper
+          // column splices in just before it.
+          val fromAt = s.topKeyword(blockStart, i, "FROM")
+          if (fromAt < 0) None
+          else {
+            val withHelper = s.sql.substring(blockStart, fromAt) +
+              s", ($pred) AS __graft_qualify " + s.sql.substring(fromAt, i)
+            Some(s"SELECT * EXCEPT (__graft_qualify) FROM ( $withHelper ) WHERE __graft_qualify ")
           }
         }
-        if (!changed) i = u.indexOf("QUALIFY", i + 1)
+      replacement.map(r => s.sql.substring(0, blockStart) + r + s.sql.substring(predEnd))
+    }.nextOption()
+  }
+
+  /** Start of the nearest SELECT left of `at` at the same paren depth; -1 if none. */
+  private def selectBefore(s: Scan, at: Int): Int = {
+    var depth = 0
+    var j = at - 1
+    while (j >= 0) {
+      if (!s.lit(j)) {
+        val c = s.msk.charAt(j)
+        if (c == ')') depth += 1
+        else if (c == '(') depth -= 1
+        else if (depth == 0 && s.kwEndingAt(j, "SELECT")) return j - 5
       }
+      j -= 1
     }
-    out
+    -1
   }
 
   /** DuckDB window-frame `EXCLUDE` — Spark frames have no exclusion, so
@@ -3220,207 +2461,152 @@ object Dialect {
     *     rejects them with "GROUPS mode for window functions is not
     *     implemented yet", so no passthrough query can contain one.
     */
-  private[fm] def rewriteWindowExclude(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 64) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = u.indexOf("EXCLUDE")
-      while (i >= 0 && !changed) {
-        if (!lit(i) && isKeywordAt(u, i + 6, "EXCLUDE")) {
-          var j = i + 7
-          while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-          val mode =
-            if (u.regionMatches(j, "CURRENT", 0, 7) && isKeywordAt(u, j + 6, "CURRENT")) "CURRENT"
-            else if (u.regionMatches(j, "NO", 0, 2) && isKeywordAt(u, j + 1, "NO")) "NO"
-            else if (u.regionMatches(j, "GROUP", 0, 5) && isKeywordAt(u, j + 4, "GROUP")) "GROUP"
-            else if (u.regionMatches(j, "TIES", 0, 4) && isKeywordAt(u, j + 3, "TIES")) "TIES"
-            else ""
-          // enclosing '(' — must be an OVER clause for this to be a
-          // window-frame EXCLUDE (the star modifier has no paren+OVER)
-          var depth = 0
-          var openAt = -1
-          var p = i - 1
-          while (p >= 0 && openAt < 0) {
-            val c = msk.charAt(p)
-            if (!lit(p)) {
-              if (c == ')') depth += 1
-              else if (c == '(') { if (depth == 0) openAt = p else depth -= 1 }
-            }
-            p -= 1
-          }
-          var q = openAt - 1
-          while (q >= 0 && msk.charAt(q).isWhitespace) q -= 1
-          val isOver = openAt >= 0 && q >= 3 &&
-            u.regionMatches(q - 3, "OVER", 0, 4) && isKeywordAt(u, q, "OVER")
-          if (mode.nonEmpty && isOver) {
-            // end of the EXCLUDE clause: CURRENT ROW / NO OTHERS are
-            // two words, GROUP / TIES one
-            var k = j + (mode match {
-              case "CURRENT" => 7; case "NO" => 2; case "GROUP" => 5; case _ => 4 })
-            val exclEnd =
-              if (mode == "CURRENT" || mode == "NO") {
-                while (k < msk.length && msk.charAt(k).isWhitespace) k += 1
-                val word = if (mode == "CURRENT") "ROW" else "OTHERS"
-                require(u.regionMatches(k, word, 0, word.length),
-                  s"EXCLUDE ${if (mode == "CURRENT") "CURRENT" else "NO"} must be followed by $word")
-                k + word.length
-              } else k
-            if (mode == "NO") {
-              // the default — strip the clause
-              out = out.substring(0, i).stripSuffix(" ") + out.substring(exclEnd)
-              changed = true
-            } else {
-              val closeAt = matchParen(msk, openAt)
-              require(closeAt > openAt, "unbalanced OVER clause")
-              // <fn>(args) immediately before OVER
-              val overStart = q - 3
-              var r0 = overStart - 1
-              while (r0 >= 0 && msk.charAt(r0).isWhitespace) r0 -= 1
-              require(r0 >= 0 && msk.charAt(r0) == ')',
-                "EXCLUDE CURRENT ROW: expected <aggregate>(args) OVER (...)")
-              var d2 = 0
-              var argOpen = -1
-              var s0 = r0
-              while (s0 >= 0 && argOpen < 0) {
-                val c = msk.charAt(s0)
-                if (!lit(s0)) {
-                  if (c == ')') d2 += 1
-                  else if (c == '(') { d2 -= 1; if (d2 == 0) argOpen = s0 }
-                }
-                s0 -= 1
-              }
-              require(argOpen > 0, "EXCLUDE CURRENT ROW: malformed aggregate call")
-              var f0 = argOpen - 1
-              while (f0 >= 0 && (Character.isLetterOrDigit(msk.charAt(f0)) ||
-                msk.charAt(f0) == '_')) f0 -= 1
-              val fnName = out.substring(f0 + 1, argOpen).trim
-              val args = out.substring(argOpen + 1, r0)
-              val fu = fnName.toUpperCase
-              // frame bounds: ROWS|RANGE BETWEEN <a> AND <b> EXCLUDE ...
-              val rowsAt = findTopKeyword(u, msk, lit, openAt + 1, i, "ROWS")
-              val rangeAt =
-                if (rowsAt >= 0) -1
-                else findTopKeyword(u, msk, lit, openAt + 1, i, "RANGE")
-              val isRange = rangeAt >= 0
-              require(rowsAt >= 0 || rangeAt >= 0,
-                s"EXCLUDE $mode requires an explicit ROWS or RANGE BETWEEN " +
-                  "frame (GROUPS exclusion is not supported)")
-              if (mode == "CURRENT" && !isRange)
-                require(Set("SUM", "COUNT", "MIN", "MAX", "AVG")(fu),
-                  s"EXCLUDE CURRENT ROW is supported for sum/count/min/max/avg, not $fnName")
-              else
-                require(Set("SUM", "COUNT", "AVG", "MIN", "MAX")(fu),
-                  s"EXCLUDE $mode over a ${if (isRange) "RANGE" else "ROWS"} " +
-                    s"frame is supported for sum/count/avg/min/max, not $fnName")
-              val frameKwAt = if (isRange) rangeAt else rowsAt
-              val frameKwLen = if (isRange) 5 else 4
-              val betweenAt = findTopKeyword(u, msk, lit, frameKwAt + frameKwLen, i, "BETWEEN")
-              require(betweenAt >= 0, "EXCLUDE: the window frame must use BETWEEN")
-              val andAt = findTopKeyword(u, msk, lit, betweenAt + 7, i, "AND")
-              require(andAt >= 0, "EXCLUDE: malformed window frame")
-              val prefix = out.substring(openAt + 1, frameKwAt).trim
-              val aTxt = out.substring(betweenAt + 7, andAt).trim
-              val bTxt = out.substring(andAt + 3, i).trim
-              def cls(t: String): (String, Long) = {
-                val tu = t.toUpperCase.replaceAll("\\s+", " ")
-                if (tu == "UNBOUNDED PRECEDING") ("UP", 0L)
-                else if (tu == "CURRENT ROW") ("CR", 0L)
-                else if (tu == "UNBOUNDED FOLLOWING") ("UF", 0L)
-                else if (tu.endsWith(" PRECEDING")) ("NP", tu.dropRight(10).trim.toLong)
-                else if (tu.endsWith(" FOLLOWING")) ("NF", tu.dropRight(10).trim.toLong)
-                else throw new IllegalArgumentException(s"unsupported frame bound: $t")
-              }
-              val (ak, an) = cls(aTxt)
-              val (bk, bn) = cls(bTxt)
-              val hasBefore = ak == "UP" || (ak == "NP" && an >= 1)
-              val hasAfter = bk == "UF" || (bk == "NF" && bn >= 1)
-              // frame entirely before/after the current row → no-op
-              val noop = (ak == "NF" && an >= 1) || (bk == "NP" && bn >= 1)
-              def w(fn2: String, lo: String, hi: String) =
-                s"$fn2($args) OVER ($prefix ROWS BETWEEN $lo AND $hi)"
-              val minMaxTwoLayer = (fu == "MIN" || fu == "MAX") &&
-                (mode == "GROUP" || mode == "TIES" || isRange)
-              if (minMaxTwoLayer) {
-                // min/max aren't subtraction-decomposable, so GROUP/TIES
-                // (and RANGE CURRENT ROW) restructure the enclosing
-                // SELECT into two window layers instead of replacing the
-                // expression in place — see restructureMinMaxExclude.
-                require(findTopKeyword(u, msk, lit, openAt + 1, frameKwAt, "ORDER") >= 0,
-                  s"EXCLUDE $mode requires an ORDER BY in the window")
-                out = restructureMinMaxExclude(
-                  out, msk, u, lit, f0 + 1, closeAt + 1,
-                  fu, args, prefix, mode, ak, bk)
-                changed = true
-              } else {
-              val repl: String =
-                if (isRange) rewriteExcludeRange(
-                  mode, fu, args, prefix, aTxt, bTxt, ak, bk,
-                  u, msk, lit, openAt, rangeAt)
-                else if (mode != "CURRENT") rewriteExcludePeers(
-                  mode, fu, args, prefix, aTxt, bTxt, ak, bk,
-                  u, msk, lit, openAt, rowsAt)
-                else if (noop) s"$fnName($args) OVER ($prefix ROWS BETWEEN $aTxt AND $bTxt)"
-                else (hasBefore, hasAfter) match {
-                  case (true, true) =>
-                    lazy val wb = w(fnName, aTxt, "1 PRECEDING")
-                    lazy val wa = w(fnName, "1 FOLLOWING", bTxt)
-                    // COUNT suffixes over an UNBOUNDED FOLLOWING end as
-                    // total − cumulative (two O(rows) frames) instead of
-                    // the per-row-recomputed (1 FOLLOWING, UF) window
-                    // (quadratic, r17); exact for counts. SUM/MIN/MAX
-                    // keep the direct window (float parity / no
-                    // subtraction inverse for extremes).
-                    def cntAfter(cf: String) =
-                      if (bk == "UF")
-                        s"(${w(cf, "UNBOUNDED PRECEDING", "UNBOUNDED FOLLOWING")} - " +
-                          s"${w(cf, "UNBOUNDED PRECEDING", "CURRENT ROW")})"
-                      else w(cf, "1 FOLLOWING", bTxt)
-                    fu match {
-                      case "SUM" =>
-                        s"CASE WHEN $wb IS NULL AND $wa IS NULL THEN NULL " +
-                          s"ELSE coalesce($wb, 0) + coalesce($wa, 0) END"
-                      case "COUNT" => s"($wb + ${cntAfter(fnName)})"
-                      case "MIN" => s"least($wb, $wa)"
-                      case "MAX" => s"greatest($wb, $wa)"
-                      case "AVG" =>
-                        val sb2 = w("sum", aTxt, "1 PRECEDING")
-                        val sa2 = w("sum", "1 FOLLOWING", bTxt)
-                        val cb2 = w("count", aTxt, "1 PRECEDING")
-                        val ca2 = cntAfter("count")
-                        s"CASE WHEN $cb2 + $ca2 = 0 THEN NULL " +
-                          s"ELSE (coalesce($sb2, 0) + coalesce($sa2, 0)) / ($cb2 + $ca2) END"
-                    }
-                  case (true, false) => w(fnName, aTxt, "1 PRECEDING")
-                  case (false, true) =>
-                    if (fu == "COUNT" && bk == "UF")
-                      s"(${w(fnName, "UNBOUNDED PRECEDING", "UNBOUNDED FOLLOWING")} - " +
-                        s"${w(fnName, "UNBOUNDED PRECEDING", "CURRENT ROW")})"
-                    else w(fnName, "1 FOLLOWING", bTxt)
-                  case (false, false) =>
-                    // only the current row was in the frame — DuckDB's
-                    // empty-frame result, typed via a never-taken branch
-                    if (fu == "COUNT") "CAST(0 AS BIGINT)"
-                    else s"CASE WHEN 1 = 0 THEN " +
-                      s"$fnName($args) OVER ($prefix ROWS BETWEEN $aTxt AND $bTxt) " +
-                      "ELSE NULL END"
-                }
-              out = out.substring(0, f0 + 1) + "(" + repl + ")" +
-                out.substring(closeAt + 1)
-              changed = true
-              }
-            }
-          }
-        }
-        if (!changed) i = u.indexOf("EXCLUDE", i + 1)
-      }
+  private[fm] def rewriteWindowExclude(sql: String): String = Scan.fixpoint(sql) { s =>
+    s.sites("EXCLUDE").flatMap(windowExcludeAt(s, _)).nextOption()
+  }
+
+  /** The statement with the frame `EXCLUDE` at `i` rewritten; None when
+    * that EXCLUDE is not inside an OVER clause.
+    */
+  private def windowExcludeAt(s: Scan, i: Int): Option[String] = {
+    import s.{msk, u}
+    val out = s.sql
+    val j = s.skipWs(i + 7)
+    val mode = Seq("CURRENT", "NO", "GROUP", "TIES").find(s.kwAt(j, _)).getOrElse("")
+    // enclosing '(' — must be an OVER clause for this to be a
+    // window-frame EXCLUDE (the star modifier has no paren+OVER)
+    val openAt = s.enclosingParen(i)
+    val q = s.prevNonWs(openAt - 1)
+    if (mode.isEmpty || openAt < 0 || !s.kwEndingAt(q, "OVER")) return None
+    // end of the EXCLUDE clause: CURRENT ROW / NO OTHERS are
+    // two words, GROUP / TIES one
+    val exclEnd =
+      if (mode == "CURRENT" || mode == "NO") {
+        val k = s.skipWs(j + mode.length)
+        val word = if (mode == "CURRENT") "ROW" else "OTHERS"
+        require(u.startsWith(word, k), s"EXCLUDE $mode must be followed by $word")
+        k + word.length
+      } else j + mode.length
+    // the default — strip the clause
+    if (mode == "NO") return Some(out.substring(0, i).stripSuffix(" ") + out.substring(exclEnd))
+    val closeAt = s.close(openAt)
+    require(closeAt > openAt, "unbalanced OVER clause")
+    // <fn>(args) immediately before OVER
+    val r0 = s.prevNonWs(q - 4)
+    require(r0 >= 0 && msk.charAt(r0) == ')',
+      "EXCLUDE CURRENT ROW: expected <aggregate>(args) OVER (...)")
+    val argOpen = s.open(r0)
+    require(argOpen > 0, "EXCLUDE CURRENT ROW: malformed aggregate call")
+    var f0 = argOpen - 1
+    while (f0 >= 0 && !s.lit(f0) && Scan.wordChar(msk.charAt(f0))) f0 -= 1
+    val fnName = out.substring(f0 + 1, argOpen).trim
+    val args = out.substring(argOpen + 1, r0)
+    val fu = fnName.toUpperCase
+    // frame bounds: ROWS|RANGE BETWEEN <a> AND <b> EXCLUDE ...
+    val rowsAt = s.topKeyword(openAt + 1, i, "ROWS")
+    val rangeAt =
+      if (rowsAt >= 0) -1
+      else s.topKeyword(openAt + 1, i, "RANGE")
+    val isRange = rangeAt >= 0
+    require(rowsAt >= 0 || rangeAt >= 0,
+      s"EXCLUDE $mode requires an explicit ROWS or RANGE BETWEEN " +
+        "frame (GROUPS exclusion is not supported)")
+    if (mode == "CURRENT" && !isRange)
+      require(Set("SUM", "COUNT", "MIN", "MAX", "AVG")(fu),
+        s"EXCLUDE CURRENT ROW is supported for sum/count/min/max/avg, not $fnName")
+    else
+      require(Set("SUM", "COUNT", "AVG", "MIN", "MAX")(fu),
+        s"EXCLUDE $mode over a ${if (isRange) "RANGE" else "ROWS"} " +
+          s"frame is supported for sum/count/avg/min/max, not $fnName")
+    val frameKwAt = if (isRange) rangeAt else rowsAt
+    val frameKwLen = if (isRange) 5 else 4
+    val betweenAt = s.topKeyword(frameKwAt + frameKwLen, i, "BETWEEN")
+    require(betweenAt >= 0, "EXCLUDE: the window frame must use BETWEEN")
+    val andAt = s.topKeyword(betweenAt + 7, i, "AND")
+    require(andAt >= 0, "EXCLUDE: malformed window frame")
+    val prefix = out.substring(openAt + 1, frameKwAt).trim
+    val aTxt = out.substring(betweenAt + 7, andAt).trim
+    val bTxt = out.substring(andAt + 3, i).trim
+    def cls(t: String): (String, Long) = {
+      val tu = t.toUpperCase.replaceAll("\\s+", " ")
+      if (tu == "UNBOUNDED PRECEDING") ("UP", 0L)
+      else if (tu == "CURRENT ROW") ("CR", 0L)
+      else if (tu == "UNBOUNDED FOLLOWING") ("UF", 0L)
+      else if (tu.endsWith(" PRECEDING")) ("NP", tu.dropRight(10).trim.toLong)
+      else if (tu.endsWith(" FOLLOWING")) ("NF", tu.dropRight(10).trim.toLong)
+      else throw new IllegalArgumentException(s"unsupported frame bound: $t")
     }
-    out
+    val (ak, an) = cls(aTxt)
+    val (bk, bn) = cls(bTxt)
+    val hasBefore = ak == "UP" || (ak == "NP" && an >= 1)
+    val hasAfter = bk == "UF" || (bk == "NF" && bn >= 1)
+    // frame entirely before/after the current row → no-op
+    val noop = (ak == "NF" && an >= 1) || (bk == "NP" && bn >= 1)
+    def w(fn2: String, lo: String, hi: String) =
+      s"$fn2($args) OVER ($prefix ROWS BETWEEN $lo AND $hi)"
+    val minMaxTwoLayer = (fu == "MIN" || fu == "MAX") &&
+      (mode == "GROUP" || mode == "TIES" || isRange)
+    if (minMaxTwoLayer) {
+      // min/max aren't subtraction-decomposable, so GROUP/TIES
+      // (and RANGE CURRENT ROW) restructure the enclosing
+      // SELECT into two window layers instead of replacing the
+      // expression in place — see restructureMinMaxExclude.
+      require(s.topKeyword(openAt + 1, frameKwAt, "ORDER") >= 0,
+        s"EXCLUDE $mode requires an ORDER BY in the window")
+      return Some(restructureMinMaxExclude(
+        s, f0 + 1, closeAt + 1, fu, args, prefix, mode, ak, bk))
+    }
+    val repl: String =
+      if (isRange) rewriteExcludeRange(
+        mode, fu, args, prefix, aTxt, bTxt, ak, bk, s, openAt, rangeAt)
+      else if (mode != "CURRENT") rewriteExcludePeers(
+        mode, fu, args, prefix, aTxt, bTxt, ak, bk, s, openAt, rowsAt)
+      else if (noop) s"$fnName($args) OVER ($prefix ROWS BETWEEN $aTxt AND $bTxt)"
+      else (hasBefore, hasAfter) match {
+        case (true, true) =>
+          lazy val wb = w(fnName, aTxt, "1 PRECEDING")
+          lazy val wa = w(fnName, "1 FOLLOWING", bTxt)
+          // COUNT suffixes over an UNBOUNDED FOLLOWING end as
+          // total − cumulative (two O(rows) frames) instead of
+          // the per-row-recomputed (1 FOLLOWING, UF) window
+          // (quadratic, r17); exact for counts. SUM/MIN/MAX
+          // keep the direct window (float parity / no
+          // subtraction inverse for extremes).
+          def cntAfter(cf: String) =
+            if (bk == "UF")
+              s"(${w(cf, "UNBOUNDED PRECEDING", "UNBOUNDED FOLLOWING")} - " +
+                s"${w(cf, "UNBOUNDED PRECEDING", "CURRENT ROW")})"
+            else w(cf, "1 FOLLOWING", bTxt)
+          fu match {
+            case "SUM" =>
+              s"CASE WHEN $wb IS NULL AND $wa IS NULL THEN NULL " +
+                s"ELSE coalesce($wb, 0) + coalesce($wa, 0) END"
+            case "COUNT" => s"($wb + ${cntAfter(fnName)})"
+            case "MIN" => s"least($wb, $wa)"
+            case "MAX" => s"greatest($wb, $wa)"
+            case "AVG" =>
+              val sb2 = w("sum", aTxt, "1 PRECEDING")
+              val sa2 = w("sum", "1 FOLLOWING", bTxt)
+              val cb2 = w("count", aTxt, "1 PRECEDING")
+              val ca2 = cntAfter("count")
+              s"CASE WHEN $cb2 + $ca2 = 0 THEN NULL " +
+                s"ELSE (coalesce($sb2, 0) + coalesce($sa2, 0)) / ($cb2 + $ca2) END"
+          }
+        case (true, false) => w(fnName, aTxt, "1 PRECEDING")
+        case (false, true) =>
+          if (fu == "COUNT" && bk == "UF")
+            s"(${w(fnName, "UNBOUNDED PRECEDING", "UNBOUNDED FOLLOWING")} - " +
+              s"${w(fnName, "UNBOUNDED PRECEDING", "CURRENT ROW")})"
+          else w(fnName, "1 FOLLOWING", bTxt)
+        case (false, false) =>
+          // only the current row was in the frame — DuckDB's
+          // empty-frame result, typed via a never-taken branch
+          if (fu == "COUNT") "CAST(0 AS BIGINT)"
+          else s"CASE WHEN 1 = 0 THEN " +
+            s"$fnName($args) OVER ($prefix ROWS BETWEEN $aTxt AND $bTxt) " +
+            "ELSE NULL END"
+      }
+    Some(out.substring(0, f0 + 1) + "(" + repl + ")" + out.substring(closeAt + 1))
   }
 
   /** Two-layer rewrite for `min`/`max` with `EXCLUDE GROUP`/`TIES`
@@ -3475,44 +2661,15 @@ object Dialect {
     * both engines' window sorts).
     */
   private[fm] def invertOrderBy(prefix: String): String = {
-    val u2 = prefix.toUpperCase
-    // top-level ORDER keyword (outside parens and quotes — backtick
-    // regions too: a backtick-quoted identifier like `order` passes
-    // isKeywordAt's boundary checks and would be misdetected as the
-    // keyword, mis-splitting the spec; ADVICE r17)
-    var obAt = -1
-    var d = 0
-    var q: Char = 0
-    var i = 0
-    while (i < prefix.length && obAt < 0) {
-      val c = prefix.charAt(i)
-      if (q != 0) { if (c == q) q = 0 }
-      else if (c == '\'' || c == '`') q = c
-      else if (c == '(') d += 1
-      else if (c == ')') d -= 1
-      else if (d == 0 && u2.regionMatches(i, "ORDER", 0, 5) &&
-        isKeywordAt(u2, i + 4, "ORDER")) obAt = i
-      i += 1
-    }
+    val s = new Scan(prefix)
+    // top-level ORDER keyword (outside brackets and quoted tokens: a
+    // backtick-quoted identifier like `order` must not read as the
+    // keyword and mis-split the spec; ADVICE r17)
+    val obAt = s.topKeyword(0, prefix.length, "ORDER")
     require(obAt >= 0, s"invertOrderBy: no ORDER BY in window spec: $prefix")
-    val byAt = u2.indexOf("BY", obAt + 5)
+    val byAt = s.u.indexOf("BY", obAt + 5)
     val head = prefix.substring(0, byAt + 2)
-    val itemsTxt = prefix.substring(byAt + 2)
-    // split on top-level commas (same quote tracking as the scan above)
-    val items = scala.collection.mutable.ArrayBuffer.empty[String]
-    var start = 0
-    d = 0; q = 0
-    var j = 0
-    while (j < itemsTxt.length) {
-      val c = itemsTxt.charAt(j)
-      if (q != 0) { if (c == q) q = 0 }
-      else if (c == '\'' || c == '`') q = c
-      else if (c == '(') d += 1
-      else if (c == ')') d -= 1
-      else if (d == 0 && c == ',') { items += itemsTxt.substring(start, j); start = j + 1 }
-      j += 1
-    }
-    items += itemsTxt.substring(start)
+    val items = s.splitTopText(byAt + 2, prefix.length)
     val inv = items.map { raw =>
       var t = raw.trim
       val nullsRe = "(?is)\\s+NULLS\\s+(FIRST|LAST)\\s*$".r
@@ -3531,10 +2688,11 @@ object Dialect {
   }
 
   private def restructureMinMaxExclude(
-      out: String, msk: String, u: String, lit: Array[Boolean],
-      exprStart: Int, exprEnd: Int,
+      s: Scan, exprStart: Int, exprEnd: Int,
       fu: String, args: String, prefix: String,
       mode: String, ak: String, bk: String): String = {
+    import s.msk
+    val out = s.sql
     require(ak == "UP" || ak == "CR",
       s"min/max EXCLUDE $mode: the frame start must be UNBOUNDED " +
         "PRECEDING or CURRENT ROW (an offset start makes the " +
@@ -3544,75 +2702,36 @@ object Dialect {
         "FOLLOWING or CURRENT ROW (an offset end makes the " +
         "after-group piece row-dependent)")
     // enclosing SELECT: nearest same-depth SELECT walking backwards
-    var blockStart = -1
-    var depth = 0
-    var j = exprStart - 1
-    while (j >= 0 && blockStart < 0) {
-      val c = msk.charAt(j)
-      if (lit(j)) ()
-      else if (c == ')') depth += 1
-      else if (c == '(') depth -= 1
-      else if (depth == 0 && u.charAt(j) == 'T' && j >= 5 &&
-        isKeywordAt(u, j, "SELECT")) blockStart = j - 5
-      j -= 1
-    }
+    val blockStart = selectBefore(s, exprStart)
     require(blockStart >= 0, s"min/max EXCLUDE $mode: no enclosing SELECT")
     // skip ALL whitespace after SELECT before testing for DISTINCT —
     // 'SELECT  DISTINCT' / a newline must fail as loudly as one space
-    var afterSel = blockStart + 6
-    while (afterSel < u.length && u.charAt(afterSel).isWhitespace) afterSel += 1
-    require(!(u.regionMatches(afterSel, "DISTINCT", 0, 8) &&
-        isKeywordAt(u, afterSel + 7, "DISTINCT")),
+    require(!s.kwAt(s.skipWs(blockStart + 6), "DISTINCT"),
       s"min/max EXCLUDE $mode over SELECT DISTINCT is not supported")
     // top-level FROM of the block
-    var fromAt = -1
-    var d2 = 0
-    var p = blockStart + 6
-    while (p < msk.length && fromAt < 0) {
-      val c = msk.charAt(p)
-      if (lit(p)) ()
-      else if (c == '(') d2 += 1
-      else if (c == ')') { require(d2 > 0, s"min/max EXCLUDE $mode: no FROM in block"); d2 -= 1 }
-      else if (d2 == 0 && isKeywordAt(u, p + 3, "FROM") &&
-        u.regionMatches(p, "FROM", 0, 4)) fromAt = p
-      if (fromAt < 0) p += 1
-    }
+    val fromAt0 = s.clauseEnd(blockStart + 6, "FROM")
+    require(!(fromAt0 < msk.length && ")]}".indexOf(msk.charAt(fromAt0)) >= 0),
+      s"min/max EXCLUDE $mode: no FROM in block")
+    val fromAt = if (fromAt0 < msk.length) fromAt0 else -1
     require(fromAt > exprEnd,
       s"min/max EXCLUDE $mode: the window must sit in the SELECT list")
     // relation zone: FROM … up to the first same-depth trailing clause
     val stoppers = Seq("GROUP", "HAVING", "QUALIFY", "WINDOW", "ORDER",
       "LIMIT", "OFFSET", "UNION", "INTERSECT", "EXCEPT")
-    var zoneEnd = -1
-    var stopKw = ""
-    var d3 = 0
-    var q2 = fromAt + 4
-    while (q2 < msk.length && zoneEnd < 0) {
-      val c = msk.charAt(q2)
-      if (lit(q2)) ()
-      else if (c == '(') d3 += 1
-      else if (c == ')') { if (d3 == 0) zoneEnd = q2 else d3 -= 1 }
-      else if (d3 == 0) stoppers.find(kw =>
-        u.regionMatches(q2, kw, 0, kw.length) &&
-          isKeywordAt(u, q2 + kw.length - 1, kw)) match {
-        case Some(kw) => stopKw = kw; zoneEnd = q2
-        case None => ()
-      }
-      if (zoneEnd < 0) q2 += 1
-    }
-    if (zoneEnd < 0) zoneEnd = msk.length
+    val zoneEnd = s.clauseEnd(fromAt + 4, stoppers: _*)
+    val stopKw = stoppers.find(s.kwAt(zoneEnd, _)).getOrElse("")
     require(stopKw != "GROUP" && stopKw != "HAVING",
       s"min/max EXCLUDE $mode in a grouped SELECT is not supported")
     // single base relation (optional alias): the inner SELECT * wrap
     // re-exposes it under the same name
-    val whereAt = findTopKeyword(u, msk, lit, fromAt + 4, zoneEnd, "WHERE")
+    val whereAt = s.topKeyword(fromAt + 4, zoneEnd, "WHERE")
     val relEnd = if (whereAt >= 0) whereAt else zoneEnd
-    var relStart = fromAt + 4
-    while (relStart < relEnd && msk.charAt(relStart).isWhitespace) relStart += 1
+    val relStart = s.skipWs(fromAt + 4).min(relEnd)
     val aliasName =
       if (relStart < relEnd && msk.charAt(relStart) == '(') {
         // parenthesized subquery + mandatory alias (the shape a previous
         // min/max-EXCLUDE pass in the same block leaves behind)
-        val close = matchParen(msk, relStart)
+        val close = s.close(relStart)
         require(close > relStart && close < relEnd,
           s"min/max EXCLUDE $mode: malformed subquery relation")
         val toks = out.substring(close + 1, relEnd).trim
@@ -3641,7 +2760,7 @@ object Dialect {
     // in a single Window pass over one sort.
     val priorWrap: Option[(Int, Int)] =
       if (relStart < relEnd && msk.charAt(relStart) == '(') {
-        val close = matchParen(msk, relStart)
+        val close = s.close(relStart)
         val body = out.substring(relStart + 1, close)
         if (body.trim.toUpperCase.startsWith("SELECT *,") &&
             body.contains("__graft_mm")) Some((relStart + 1, close))
@@ -3761,11 +2880,10 @@ object Dialect {
   private def rewriteExcludePeers(
       mode: String, fu: String, args: String, prefix: String,
       aTxt: String, bTxt: String, ak: String, bk: String,
-      u: String, msk: String, lit: Array[Boolean],
-      openAt: Int, rowsAt: Int): String = {
+      s: Scan, openAt: Int, rowsAt: Int): String = {
     require(ak != "NF" && bk != "NP",
       s"EXCLUDE $mode requires a frame containing the current row")
-    require(findTopKeyword(u, msk, lit, openAt + 1, rowsAt, "ORDER") >= 0,
+    require(s.topKeyword(openAt + 1, rowsAt, "ORDER") >= 0,
       s"EXCLUDE $mode requires an ORDER BY in the window (peers are the " +
         "current row's ORDER BY ties)")
     val UPB = "UNBOUNDED PRECEDING"
@@ -3863,11 +2981,10 @@ object Dialect {
   private def rewriteExcludeRange(
       mode: String, fu: String, args: String, prefix: String,
       aTxt: String, bTxt: String, ak: String, bk: String,
-      u: String, msk: String, lit: Array[Boolean],
-      openAt: Int, rangeAt: Int): String = {
+      s: Scan, openAt: Int, rangeAt: Int): String = {
     require(ak != "NF" && bk != "NP",
       s"EXCLUDE $mode over RANGE requires a frame containing the current row")
-    require(findTopKeyword(u, msk, lit, openAt + 1, rangeAt, "ORDER") >= 0,
+    require(s.topKeyword(openAt + 1, rangeAt, "ORDER") >= 0,
       s"EXCLUDE $mode requires an ORDER BY in the window")
     def fw(g: String) = s"$g OVER ($prefix RANGE BETWEEN $aTxt AND $bTxt)"
     def pw(g: String) = s"$g OVER ($prefix RANGE BETWEEN CURRENT ROW AND CURRENT ROW)"
@@ -3897,141 +3014,19 @@ object Dialect {
     }
   }
 
-  /** Heuristic: walking backwards from position `j`, the nearest governing
-    * clause keyword at the same paren depth is FROM (not SELECT/WHERE/…).
-    */
-  private[fm] def fromContext(upper: String, j: Int): Boolean = {
-    var depth = 0
-    var i = j
-    while (i >= 0) {
-      val c = upper.charAt(i)
-      if (c == ')') depth += 1
-      else if (c == '(') { if (depth == 0) return false; depth -= 1 }
-      else if (depth == 0 && isKeywordAt(upper, i, "FROM")) return true
-      else if (depth == 0 && (isKeywordAt(upper, i, "SELECT") || isKeywordAt(upper, i, "WHERE")))
-        return false
-      i -= 1
-    }
-    false
-  }
-
-  private[fm] def isKeywordAt(upper: String, endIdx: Int, kw: String): Boolean = {
-    // '_' is an identifier character, not a word boundary: without it the
-    // QUALIFY inside this rewriter's own __graft_qualify helper matches as
-    // a keyword on the next scan pass and the rewrite re-wraps its output
-    // into unparsable SQL (round-8 q_fm_qualify ParseException).
-    def isIdentChar(c: Char): Boolean = Character.isLetterOrDigit(c) || c == '_'
-    val start = endIdx - kw.length + 1
-    start >= 0 &&
-    upper.regionMatches(start, kw, 0, kw.length) &&
-    (start == 0 || !isIdentChar(upper.charAt(start - 1))) &&
-    (endIdx == upper.length - 1 || !isIdentChar(upper.charAt(endIdx + 1)))
-  }
-
-  private[fm] def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
-  /** Matching `(` for the `)` at `close`, scanning backwards over MASKED
-    * text and skipping string-literal contents; -1 if unbalanced.
-    */
-  private def backwardMatchParen(
-      msk: String, lit: Array[Boolean], close: Int): Int = {
-    var depth = 0
-    var i = close
-    while (i >= 0) {
-      val c = msk.charAt(i)
-      if (!lit(i)) {
-        if (c == ')') depth += 1
-        else if (c == '(') { depth -= 1; if (depth == 0) return i }
-      }
-      i -= 1
-    }
-    -1
-  }
-
-  /** One member of a statement-level WITH list. `body` excludes the
-    * wrapping parens; `bodyStart`/`bodyEnd` are its offsets in the
-    * original text (start inclusive, end exclusive).
-    */
-  private[fm] final case class CteDef(
-      name: String,
-      columns: Option[Seq[String]],
-      body: String,
-      nameStart: Int,
-      bodyStart: Int,
-      bodyEnd: Int)
-
   /** Parse a statement-level `WITH [RECURSIVE] name [(cols)] AS (…) [,…]`
     * list: (recursive?, members, index of the main query). None when the
     * statement has no top-level WITH or the list is malformed.
     */
-  private[fm] def parseWithList(sql: String): Option[(Boolean, Seq[CteDef], Int)] = {
-    val msk = maskComments(sql)
-    val u = msk.toUpperCase
-    var p = 0
-    while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-    if (p >= msk.length ||
-      !(u.regionMatches(p, "WITH", 0, 4) && isKeywordAt(u, p + 3, "WITH")))
-      return None
-    p += 4
-    def skipWs(): Unit = while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-    skipWs()
-    val recursive =
-      u.regionMatches(p, "RECURSIVE", 0, 9) && isKeywordAt(u, p + 8, "RECURSIVE")
-    if (recursive) { p += 9; skipWs() }
-    val members = Seq.newBuilder[CteDef]
-    var more = true
-    while (more) {
-      val nameStart = p
-      val nameEnd = identEndAt(msk, p)
-      if (nameEnd == p) return None
-      val name = sql.substring(p, nameEnd)
-      p = nameEnd; skipWs()
-      var cols: Option[Seq[String]] = None
-      if (p < msk.length && msk.charAt(p) == '(') {
-        val c = matchParen(msk, p); if (c < 0) return None
-        cols = Some(sql.substring(p + 1, c).split(',').map(_.trim).toSeq)
-        p = c + 1; skipWs()
-      }
-      if (!(u.regionMatches(p, "AS", 0, 2) && isKeywordAt(u, p + 1, "AS"))) return None
-      p += 2; skipWs()
-      if (p >= msk.length || msk.charAt(p) != '(') return None
-      val c = matchParen(msk, p); if (c < 0) return None
-      members += CteDef(name, cols, sql.substring(p + 1, c), nameStart, p + 1, c)
-      p = c + 1; skipWs()
-      if (p < msk.length && msk.charAt(p) == ',') { p += 1; skipWs() }
-      else more = false
-    }
-    Some((recursive, members.result(), p))
-  }
+  private[fm] def parseWithList(sql: String): Option[(Boolean, Seq[CteDef], Int)] =
+    withList(new Scan(sql)).filter(_.complete).map(w => (w.recursive, w.members, w.end))
 
   /** Does `body` reference `name` as a standalone identifier (outside
     * literals/comments, not a qualified-field tail like `x.name`)?
     */
   private[fm] def referencesName(body: String, name: String): Boolean = {
-    val msk = maskComments(body)
-    val u = msk.toUpperCase
-    val lit = literalMask(msk)
-    val un = name.toUpperCase
-    var i = u.indexOf(un)
-    while (i >= 0) {
-      if (!lit(i) && isKeywordAt(u, i + un.length - 1, un) &&
-        (i == 0 || msk.charAt(i - 1) != '.')) return true
-      i = u.indexOf(un, i + 1)
-    }
-    false
+    val s = new Scan(body)
+    s.sites(name.toUpperCase).exists(i => i == 0 || s.msk.charAt(i - 1) != '.')
   }
 
   /** Split `body` at top-level UNION [ALL] boundaries →
@@ -4039,41 +3034,21 @@ object Dialect {
     * return None (out of the recursion rewrite's scope).
     */
   private[fm] def splitUnions(body: String): Option[(Seq[String], Seq[Boolean])] = {
-    val msk = maskComments(body)
-    val u = msk.toUpperCase
-    val lit = literalMask(msk)
+    val s = new Scan(body)
+    if (s.topKeyword(0, body.length, "INTERSECT", "EXCEPT") >= 0) return None
     val segs = Seq.newBuilder[String]
     val alls = Seq.newBuilder[Boolean]
-    var depth = 0
     var segStart = 0
-    var i = 0
-    while (i < msk.length) {
-      val c = msk.charAt(i)
-      if (!lit(i)) {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0) {
-          if ((u.regionMatches(i, "INTERSECT", 0, 9) && isKeywordAt(u, i + 8, "INTERSECT")) ||
-            (u.regionMatches(i, "EXCEPT", 0, 6) && isKeywordAt(u, i + 5, "EXCEPT")))
-            return None
-          if (u.regionMatches(i, "UNION", 0, 5) && isKeywordAt(u, i + 4, "UNION")) {
-            segs += body.substring(segStart, i)
-            var j = i + 5
-            while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-            var all = false
-            if (u.regionMatches(j, "ALL", 0, 3) && isKeywordAt(u, j + 2, "ALL")) {
-              all = true; j += 3
-            } else if (u.regionMatches(j, "DISTINCT", 0, 8) &&
-              isKeywordAt(u, j + 7, "DISTINCT")) {
-              j += 8
-            }
-            alls += all
-            segStart = j
-            i = j - 1
-          }
-        }
-      }
-      i += 1
+    var i = s.topKeyword(0, body.length, "UNION")
+    while (i >= 0) {
+      segs += body.substring(segStart, i)
+      var j = s.skipWs(i + 5)
+      val all = s.kwAt(j, "ALL")
+      if (all) j += 3
+      else if (s.kwAt(j, "DISTINCT")) j += 8
+      alls += all
+      segStart = j
+      i = s.topKeyword(j, body.length, "UNION")
     }
     segs += body.substring(segStart)
     Some((segs.result(), alls.result()))
@@ -4161,127 +3136,40 @@ object Dialect {
     * equivalent).
     */
   def rewritePositionalJoin(
-      sql: String, materialize: (String, String) => String): String = {
-    var out = sql
-    var changed = true
-    var guard = 0
-    while (changed && guard < 50) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = u.indexOf("POSITIONAL")
-      while (i >= 0 && !changed) {
-        if (!lit(i) && isKeywordAt(u, i + 9, "POSITIONAL")) {
-          var j = i + 10
-          while (j < msk.length && msk.charAt(j).isWhitespace) j += 1
-          if (u.regionMatches(j, "JOIN", 0, 4) && isKeywordAt(u, j + 3, "JOIN")) {
-            // left boundary: subquery or identifier ending right before i
-            var le = i - 1
-            while (le >= 0 && msk.charAt(le).isWhitespace) le -= 1
-            val (ls, leftText) =
-              if (le >= 0 && msk.charAt(le) == ')') {
-                val open = backwardMatchParen(msk, lit, le)
-                require(open >= 0, "unbalanced parens before POSITIONAL JOIN")
-                (open, out.substring(open + 1, le))
-              } else {
-                var k = le
-                while (k >= 0 && (Character.isLetterOrDigit(msk.charAt(k)) ||
-                  msk.charAt(k) == '_')) k -= 1
-                (k + 1, s"SELECT * FROM ${out.substring(k + 1, le + 1)}")
-              }
-            // right side: after JOIN
-            var rs = j + 4
-            while (rs < msk.length && msk.charAt(rs).isWhitespace) rs += 1
-            val (re, rightText) =
-              if (rs < msk.length && msk.charAt(rs) == '(') {
-                val close = matchParen(msk, rs)
-                require(close > rs, "unbalanced parens after POSITIONAL JOIN")
-                (close, out.substring(rs + 1, close))
-              } else {
-                var k = identEndAt(msk, rs)
-                require(k > rs, "expected a relation after POSITIONAL JOIN")
-                if (k < msk.length && msk.charAt(k) == '(') {
-                  val close = matchParen(msk, k)
-                  (close, s"SELECT * FROM ${out.substring(rs, close + 1)}")
-                } else (k - 1, s"SELECT * FROM ${out.substring(rs, k)}")
-              }
-            val view = materialize(leftText.trim, rightText.trim)
-            out = out.substring(0, ls) + view + out.substring(re + 1)
-            changed = true
-          }
+      sql: String, materialize: (String, String) => String): String = Scan.fixpoint(sql) { s =>
+    import s.msk
+    val out = s.sql
+    s.sites("POSITIONAL").find(i => s.kwAt(s.skipWs(i + 10), "JOIN")).map { i =>
+      // left boundary: subquery or identifier ending right before i
+      val le = s.prevNonWs(i - 1)
+      val (ls, leftText) =
+        if (le >= 0 && msk.charAt(le) == ')') {
+          val open = s.open(le)
+          require(open >= 0, "unbalanced parens before POSITIONAL JOIN")
+          (open, out.substring(open + 1, le))
+        } else {
+          var k = le
+          while (k >= 0 && !s.lit(k) && Scan.wordChar(msk.charAt(k))) k -= 1
+          (k + 1, s"SELECT * FROM ${out.substring(k + 1, le + 1)}")
         }
-        if (!changed) i = u.indexOf("POSITIONAL", i + 1)
-      }
+      // right side: after JOIN
+      val rs = s.skipWs(s.skipWs(i + 10) + 4)
+      val (re, rightText) =
+        if (rs < msk.length && msk.charAt(rs) == '(') {
+          val close = s.close(rs)
+          require(close > rs, "unbalanced parens after POSITIONAL JOIN")
+          (close, out.substring(rs + 1, close))
+        } else {
+          val k = s.identEnd(rs)
+          require(k > rs, "expected a relation after POSITIONAL JOIN")
+          if (k < msk.length && msk.charAt(k) == '(') {
+            val close = s.close(k)
+            (close, s"SELECT * FROM ${out.substring(rs, close + 1)}")
+          } else (k - 1, s"SELECT * FROM ${out.substring(rs, k)}")
+        }
+      val view = materialize(leftText.trim, rightText.trim)
+      out.substring(0, ls) + view + out.substring(re + 1)
     }
-    out
-  }
-
-  private def identEndAt(s: String, start: Int): Int = {
-    var i = start
-    while (i < s.length && (Character.isLetterOrDigit(s.charAt(i)) || s.charAt(i) == '_')) i += 1
-    i
-  }
-
-  /** Matching `]` for the `[` at `open`, skipping string literals. */
-  private def matchBracket(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '[') depth += 1
-      else if (c == ']') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
-  /** First occurrence of keyword `kw` in `[from, until)` at nesting depth
-    * 0 (both parens and brackets), word-bounded, outside string literals;
-    * -1 if absent.
-    */
-  private def findTopKeyword(
-      u: String, msk: String, lit: Array[Boolean],
-      from: Int, until: Int, kw: String): Int = {
-    var depth = 0
-    var i = from
-    while (i < until) {
-      val c = msk.charAt(i)
-      if (!lit(i)) {
-        if (c == '(' || c == '[') depth += 1
-        else if (c == ')' || c == ']') depth -= 1
-        else if (depth == 0 && u.regionMatches(i, kw, 0, kw.length) &&
-          isKeywordAt(u, i + kw.length - 1, kw) && i + kw.length <= until) return i
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Top-level comma positions in `[from, until)` (depth 0, outside
-    * literals), returned as the (start, end) spans between them.
-    */
-  private def splitTopCommas(
-      msk: String, lit: Array[Boolean], from: Int, until: Int): Seq[(Int, Int)] = {
-    val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    var depth = 0
-    var start = from
-    var i = from
-    while (i < until) {
-      val c = msk.charAt(i)
-      if (!lit(i)) {
-        if (c == '(' || c == '[') depth += 1
-        else if (c == ')' || c == ']') depth -= 1
-        else if (c == ',' && depth == 0) { spans += ((start, i)); start = i + 1 }
-      }
-      i += 1
-    }
-    spans += ((start, until))
-    spans.toSeq
   }
 
   /** DuckDB `* REPLACE (expr AS col, ...)` star modifier (passthrough
@@ -4297,82 +3185,58 @@ object Dialect {
     * handled too: the EXCLUDE group (or its already-rewritten EXCEPT
     * form) merges into one `* EXCEPT (a, b, col), expr AS col` output.
     */
-  private[fm] def rewriteReplace(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 16) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = u.indexOf("REPLACE")
-      while (i >= 0 && !changed) {
-        if (!lit(i) && isKeywordAt(u, i + "REPLACE".length - 1, "REPLACE")) {
-          var j = i - 1
-          while (j >= 0 && Character.isWhitespace(msk.charAt(j))) j -= 1
-          var k = i + "REPLACE".length
-          while (k < msk.length && Character.isWhitespace(msk.charAt(k))) k += 1
-          // Direct `* REPLACE (...)`, or the combined form where an
-          // `EXCLUDE (...)` / `EXCEPT (...)` group sits between the star
-          // and REPLACE — its columns merge into the emitted EXCEPT list
-          // and the splice then starts at the group's keyword.
-          var spliceStart = i
-          var exclCols = ""
-          var okStar = j >= 0 && msk.charAt(j) == '*'
-          if (!okStar && j >= 0 && msk.charAt(j) == ')') {
-            val open = backwardMatchParen(msk, lit, j)
-            if (open >= 0) {
-              var e = open - 1
-              while (e >= 0 && Character.isWhitespace(msk.charAt(e))) e -= 1
-              for (kw <- Seq("EXCLUDE", "EXCEPT") if !okStar)
-                if (e >= kw.length - 1 && isKeywordAt(u, e, kw)) {
-                  val st = e - kw.length + 1
-                  var b = st - 1
-                  while (b >= 0 && Character.isWhitespace(msk.charAt(b))) b -= 1
-                  if (b >= 0 && msk.charAt(b) == '*') {
-                    okStar = true
-                    spliceStart = st
-                    exclCols = out.substring(open + 1, j).trim
-                  }
-                }
-            }
-          }
-          if (okStar && k < msk.length && msk.charAt(k) == '(') {
-            val close = matchParen(msk, k)
-            if (close > k) {
-              val parsed = splitTopCommas(msk, lit, k + 1, close).map { case (s0, e0) =>
-                // last top-level AS splits expr from the target column
-                var asAt = -1
-                var p = findTopKeyword(u, msk, lit, s0, e0, "AS")
-                while (p >= 0) { asAt = p; p = findTopKeyword(u, msk, lit, p + 2, e0, "AS") }
-                if (asAt < 0) None
-                else {
-                  val col = out.substring(asAt + 2, e0).trim
-                  val expr = out.substring(s0, asAt).trim
-                  if (col.nonEmpty && expr.nonEmpty &&
-                    col.forall(c => Character.isLetterOrDigit(c) || c == '_' || c == '`'))
-                    Some((expr, col))
-                  else None
-                }
-              }
-              if (parsed.nonEmpty && parsed.forall(_.isDefined)) {
-                val items = parsed.flatten
-                val exceptList =
-                  (if (exclCols.isEmpty) Nil else Seq(exclCols)) ++ items.map(_._2)
-                val repl = s"EXCEPT (${exceptList.mkString(", ")})" +
-                  items.map { case (e, c) => s", $e AS $c" }.mkString
-                out = out.substring(0, spliceStart) + repl + out.substring(close + 1)
-                changed = true
+  private[fm] def rewriteReplace(sql: String): String = Scan.fixpoint(sql) { s =>
+    import s.msk
+    val out = s.sql
+    s.sites("REPLACE").flatMap { i =>
+      val j = s.prevNonWs(i - 1)
+      val k = s.skipWs(i + 7)
+      // Direct `* REPLACE (...)`, or the combined form where an
+      // `EXCLUDE (...)` / `EXCEPT (...)` group sits between the star
+      // and REPLACE — its columns merge into the emitted EXCEPT list
+      // and the splice then starts at the group's keyword.
+      var spliceStart = i
+      var exclCols = ""
+      var okStar = j >= 0 && msk.charAt(j) == '*'
+      if (!okStar && j >= 0 && msk.charAt(j) == ')') {
+        val open = s.open(j)
+        if (open >= 0) {
+          val e = s.prevNonWs(open - 1)
+          for (kw <- Seq("EXCLUDE", "EXCEPT") if !okStar)
+            if (s.kwEndingAt(e, kw)) {
+              val st = e - kw.length + 1
+              val b = s.prevNonWs(st - 1)
+              if (b >= 0 && msk.charAt(b) == '*') {
+                okStar = true
+                spliceStart = st
+                exclCols = out.substring(open + 1, j).trim
               }
             }
-          }
         }
-        if (!changed) i = u.indexOf("REPLACE", i + 1)
       }
-    }
-    out
+      val close = if (okStar && k < msk.length && msk.charAt(k) == '(') s.close(k) else -1
+      val parsed = if (close <= k) Nil else s.splitTop(k + 1, close).map { case (s0, e0) =>
+        // last top-level AS splits expr from the target column
+        val asAt = s.lastTopKeyword(s0, e0, "AS")
+        if (asAt < 0) None
+        else {
+          val col = out.substring(asAt + 2, e0).trim
+          val expr = out.substring(s0, asAt).trim
+          if (col.nonEmpty && expr.nonEmpty &&
+            col.forall(c => Character.isLetterOrDigit(c) || c == '_' || c == '`'))
+            Some((expr, col))
+          else None
+        }
+      }
+      if (parsed.nonEmpty && parsed.forall(_.isDefined)) {
+        val items = parsed.flatten
+        val exceptList =
+          (if (exclCols.isEmpty) Nil else Seq(exclCols)) ++ items.map(_._2)
+        val repl = s"EXCEPT (${exceptList.mkString(", ")})" +
+          items.map { case (e, c) => s", $e AS $c" }.mkString
+        Some(out.substring(0, spliceStart) + repl + out.substring(close + 1))
+      } else None
+    }.nextOption()
   }
 
   /** DuckDB/Postgres `SELECT DISTINCT ON (keys) list … ORDER BY sort` →
@@ -4389,130 +3253,84 @@ object Dialect {
     * referencing columns the select list drops fails loudly at analysis
     * (Postgres requires the sort to lead with the ON keys anyway).
     */
-  private[fm] def rewriteDistinctOn(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 16) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = u.indexOf("DISTINCT")
-      while (i >= 0 && !changed) {
-        // shape: SELECT DISTINCT ON ( keys ) …
-        var selAt = -1
-        if (!lit(i) && isKeywordAt(u, i + "DISTINCT".length - 1, "DISTINCT")) {
-          var j = i - 1
-          while (j >= 0 && Character.isWhitespace(msk.charAt(j))) j -= 1
-          if (j >= 5 && u.regionMatches(j - 5, "SELECT", 0, 6) &&
-            isKeywordAt(u, j, "SELECT")) selAt = j - 5
-        }
-        var k = i + "DISTINCT".length
-        while (k < msk.length && Character.isWhitespace(msk.charAt(k))) k += 1
-        if (selAt >= 0 && k + 1 < msk.length && u.regionMatches(k, "ON", 0, 2) &&
-          isKeywordAt(u, k + 1, "ON")) {
-          var p = k + 2
-          while (p < msk.length && Character.isWhitespace(msk.charAt(p))) p += 1
-          if (p < msk.length && msk.charAt(p) == '(') {
-            val close = matchParen(msk, p)
-            if (close > p) {
-              val keys = out.substring(p + 1, close).trim
-              // select list runs to the block's top-level FROM
-              val fromAt = findTopKeyword(u, msk, lit, close + 1, msk.length, "FROM")
-              if (fromAt >= 0) {
-                val selectList = out.substring(close + 1, fromAt).trim
-                // block tail: first same-depth ORDER / LIMIT / ')' / set-op
-                var blockEnd = -1
-                var orderAt = -1
-                var q = fromAt
-                var d2 = 0
-                while (q < msk.length && blockEnd < 0) {
-                  val c = msk.charAt(q)
-                  if (lit(q)) ()
-                  else if (c == '(') d2 += 1
-                  else if (c == ')') { if (d2 == 0) blockEnd = q else d2 -= 1 }
-                  else if (d2 == 0) {
-                    if (orderAt < 0 && u.regionMatches(q, "ORDER", 0, 5) &&
-                      isKeywordAt(u, q + 4, "ORDER")) orderAt = q
-                    if (orderAt < 0 &&
-                      Seq("LIMIT", "UNION", "INTERSECT", "EXCEPT").exists(kw =>
-                        u.regionMatches(q, kw, 0, kw.length) &&
-                          isKeywordAt(u, q + kw.length - 1, kw))) blockEnd = q
-                    else if (orderAt >= 0 && q > orderAt &&
-                      Seq("UNION", "INTERSECT", "EXCEPT").exists(kw =>
-                        u.regionMatches(q, kw, 0, kw.length) &&
-                          isKeywordAt(u, q + kw.length - 1, kw))) blockEnd = q
-                  }
-                  if (blockEnd < 0) q += 1
-                }
-                if (blockEnd < 0) blockEnd = msk.length
-                val innerEnd = if (orderAt >= 0 && orderAt < blockEnd) orderAt else blockEnd
-                val fromPart = out.substring(fromAt, innerEnd)
-                val tail = out.substring(innerEnd, blockEnd)
-                var sort = keys
-                var sortSpan: Option[(Int, Int)] = None // absolute [from,until) of the sort items
-                var limTail = ""
-                if (orderAt >= 0 && orderAt < blockEnd) {
-                  // contents after "ORDER BY" up to LIMIT / block end
-                  val limAt = findTopKeyword(u, msk, lit, orderAt + 5, blockEnd, "LIMIT")
-                  val sortEnd = if (limAt >= 0) limAt else blockEnd
-                  val byAt = findTopKeyword(u, msk, lit, orderAt + 5, sortEnd, "BY")
-                  if (byAt >= 0) {
-                    sort = out.substring(byAt + 2, sortEnd).trim
-                    sortSpan = Some((byAt + 2, sortEnd))
-                    limTail = out.substring(sortEnd, blockEnd)
-                  }
-                }
-                // DuckDB binds the trailing ORDER BY BEFORE projection, so
-                // sort expressions the select list drops still resolve; the
-                // wrapped Spark form orders AFTER projection. Hoist any such
-                // expression into a hidden helper column (computed inside,
-                // EXCEPTed outside) — ordinals and references to projected
-                // output names stay as-is.
-                val (outNames, hasStar) = selectOutputNames(selectList)
-                val helpers = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-                val rebuiltTail = sortSpan match {
-                  case None => tail
-                  case Some((sFrom, sUntil)) =>
-                    val items = splitTopCommas(msk, lit, sFrom, sUntil).map {
-                      case (a, b) =>
-                        val raw = out.substring(a, b).trim
-                        val (expr, suffix) = stripSortSuffix(raw)
-                        val bare = expr.substring(expr.lastIndexOf('.') + 1)
-                        val isOrdinal = expr.matches("[0-9]+")
-                        val isProjected =
-                          expr.matches("[A-Za-z_][A-Za-z0-9_.]*") &&
-                            (hasStar || outNames.contains(bare.toLowerCase))
-                        if (isOrdinal || isProjected) raw
-                        else {
-                          val h = s"__graft_ob_${helpers.length}"
-                          helpers += ((expr, h))
-                          s"$h$suffix"
-                        }
-                    }
-                    s"ORDER BY ${items.mkString(", ")}" +
-                      (if (limTail.trim.nonEmpty) " " + limTail.trim else "")
-                }
-                val helperCols =
-                  helpers.map { case (e, h) => s", $e AS $h" }.mkString
-                val exceptList =
-                  ("__graft_rn" +: helpers.map(_._2).toSeq).mkString(", ")
-                val replacement =
-                  s"SELECT * EXCEPT ($exceptList) FROM ( SELECT $selectList$helperCols, " +
-                    s"row_number() OVER (PARTITION BY $keys ORDER BY $sort) AS __graft_rn " +
-                    s"$fromPart) WHERE __graft_rn = 1 $rebuiltTail"
-                out = out.substring(0, selAt) + replacement + out.substring(blockEnd)
-                changed = true
-              }
-            }
+  private[fm] def rewriteDistinctOn(sql: String): String = Scan.fixpoint(sql) { s =>
+    import s.msk
+    val out = s.sql
+    s.sites("DISTINCT").flatMap { i =>
+      // shape: SELECT DISTINCT ON ( keys ) …
+      val j = s.prevNonWs(i - 1)
+      val selAt = if (s.kwEndingAt(j, "SELECT")) j - 5 else -1
+      val k = s.skipWs(i + 8)
+      val p = if (selAt >= 0 && s.kwAt(k, "ON")) s.skipWs(k + 2) else -1
+      val close = if (p >= 0 && p < msk.length && msk.charAt(p) == '(') s.close(p) else -1
+      // select list runs to the block's top-level FROM
+      val fromAt = if (close > p) s.topKeyword(close + 1, msk.length, "FROM") else -1
+      if (fromAt < 0) None
+      else {
+        val keys = out.substring(p + 1, close).trim
+        val selectList = out.substring(close + 1, fromAt).trim
+        // block tail: first same-depth ORDER / LIMIT / ')' / set-op; past
+        // an ORDER, only ')' or a set-op ends the block
+        val first = s.clauseEnd(fromAt, "ORDER" +: "LIMIT" +: SetOps: _*)
+        val orderAt = if (s.kwAt(first, "ORDER")) first else -1
+        val blockEnd = if (orderAt >= 0) s.clauseEnd(orderAt + 5, SetOps: _*) else first
+        val innerEnd = if (orderAt >= 0) orderAt else blockEnd
+        val fromPart = out.substring(fromAt, innerEnd)
+        val tail = out.substring(innerEnd, blockEnd)
+        var sort = keys
+        var sortSpan: Option[(Int, Int)] = None // absolute [from,until) of the sort items
+        var limTail = ""
+        if (orderAt >= 0) {
+          // contents after "ORDER BY" up to LIMIT / block end
+          val limAt = s.topKeyword(orderAt + 5, blockEnd, "LIMIT")
+          val sortEnd = if (limAt >= 0) limAt else blockEnd
+          val byAt = s.topKeyword(orderAt + 5, sortEnd, "BY")
+          if (byAt >= 0) {
+            sort = out.substring(byAt + 2, sortEnd).trim
+            sortSpan = Some((byAt + 2, sortEnd))
+            limTail = out.substring(sortEnd, blockEnd)
           }
         }
-        if (!changed) i = u.indexOf("DISTINCT", i + 1)
+        // DuckDB binds the trailing ORDER BY BEFORE projection, so
+        // sort expressions the select list drops still resolve; the
+        // wrapped Spark form orders AFTER projection. Hoist any such
+        // expression into a hidden helper column (computed inside,
+        // EXCEPTed outside) — ordinals and references to projected
+        // output names stay as-is.
+        val (outNames, hasStar) = selectOutputNames(selectList)
+        val helpers = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+        val rebuiltTail = sortSpan match {
+          case None => tail
+          case Some((sFrom, sUntil)) =>
+            val items = s.splitTopText(sFrom, sUntil).map { piece =>
+              val raw = piece.trim
+              val (expr, suffix) = stripSortSuffix(raw)
+              val bare = expr.substring(expr.lastIndexOf('.') + 1)
+              val isOrdinal = expr.matches("[0-9]+")
+              val isProjected =
+                expr.matches("[A-Za-z_][A-Za-z0-9_.]*") &&
+                  (hasStar || outNames.contains(bare.toLowerCase))
+              if (isOrdinal || isProjected) raw
+              else {
+                val h = s"__graft_ob_${helpers.length}"
+                helpers += ((expr, h))
+                s"$h$suffix"
+              }
+            }
+            s"ORDER BY ${items.mkString(", ")}" +
+              (if (limTail.trim.nonEmpty) " " + limTail.trim else "")
+        }
+        val helperCols =
+          helpers.map { case (e, h) => s", $e AS $h" }.mkString
+        val exceptList =
+          ("__graft_rn" +: helpers.map(_._2).toSeq).mkString(", ")
+        val replacement =
+          s"SELECT * EXCEPT ($exceptList) FROM ( SELECT $selectList$helperCols, " +
+            s"row_number() OVER (PARTITION BY $keys ORDER BY $sort) AS __graft_rn " +
+            s"$fromPart) WHERE __graft_rn = 1 $rebuiltTail"
+        Some(out.substring(0, selAt) + replacement + out.substring(blockEnd))
       }
-    }
-    out
+    }.nextOption()
   }
 
   /** Output-column names of a SELECT list (lowercased, best effort):
@@ -4522,29 +3340,18 @@ object Dialect {
     * (every source column is then projected).
     */
   private def selectOutputNames(list: String): (Set[String], Boolean) = {
+    val s = new Scan(list)
     var star = false
-    val names = splitTopLevelArgs(list).flatMap { case (s0, e0) =>
-      val item = list.substring(s0, e0).trim
+    val names = s.splitTop(0, list.length).flatMap { case (a, b) =>
+      val item = list.substring(a, b).trim
       if (item == "*" || item.endsWith(".*")) { star = true; None }
       else {
-        val u = item.toUpperCase
-        var depth = 0
-        var inS = false
-        var asPos = -1
-        var i = 0
-        while (i < item.length - 3) {
-          val c = item.charAt(i)
-          if (inS) { if (c == '\'') inS = false }
-          else if (c == '\'') inS = true
-          else if (c == '(' || c == '[') depth += 1
-          else if (c == ')' || c == ']') depth -= 1
-          else if (depth == 0 && u.regionMatches(i, " AS ", 0, 4)) asPos = i
-          i += 1
-        }
-        val cand = (if (asPos >= 0) item.substring(asPos + 4) else item).trim
+        val asPos = s.lastTopKeyword(a, b, "AS")
+        val cand = (if (asPos >= 0) list.substring(asPos + 2, b) else item).trim
         val last = cand.substring(cand.lastIndexOf('.') + 1).trim
         if (last.matches("[A-Za-z_][A-Za-z0-9_]*")) Some(last.toLowerCase)
-        else if (last.length > 2 && last.head == '`' && last.last == '`')
+        else if (last.length > 2 && (last.head == '`' || last.head == '"') &&
+          last.last == last.head)
           Some(last.substring(1, last.length - 1).toLowerCase)
         else None
       }
@@ -4581,63 +3388,28 @@ object Dialect {
     * `(bernoulli, seed)` is NOT translated — it fails loudly rather than
     * silently sampling with a different method.
     */
-  private[fm] def rewriteUsingSample(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 16) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = u.indexOf("USING")
-      while (i >= 0 && !changed) {
-        if (!lit(i) && isKeywordAt(u, i + 4, "USING")) {
-          var k = i + 5
-          while (k < msk.length && Character.isWhitespace(msk.charAt(k))) k += 1
-          if (u.regionMatches(k, "SAMPLE", 0, 6) && isKeywordAt(u, k + 5, "SAMPLE")) {
-            var p = k + 6
-            while (p < msk.length && Character.isWhitespace(msk.charAt(p))) p += 1
-            val numStart = p
-            while (p < msk.length &&
-              (Character.isDigit(msk.charAt(p)) || msk.charAt(p) == '.')) p += 1
-            if (p > numStart) {
-              val num = out.substring(numStart, p)
-              var q = p
-              while (q < msk.length && Character.isWhitespace(msk.charAt(q))) q += 1
-              val (unit, endAt) =
-                if (q < msk.length && msk.charAt(q) == '%') ("PERCENT", q + 1)
-                else if (u.regionMatches(q, "PERCENT", 0, 7) &&
-                  isKeywordAt(u, q + 6, "PERCENT")) ("PERCENT", q + 7)
-                else if (u.regionMatches(q, "ROWS", 0, 4) &&
-                  isKeywordAt(u, q + 3, "ROWS")) ("ROWS", q + 4)
-                else ("ROWS", p) // bare number = rows in DuckDB
-              out = out.substring(0, i) + s"TABLESAMPLE ($num $unit)" + out.substring(endAt)
-              changed = true
-            }
-          }
-        }
-        if (!changed) i = u.indexOf("USING", i + 1)
+  private[fm] def rewriteUsingSample(sql: String): String = Scan.fixpoint(sql) { s =>
+    import s.msk
+    s.sites("USING").flatMap { i =>
+      val k = s.skipWs(i + 5)
+      val numStart = if (s.kwAt(k, "SAMPLE")) s.skipWs(k + 6) else msk.length
+      var p = numStart
+      while (p < msk.length &&
+        (Character.isDigit(msk.charAt(p)) || msk.charAt(p) == '.')) p += 1
+      if (p == numStart) None
+      else {
+        val num = s.sql.substring(numStart, p)
+        val q = s.skipWs(p)
+        val (unit, endAt) =
+          if (q < msk.length && msk.charAt(q) == '%') ("PERCENT", q + 1)
+          else if (s.kwAt(q, "PERCENT")) ("PERCENT", q + 7)
+          else if (s.kwAt(q, "ROWS")) ("ROWS", q + 4)
+          else ("ROWS", p) // bare number = rows in DuckDB
+        Some(s.sql.substring(0, i) + s"TABLESAMPLE ($num $unit)" + s.sql.substring(endAt))
       }
-    }
-    out
+    }.nextOption()
   }
 
-  /** DuckDB list comprehensions (passthrough long tail) →
-    * `transform`/`filter` higher-order functions:
-    *
-    *   `[expr FOR x IN list]`         → `transform(list, x -> expr)`
-    *   `[expr FOR x IN list IF cond]` → `transform(filter(list, x -> cond),
-    *                                               x -> expr)`
-    *
-    * Only brackets whose body contains a top-level `FOR` are touched —
-    * plain `[1, 2]` array literals and `arr[i]` indexing pass through
-    * untouched (their 1-based-vs-0-based semantics must fail loudly at
-    * parse time, not be silently shifted). Nested comprehensions resolve
-    * outermost-first; the re-scan loop picks up the inner ones on the
-    * next pass.
-    */
   /** DuckDB struct literals `{'k': expr, ...}` → `named_struct('k',
     * expr, ...)`. Only braces whose body parses COMPLETELY as top-level
     * `'quoted-key': value` pairs are rewritten; anything else (including
@@ -4645,110 +3417,41 @@ object Dialect {
     * struct values resolve on the re-scan pass. Field access after the
     * rewrite (`({'a': x}).a`) is native Spark.
     */
-  private[fm] def rewriteStructLit(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 32) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val lit = literalMask(msk)
-      var i = 0
-      while (i < msk.length && !changed) {
-        if (msk.charAt(i) == '{' && !lit(i)) {
-          val close = matchBrace(msk, i)
-          if (close > i) {
-            val pairs = splitStructPairs(out, msk, lit, i + 1, close)
-            if (pairs != null && pairs.nonEmpty) {
-              // `MAP {'k': v, …}` (DuckDB map literal) → map(k, v, …);
-              // a bare brace literal → named_struct. The keyword scan
-              // must see MAP directly before the brace.
-              var b = i - 1
-              while (b >= 0 && msk.charAt(b).isWhitespace) b -= 1
-              val u = msk.toUpperCase
-              val isMap = b >= 2 && u.regionMatches(b - 2, "MAP", 0, 3) &&
-                isKeywordAt(u, b, "MAP")
-              val args = pairs.map { case (k, v) => s"$k, $v" }.mkString(", ")
-              if (isMap) {
-                out = out.substring(0, b - 2) + s"map($args)" +
-                  out.substring(close + 1)
-              } else {
-                out = out.substring(0, i) + s"named_struct($args)" +
-                  out.substring(close + 1)
-              }
-              changed = true
-            }
-          }
-        }
-        i += 1
+  private[fm] def rewriteStructLit(sql: String): String = Scan.fixpoint(sql) { s =>
+    import s.msk
+    (0 until msk.length).iterator.filter(i => msk.charAt(i) == '{' && !s.lit(i)).flatMap { i =>
+      val close = s.close(i)
+      val pairs = if (close > i) structPairs(s, i + 1, close) else None
+      pairs.filter(_.nonEmpty).map { ps =>
+        // `MAP {'k': v, …}` (DuckDB map literal) → map(k, v, …);
+        // a bare brace literal → named_struct. The keyword scan
+        // must see MAP directly before the brace.
+        val b = s.prevNonWs(i - 1)
+        val args = ps.map { case (k, v) => s"$k, $v" }.mkString(", ")
+        if (s.kwEndingAt(b, "MAP"))
+          s.sql.substring(0, b - 2) + s"map($args)" + s.sql.substring(close + 1)
+        else
+          s.sql.substring(0, i) + s"named_struct($args)" + s.sql.substring(close + 1)
       }
-    }
-    out
-  }
-
-  /** Matching `}` for the `{` at `open`, skipping string literals. */
-  private[fm] def matchBrace(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '{') depth += 1
-      else if (c == '}') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
+    }.nextOption()
   }
 
   /** `[from, until)` parsed as `'key': value` pairs at top level (parens,
-    * brackets, AND braces all count as nesting); null when any item does
+    * brackets, AND braces all count as nesting); None when any item does
     * not fit the shape (the brace is then not a struct literal).
     */
-  private def splitStructPairs(
-      out: String, msk: String, lit: Array[Boolean],
-      from: Int, until: Int): Seq[(String, String)] = {
-    val items = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    var depth = 0
-    var start = from
-    var i = from
-    while (i < until) {
-      val c = msk.charAt(i)
-      if (!lit(i)) {
-        if (c == '(' || c == '[' || c == '{') depth += 1
-        else if (c == ')' || c == ']' || c == '}') depth -= 1
-        else if (c == ',' && depth == 0) { items += ((start, i)); start = i + 1 }
-      }
-      i += 1
-    }
-    items += ((start, until))
-    val pairs = items.map { case (s0, e0) =>
+  private def structPairs(s: Scan, from: Int, until: Int): Option[Seq[(String, String)]] = {
+    val pairs = s.splitTop(from, until).map { case (s0, e0) =>
       // top-level ':' splits key from value; the key must be a complete
       // single-quoted literal
-      var colon = -1
-      var d = 0
-      var p = s0
-      while (p < e0 && colon < 0) {
-        val c = msk.charAt(p)
-        if (!lit(p)) {
-          if (c == '(' || c == '[' || c == '{') d += 1
-          else if (c == ')' || c == ']' || c == '}') d -= 1
-          else if (c == ':' && d == 0) colon = p
-        }
-        p += 1
-      }
-      if (colon < 0) null
-      else {
-        val k = out.substring(s0, colon).trim
-        val v = out.substring(colon + 1, e0).trim
-        if (k.length >= 2 && k.head == '\'' && k.last == '\'' &&
-          !k.substring(1, k.length - 1).contains('\'') && v.nonEmpty) (k, v)
-        else null
-      }
+      val colon = s.topIndexOf(':', s0, e0)
+      val k = if (colon < 0) "" else s.sql.substring(s0, colon).trim
+      val v = if (colon < 0) "" else s.sql.substring(colon + 1, e0).trim
+      if (k.length >= 2 && k.head == '\'' && k.last == '\'' &&
+        !k.substring(1, k.length - 1).contains('\'') && v.nonEmpty) Some((k, v))
+      else None
     }
-    if (pairs.exists(_ == null)) null else pairs.toSeq
+    if (pairs.forall(_.isDefined)) Some(pairs.flatten) else None
   }
 
   /** DuckDB bracket syntax (passthrough long tail), translated with the
@@ -4764,8 +3467,8 @@ object Dialect {
     *   `l[:b]` / `l[a:]`     → `slice(l, 1, b)` / `slice(l, a, size(l))`
     *
     * A bracket is INDEXING when it directly follows an expression tail —
-    * a non-keyword identifier, `)`, `]`, or a backquoted identifier —
-    * and a LITERAL otherwise (after SELECT, ',', an operator, ...). The
+    * a non-keyword identifier, `)`, `]`, or a quoted identifier — and a
+    * LITERAL otherwise (after SELECT, ',', an operator, ...). The
     * index base is recovered by walking backwards over `ident`,
     * `fn(...)`, `expr[...]`, and `.`-joined chains; an unsupported base
     * shape (e.g. a string literal) is left untouched and fails loudly at
@@ -4775,69 +3478,49 @@ object Dialect {
     * the earlier pass; a bracket with a top-level FOR is skipped
     * defensively anyway.
     */
-  private[fm] def rewriteBrackets(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 64) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = 0
-      while (i < msk.length && !changed) {
-        if (msk.charAt(i) == '[' && !lit(i)) {
-          val close = matchBracket(msk, i)
-          val isComp = close > i &&
-            findTopKeyword(u, msk, lit, i + 1, close, "FOR") >= 0
-          if (close > i && !isComp) {
-            var j = i - 1
-            while (j >= 0 && Character.isWhitespace(msk.charAt(j))) j -= 1
-            val baseStart = if (j < 0) -1 else baseStartAt(msk, u, lit, j)
-            if (baseStart >= 0) {
-              val base = out.substring(baseStart, j + 1)
-              val colonAt = topColonAt(msk, lit, i + 1, close)
-              val repl =
-                if (colonAt < 0) {
-                  val idx = out.substring(i + 1, close).trim
-                  // try_element_at, not element_at: DuckDB returns NULL
-                  // for an out-of-range index, while Spark's element_at
-                  // throws under ANSI mode (the default). Index 0 still
-                  // fails loudly in Spark where DuckDB yields NULL —
-                  // kept loud (0 is always a caller bug in 1-based code).
-                  if (idx.isEmpty) null else s"try_element_at($base, $idx)"
-                } else {
-                  // list_slice (DuckListSlice) carries the full DuckDB
-                  // bound semantics — negative = from the end, clamped
-                  // out-of-range (r12; the old slice() arithmetic broke
-                  // on a negative upper bound). Open bounds fill with
-                  // 1 / Int.MaxValue (clamped to size inside).
-                  val lo = out.substring(i + 1, colonAt).trim
-                  val hi = out.substring(colonAt + 1, close).trim
-                  if (lo.isEmpty && hi.isEmpty) s"slice($base, 1, size($base))"
-                  else if (lo.isEmpty) s"list_slice($base, 1, ($hi))"
-                  else if (hi.isEmpty) s"list_slice($base, ($lo), 2147483647)"
-                  else s"list_slice($base, ($lo), ($hi))"
-                }
-              if (repl != null) {
-                out = out.substring(0, baseStart) + repl + out.substring(close + 1)
-                changed = true
-              }
-            } else if (baseStart == -1) {
-              val body = out.substring(i + 1, close).trim
-              val repl = if (body.isEmpty) "array()" else s"array($body)"
-              out = out.substring(0, i) + repl + out.substring(close + 1)
-              changed = true
-            }
-            // baseStart == -2: indexing-like but unsupported base — leave
-            // the bracket for the parser to reject loudly
+  private[fm] def rewriteBrackets(sql: String): String = Scan.fixpoint(sql) { s =>
+    import s.msk
+    val out = s.sql
+    (0 until msk.length).iterator.filter(i => msk.charAt(i) == '[' && !s.lit(i)).flatMap { i =>
+      val close = s.close(i)
+      val isComp = close > i && s.topKeyword(i + 1, close, "FOR") >= 0
+      val j = s.prevNonWs(i - 1)
+      val baseStart = if (close <= i || isComp) -2 else if (j < 0) -1 else baseStartAt(s, j)
+      if (baseStart >= 0) {
+        val base = out.substring(baseStart, j + 1)
+        val colonAt = s.topIndexOf(':', i + 1, close)
+        val repl =
+          if (colonAt < 0) {
+            val idx = out.substring(i + 1, close).trim
+            // try_element_at, not element_at: DuckDB returns NULL
+            // for an out-of-range index, while Spark's element_at
+            // throws under ANSI mode (the default). Index 0 still
+            // fails loudly in Spark where DuckDB yields NULL —
+            // kept loud (0 is always a caller bug in 1-based code).
+            if (idx.isEmpty) None else Some(s"try_element_at($base, $idx)")
+          } else {
+            // list_slice (DuckListSlice) carries the full DuckDB
+            // bound semantics — negative = from the end, clamped
+            // out-of-range (r12; the old slice() arithmetic broke
+            // on a negative upper bound). Open bounds fill with
+            // 1 / Int.MaxValue (clamped to size inside).
+            val lo = out.substring(i + 1, colonAt).trim
+            val hi = out.substring(colonAt + 1, close).trim
+            Some(
+              if (lo.isEmpty && hi.isEmpty) s"slice($base, 1, size($base))"
+              else if (lo.isEmpty) s"list_slice($base, 1, ($hi))"
+              else if (hi.isEmpty) s"list_slice($base, ($lo), 2147483647)"
+              else s"list_slice($base, ($lo), ($hi))")
           }
-        }
-        i += 1
-      }
-    }
-    out
+        repl.map(r => out.substring(0, baseStart) + r + out.substring(close + 1))
+      } else if (baseStart == -1) {
+        val body = out.substring(i + 1, close).trim
+        val repl = if (body.isEmpty) "array()" else s"array($body)"
+        Some(out.substring(0, i) + repl + out.substring(close + 1))
+      } else None
+      // baseStart == -2: indexing-like but unsupported base (or not an
+      // index at all) — leave the bracket for the parser to reject loudly
+    }.nextOption()
   }
 
   /** Keywords that can directly precede an array literal's `[` — an
@@ -4857,82 +3540,39 @@ object Dialect {
     * shape is unsupported. Scans the MASKED text, skipping string
     * literals via `lit` (a paren inside `split(x, '(')` is data).
     */
-  private def baseStartAt(
-      msk: String, u: String, lit: Array[Boolean], end: Int): Int = {
-    def isIdent(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
+  private def baseStartAt(s: Scan, end: Int): Int = {
+    val msk = s.msk
     // start of the single segment ending at e, or -2 unsupported
-    def segStart(e: Int): Int = {
-      if (e < 0) return -2
-      val c = msk.charAt(e)
-      if (c == ')' || c == ']') {
-        var depth = 0
-        var k = e
-        while (k >= 0) {
-          val ch = msk.charAt(k)
-          if (!lit(k)) {
-            if (ch == ')' || ch == ']') depth += 1
-            else if (ch == '(' || ch == '[') {
-              depth -= 1
-              if (depth == 0) {
-                // include a function name directly before '('
-                var p = k - 1
-                while (p >= 0 && isIdent(msk.charAt(p))) p -= 1
-                return p + 1
-              }
-            }
-          }
-          k -= 1
+    def segStart(e: Int): Int =
+      if (e < 0) -2
+      else if (!s.lit(e) && (msk.charAt(e) == ')' || msk.charAt(e) == ']')) {
+        val open = s.open(e)
+        if (open < 0) -2
+        else {
+          // include a function name directly before '('
+          var p = open - 1
+          while (p >= 0 && !s.lit(p) && Scan.wordChar(msk.charAt(p))) p -= 1
+          p + 1
         }
-        -2
-      } else if (c == '`') {
-        var k = e - 1
-        while (k >= 0 && msk.charAt(k) != '`') k -= 1
-        if (k < 0) -2 else k
-      } else if (isIdent(c)) {
-        var p = e
-        while (p >= 0 && isIdent(msk.charAt(p))) p -= 1
-        p + 1
-      } else -2
-    }
+      } else {
+        val st = if (s.str(e)) -1 else s.identStart(e)
+        if (st < 0) -2 else st
+      }
     val c0 = msk.charAt(end)
-    if (isIdent(c0)) {
-      var p = end
-      while (p >= 0 && isIdent(msk.charAt(p))) p -= 1
-      val word = u.substring(p + 1, end + 1)
+    if (!s.lit(end) && Scan.wordChar(c0)) {
+      val word = s.u.substring(s.identStart(end), end + 1)
       // after a clause keyword or a bare number the bracket is a literal
       if (NonBaseKeywords(word) || word.forall(Character.isDigit)) return -1
-    } else if (c0 != ')' && c0 != ']' && c0 != '`') return -1
-    var s = segStart(end)
-    if (s < 0) return -2
+    } else if (c0 != ')' && c0 != ']' && !(s.lit(end) && !s.str(end))) return -1
+    var st = segStart(end)
+    if (st < 0) return -2
     // consume `.`-joined qualifier segments backwards (a.b.c[1])
-    while (s > 0 && msk.charAt(s - 1) == '.') {
-      val prev = segStart(s - 2)
-      if (prev < 0) return s
-      s = prev
+    while (st > 0 && msk.charAt(st - 1) == '.') {
+      val prev = segStart(st - 2)
+      if (prev < 0) return st
+      st = prev
     }
-    s
-  }
-
-  /** Top-level `:` between [from, until) — depth 0 for parens AND
-    * brackets, outside string literals; -1 if absent. `::` casts never
-    * appear at depth 0 inside an index bracket in practice; a first `:`
-    * of `::` would be matched, yielding a loud parse error downstream
-    * rather than a silent mis-slice.
-    */
-  private def topColonAt(
-      msk: String, lit: Array[Boolean], from: Int, until: Int): Int = {
-    var depth = 0
-    var i = from
-    while (i < until) {
-      val c = msk.charAt(i)
-      if (!lit(i)) {
-        if (c == '(' || c == '[') depth += 1
-        else if (c == ')' || c == ']') depth -= 1
-        else if (c == ':' && depth == 0) return i
-      }
-      i += 1
-    }
-    -1
+    st
   }
 
   /** DuckDB `COLUMNS(...)` star expansion, resolved against a known
@@ -4950,87 +3590,58 @@ object Dialect {
     * argument matching NO column throws (DuckDB errors too) — but only
     * when the occurrence is in an expandable position.
     */
-  def rewriteColumns(sql: String, columns: Seq[String]): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 16) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = u.indexOf("COLUMNS")
-      while (i >= 0 && !changed) {
-        if (!lit(i) && isKeywordAt(u, i + "COLUMNS".length - 1, "COLUMNS")) {
-          def itemPosOk(at: Int): Boolean = {
-            var b = at - 1
-            while (b >= 0 && Character.isWhitespace(msk.charAt(b))) b -= 1
-            b >= 0 && (msk.charAt(b) == ',' ||
-              isKeywordAt(u, b, "SELECT") || isKeywordAt(u, b, "DISTINCT"))
-          }
-          def tailOkAt(from: Int): Boolean = {
-            var t = from
-            while (t < msk.length && Character.isWhitespace(msk.charAt(t))) t += 1
-            t >= msk.length || msk.charAt(t) == ',' ||
-              (t + 3 < msk.length && u.regionMatches(t, "FROM", 0, 4) &&
-                isKeywordAt(u, t + 3, "FROM"))
-          }
-          var j = i - 1
-          while (j >= 0 && Character.isWhitespace(msk.charAt(j))) j -= 1
-          var k = i + "COLUMNS".length
-          while (k < msk.length && Character.isWhitespace(msk.charAt(k))) k += 1
-          if (k < msk.length && msk.charAt(k) == '(') {
-            val close = matchParen(msk, k)
-            // Resolve the POSITION first: the argument is only evaluated
-            // (and may only throw) for an occurrence that will actually
-            // expand — a COLUMNS in an untouched position keeps the
-            // pass-through-to-fail-at-parse contract even for a bad arg.
-            val barePos = close > k && itemPosOk(i) && tailOkAt(close + 1)
-            // one-arg function call: fn(COLUMNS(...)) as a select item
-            val fnPos: Option[(Int, Int)] =
-              if (close > k && !barePos && j >= 0 && msk.charAt(j) == '(') {
-                val fnOpen = j
-                var fe = fnOpen - 1
-                while (fe >= 0 && Character.isWhitespace(msk.charAt(fe))) fe -= 1
-                var fs = fe
-                while (fs >= 0 && (Character.isLetterOrDigit(msk.charAt(fs)) ||
-                  msk.charAt(fs) == '_')) fs -= 1
-                val fnClose = matchParen(msk, fnOpen)
-                var afterCols = close + 1
-                while (afterCols < msk.length &&
-                  Character.isWhitespace(msk.charAt(afterCols))) afterCols += 1
-                if (fs < fe && itemPosOk(fs + 1) && fnClose == afterCols &&
-                  tailOkAt(fnClose + 1)) Some((fs, fnClose))
-                else None
-              } else None
-            if (barePos || fnPos.isDefined) {
-              val arg = out.substring(k + 1, close).trim
-              columnsArg(arg, columns).foreach { matched =>
-                if (matched.isEmpty) throw new IllegalArgumentException(
-                  s"COLUMNS($arg) matched no column of [${columns.mkString(", ")}]")
-                if (barePos) {
-                  out = out.substring(0, i) + matched.mkString(", ") +
-                    out.substring(close + 1)
-                } else {
-                  val (fs, fnClose) = fnPos.get
-                  val fn = out.substring(fs + 1, j)
-                  // DuckDB names each expanded result after the COLUMN
-                  // (not `fn(col)`) — mirror that with explicit aliases,
-                  // which the oracle compare depends on
-                  out = out.substring(0, fs + 1) +
-                    matched.map(c => s"${fn.trim}($c) AS $c").mkString(", ") +
-                    out.substring(fnClose + 1)
-                }
-                changed = true
-              }
-            }
+  def rewriteColumns(sql: String, columns: Seq[String]): String = Scan.fixpoint(sql) { s =>
+    import s.msk
+    val out = s.sql
+    def itemPosOk(at: Int): Boolean = {
+      val b = s.prevNonWs(at - 1)
+      b >= 0 && (msk.charAt(b) == ',' || s.kwEndingAt(b, "SELECT") || s.kwEndingAt(b, "DISTINCT"))
+    }
+    def tailOkAt(from: Int): Boolean = {
+      val t = s.skipWs(from)
+      t >= msk.length || msk.charAt(t) == ',' || s.kwAt(t, "FROM")
+    }
+    s.sites("COLUMNS").flatMap { i =>
+      val j = s.prevNonWs(i - 1)
+      val k = s.skipWs(i + 7)
+      val close = if (k < msk.length && msk.charAt(k) == '(') s.close(k) else -1
+      // Resolve the POSITION first: the argument is only evaluated
+      // (and may only throw) for an occurrence that will actually
+      // expand — a COLUMNS in an untouched position keeps the
+      // pass-through-to-fail-at-parse contract even for a bad arg.
+      val barePos = close > k && itemPosOk(i) && tailOkAt(close + 1)
+      // one-arg function call: fn(COLUMNS(...)) as a select item
+      val fnPos: Option[(Int, Int)] =
+        if (close > k && !barePos && j >= 0 && msk.charAt(j) == '(') {
+          val fe = s.prevNonWs(j - 1)
+          var fs = fe
+          while (fs >= 0 && !s.lit(fs) && Scan.wordChar(msk.charAt(fs))) fs -= 1
+          val fnClose = s.close(j)
+          if (fs < fe && itemPosOk(fs + 1) && fnClose == s.skipWs(close + 1) &&
+            tailOkAt(fnClose + 1)) Some((fs, fnClose))
+          else None
+        } else None
+      if (!barePos && fnPos.isEmpty) None
+      else {
+        val arg = out.substring(k + 1, close).trim
+        columnsArg(arg, columns).map { matched =>
+          if (matched.isEmpty) throw new IllegalArgumentException(
+            s"COLUMNS($arg) matched no column of [${columns.mkString(", ")}]")
+          fnPos match {
+            case None =>
+              out.substring(0, i) + matched.mkString(", ") + out.substring(close + 1)
+            case Some((fs, fnClose)) =>
+              val fn = out.substring(fs + 1, j)
+              // DuckDB names each expanded result after the COLUMN
+              // (not `fn(col)`) — mirror that with explicit aliases,
+              // which the oracle compare depends on
+              out.substring(0, fs + 1) +
+                matched.map(c => s"${fn.trim}($c) AS $c").mkString(", ") +
+                out.substring(fnClose + 1)
           }
         }
-        if (!changed) i = u.indexOf("COLUMNS", i + 1)
       }
-    }
-    out
+    }.nextOption()
   }
 
   /** Resolve a COLUMNS(...) argument to the matched column list:
@@ -5106,6 +3717,24 @@ object Dialect {
     sb.toString
   }
 
+  /** End (exclusive) of the dotted name (`schema.table`) at `i`. */
+  private def dottedNameEnd(s: Scan, i: Int): Int = {
+    var j = i
+    while (j < s.length && !s.lit(j) &&
+      (Scan.wordChar(s.msk.charAt(j)) || s.msk.charAt(j) == '.')) j += 1
+    j
+  }
+
+  /** `(target, end)` of a statement that opens with keyword `kw` followed
+    * by a dotted table name; ("", -1) when the statement has another shape.
+    */
+  private def statementTarget(s: Scan, kw: String): (String, Int) = {
+    val p = s.skipWs(0)
+    val t0 = if (s.kwAt(p, kw)) s.skipWs(p + kw.length) else -1
+    val t1 = if (t0 < 0) -1 else dottedNameEnd(s, t0)
+    if (t1 > t0) (s.sql.substring(t0, t1), t1) else ("", -1)
+  }
+
   /** DuckDB simplified `PIVOT` statement → Spark SQL
     * (`PIVOT <table> ON <col> [IN (v, …)] USING <agg> [AS alias]
     * [GROUP BY g, …] [ORDER BY …] [LIMIT …]`).
@@ -5131,34 +3760,23 @@ object Dialect {
     * Statements that don't start with PIVOT pass through untouched.
     */
   def rewritePivot(sql: String, values: (String, String) => Seq[String]): String = {
-    val msk = maskComments(sql)
-    val u = msk.toUpperCase
-    val lit = literalMask(msk)
-    var p = 0
-    while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-    if (!(u.regionMatches(p, "PIVOT", 0, 5) && isKeywordAt(u, p + 4, "PIVOT")))
-      return sql
-    // table identifier
-    var t0 = p + 5
-    while (t0 < msk.length && msk.charAt(t0).isWhitespace) t0 += 1
-    var t1 = t0
-    while (t1 < msk.length && (Character.isLetterOrDigit(msk.charAt(t1)) ||
-      msk.charAt(t1) == '_' || msk.charAt(t1) == '.')) t1 += 1
-    if (t1 == t0) return sql
-    val table = sql.substring(t0, t1)
-    val onAt = findTopKeyword(u, msk, lit, t1, msk.length, "ON")
+    val s = new Scan(sql)
+    import s.msk
+    val (table, t1) = statementTarget(s, "PIVOT")
+    if (table.isEmpty) return sql
+    val onAt = s.topKeyword(t1, msk.length, "ON")
     if (onAt < 0) return sql
-    val usingAt = findTopKeyword(u, msk, lit, onAt + 2, msk.length, "USING")
+    val usingAt = s.topKeyword(onAt + 2, msk.length, "USING")
     if (usingAt < 0) return sql
     // ON span: column expression, optionally followed by IN (v, ...)
-    val inAt = findTopKeyword(u, msk, lit, onAt + 2, usingAt, "IN")
+    val inAt = s.topKeyword(onAt + 2, usingAt, "IN")
     val col = sql.substring(onAt + 2, if (inAt >= 0) inAt else usingAt).trim
     if (col.isEmpty || col.contains(",")) return sql
     val pinned: Option[Seq[String]] =
       if (inAt < 0) None
       else {
         val open = msk.indexOf('(', inAt)
-        val close = if (open >= 0) matchParen(msk, open) else -1
+        val close = if (open >= 0) s.close(open) else -1
         if (close < 0 || close > usingAt) return sql
         Some(sql.substring(open + 1, close).split(",").toSeq
           .map(_.trim).filter(_.nonEmpty).map { v =>
@@ -5169,23 +3787,22 @@ object Dialect {
       }
     // agg span ends at GROUP / ORDER / LIMIT (top level) or statement end
     val stops = Seq("GROUP", "ORDER", "LIMIT")
-      .map(k => findTopKeyword(u, msk, lit, usingAt + 5, msk.length, k))
+      .map(k => s.topKeyword(usingAt + 5, msk.length, k))
       .filter(_ >= 0)
     val aggEnd = if (stops.isEmpty) msk.length else stops.min
-    val aliasAt = findTopKeyword(u, msk, lit, usingAt + 5, aggEnd, "AS")
+    val aliasAt = s.topKeyword(usingAt + 5, aggEnd, "AS")
     val aggExpr = sql.substring(usingAt + 5, if (aliasAt >= 0) aliasAt else aggEnd).trim
     val alias =
       if (aliasAt < 0) None else Some(sql.substring(aliasAt + 2, aggEnd).trim)
-    val groupAt = findTopKeyword(u, msk, lit, usingAt + 5, msk.length, "GROUP")
+    val groupAt = s.topKeyword(usingAt + 5, msk.length, "GROUP")
     def esc(v: String) = v.replace("'", "''")
-    def tick(v: String) = "`" + v.replace("`", "``") + "`"
     val vals = pinned.getOrElse(values(table, col))
     require(vals.nonEmpty, s"PIVOT ON $col has no non-NULL values to pivot")
     if (groupAt >= 0) {
-      val byAt = findTopKeyword(u, msk, lit, groupAt + 5, msk.length, "BY")
+      val byAt = s.topKeyword(groupAt + 5, msk.length, "BY")
       require(byAt >= 0, "PIVOT: GROUP not followed by BY")
       val tailStops = Seq("ORDER", "LIMIT")
-        .map(k => findTopKeyword(u, msk, lit, byAt + 2, msk.length, k))
+        .map(k => s.topKeyword(byAt + 2, msk.length, k))
         .filter(_ >= 0)
       val grpEnd = if (tailStops.isEmpty) msk.length else tailStops.min
       val grp = sql.substring(byAt + 2, grpEnd).trim
@@ -5203,7 +3820,7 @@ object Dialect {
       val cells = vals.map { v =>
         val name = alias.fold(v)(a => s"${v}_$a")
         val d = if (distinct) "DISTINCT " else ""
-        s"$fn(${d}CASE WHEN CAST(($col) AS STRING) = '${esc(v)}' THEN $inner END) AS ${tick(name)}"
+        s"$fn(${d}CASE WHEN CAST(($col) AS STRING) = '${esc(v)}' THEN $inner END) AS ${Scan.tick(name)}"
       }
       s"SELECT $grp, ${cells.mkString(", ")} FROM $table GROUP BY $grp" +
         (if (tail.nonEmpty) s" $tail" else "")
@@ -5213,7 +3830,7 @@ object Dialect {
       require(col.forall(c => Character.isLetterOrDigit(c) || c == '_'),
         s"PIVOT without GROUP BY needs a plain column name to pivot on, got: $col")
       val tail = sql.substring(aggEnd).trim
-      val inList = vals.map(v => s"'${esc(v)}' AS ${tick(v)}").mkString(", ")
+      val inList = vals.map(v => s"'${esc(v)}' AS ${Scan.tick(v)}").mkString(", ")
       s"SELECT * FROM $table PIVOT ($aggExpr FOR $col IN ($inList))" +
         (if (tail.nonEmpty) s" $tail" else "")
     }
@@ -5229,31 +3846,21 @@ object Dialect {
     * start with UNPIVOT pass through untouched.
     */
   private[fm] def rewriteUnpivot(sql: String): String = {
-    val msk = maskComments(sql)
-    val u = msk.toUpperCase
-    val lit = literalMask(msk)
-    var p = 0
-    while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-    if (!(u.regionMatches(p, "UNPIVOT", 0, 7) && isKeywordAt(u, p + 6, "UNPIVOT")))
-      return sql
-    var t0 = p + 7
-    while (t0 < msk.length && msk.charAt(t0).isWhitespace) t0 += 1
-    var t1 = t0
-    while (t1 < msk.length && (Character.isLetterOrDigit(msk.charAt(t1)) ||
-      msk.charAt(t1) == '_' || msk.charAt(t1) == '.')) t1 += 1
-    if (t1 == t0) return sql
-    val table = sql.substring(t0, t1)
-    val onAt = findTopKeyword(u, msk, lit, t1, msk.length, "ON")
+    val s = new Scan(sql)
+    import s.msk
+    val (table, t1) = statementTarget(s, "UNPIVOT")
+    if (table.isEmpty) return sql
+    val onAt = s.topKeyword(t1, msk.length, "ON")
     if (onAt < 0) return sql
-    val intoAt = findTopKeyword(u, msk, lit, onAt + 2, msk.length, "INTO")
+    val intoAt = s.topKeyword(onAt + 2, msk.length, "INTO")
     if (intoAt < 0) return sql
     val cols = sql.substring(onAt + 2, intoAt).trim
     if (cols.isEmpty) return sql
-    val nameAt = findTopKeyword(u, msk, lit, intoAt + 4, msk.length, "NAME")
-    val valueAt = findTopKeyword(u, msk, lit, intoAt + 4, msk.length, "VALUE")
+    val nameAt = s.topKeyword(intoAt + 4, msk.length, "NAME")
+    val valueAt = s.topKeyword(intoAt + 4, msk.length, "VALUE")
     if (nameAt < 0 || valueAt < 0 || valueAt < nameAt) return sql
     val stops = Seq("ORDER", "LIMIT")
-      .map(k => findTopKeyword(u, msk, lit, valueAt + 5, msk.length, k))
+      .map(k => s.topKeyword(valueAt + 5, msk.length, k))
       .filter(_ >= 0)
     val valEnd = if (stops.isEmpty) msk.length else stops.min
     val nameCol = sql.substring(nameAt + 4, valueAt).trim
@@ -5288,21 +3895,11 @@ object Dialect {
     * COLUMNS/PIVOT.
     */
   def rewriteSummarize(sql: String, schema: Seq[(String, String)]): String = {
-    val msk = maskComments(sql)
-    val u = msk.toUpperCase
-    var p = 0
-    while (p < msk.length && msk.charAt(p).isWhitespace) p += 1
-    if (!(u.regionMatches(p, "SUMMARIZE", 0, 9) && isKeywordAt(u, p + 8, "SUMMARIZE")))
-      return sql
-    var t0 = p + 9
-    while (t0 < msk.length && msk.charAt(t0).isWhitespace) t0 += 1
-    var t1 = t0
-    while (t1 < msk.length && (Character.isLetterOrDigit(msk.charAt(t1)) ||
-      msk.charAt(t1) == '_' || msk.charAt(t1) == '.')) t1 += 1
-    if (t1 == t0 || msk.substring(t1).exists(!_.isWhitespace)) return sql
-    val table = sql.substring(t0, t1)
+    val s = new Scan(sql)
+    val (table, t1) = statementTarget(s, "SUMMARIZE")
+    if (table.isEmpty || s.skipWs(t1) < s.length) return sql
     require(schema.nonEmpty, s"SUMMARIZE $table: no columns resolved")
-    def tick(c: String) = "`" + c.replace("`", "``") + "`"
+    import Scan.tick
     // r17 plan restructure (same results, proved by the oracle row): N
     // COUNT(DISTINCT col) in one aggregate made Spark plan an Expand
     // (N+1 rows per input row, full width) into a SortAggregate chain
@@ -5391,19 +3988,15 @@ object Dialect {
     * the engine backs it with the session catalog.
     */
   def rewriteAsof(sql: String, schema: String => Seq[(String, String)]): String = {
-    val msk = maskComments(sql)
-    val u = msk.toUpperCase
-    val lit = literalMask(msk)
-    val asofAt = findTopKeyword(u, msk, lit, 0, msk.length, "ASOF")
+    val s = new Scan(sql)
+    import s.{msk, u}
+    val asofAt = s.topKeyword(0, msk.length, "ASOF")
     if (asofAt < 0) return sql
     // statement head must be exactly SELECT * FROM
     val head = u.take(asofAt).trim.replaceAll("\\s+", " ")
     def ident(from: Int): (String, Int) = {
-      var i = from
-      while (i < msk.length && msk.charAt(i).isWhitespace) i += 1
-      var j = i
-      while (j < msk.length && (Character.isLetterOrDigit(msk.charAt(j)) ||
-        msk.charAt(j) == '_' || msk.charAt(j) == '.')) j += 1
+      val i = s.skipWs(from)
+      val j = dottedNameEnd(s, i)
       (sql.substring(i, j), j)
     }
     if (!head.startsWith("SELECT * FROM ")) return sql
@@ -5415,24 +4008,24 @@ object Dialect {
       if (aliasA0.isEmpty || aliasA0.equalsIgnoreCase("ASOF")) ta else aliasA0
     if (!aliasA0.equalsIgnoreCase("ASOF") && p2 > asofAt) return sql
     var q = asofAt + 4
-    val leftAt = findTopKeyword(u, msk, lit, q, msk.length, "LEFT")
+    val leftAt = s.topKeyword(q, msk.length, "LEFT")
     val isLeft = leftAt >= 0 && u.substring(q, leftAt).isBlank
     if (isLeft) q = leftAt + 4
-    val joinAt = findTopKeyword(u, msk, lit, q, msk.length, "JOIN")
+    val joinAt = s.topKeyword(q, msk.length, "JOIN")
     if (joinAt < 0 || !u.substring(q, joinAt).isBlank) return sql
     val (tb, p3) = ident(joinAt + 4)
-    val onAt = findTopKeyword(u, msk, lit, p3, msk.length, "ON")
+    val onAt = s.topKeyword(p3, msk.length, "ON")
     if (onAt < 0) return sql
     val (aliasB0, _) = ident(p3)
     val aliasB =
       if (aliasB0.isEmpty || aliasB0.equalsIgnoreCase("ON")) tb else aliasB0
     // conditions: <q>.<c> OP <q>.<c> AND <q>.<c> OP <q>.<c>, then tail
     val stops = Seq("ORDER", "LIMIT")
-      .map(k => findTopKeyword(u, msk, lit, onAt + 2, msk.length, k))
+      .map(k => s.topKeyword(onAt + 2, msk.length, k))
       .filter(_ >= 0)
     val onEnd = if (stops.isEmpty) msk.length else stops.min
     val tail = sql.substring(onEnd).trim
-    val andAt = findTopKeyword(u, msk, lit, onAt + 2, onEnd, "AND")
+    val andAt = s.topKeyword(onAt + 2, onEnd, "AND")
     if (andAt < 0) return sql
     val condRe =
       "^\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*(=|>=|<=)\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\.\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
@@ -5466,7 +4059,7 @@ object Dialect {
     val bCols = schema(tb)
     require(aCols.nonEmpty && bCols.nonEmpty,
       s"ASOF JOIN: could not resolve columns of $ta / $tb")
-    def tick(c: String) = "`" + c.replace("`", "``") + "`"
+    import Scan.tick
     val structTy =
       bCols.map { case (c, t) => s"$c: $t" }.mkString("STRUCT<", ", ", ">")
     val aProbe = aCols.map { case (c, _) => tick(c) }.mkString(", ")
@@ -5494,47 +4087,42 @@ object Dialect {
        |${tail}""".stripMargin.trim
   }
 
-  private[fm] def rewriteListComp(sql: String): String = {
-    var out = sql
-    var guard = 0
-    var changed = true
-    while (changed && guard < 32) {
-      changed = false
-      guard += 1
-      val msk = maskComments(out)
-      val u = msk.toUpperCase
-      val lit = literalMask(msk)
-      var i = 0
-      while (i < msk.length && !changed) {
-        if (msk.charAt(i) == '[' && !lit(i)) {
-          val close = matchBracket(msk, i)
-          if (close > i) {
-            val forAt = findTopKeyword(u, msk, lit, i + 1, close, "FOR")
-            if (forAt >= 0) {
-              val inAt = findTopKeyword(u, msk, lit, forAt + 3, close, "IN")
-              if (inAt >= 0) {
-                val ifAt = findTopKeyword(u, msk, lit, inAt + 2, close, "IF")
-                val expr = out.substring(i + 1, forAt).trim
-                val v = out.substring(forAt + 3, inAt).trim
-                val listEnd = if (ifAt >= 0) ifAt else close
-                val list = out.substring(inAt + 2, listEnd).trim
-                if (expr.nonEmpty && list.nonEmpty &&
-                  v.nonEmpty && v.forall(c => Character.isLetterOrDigit(c) || c == '_')) {
-                  val repl =
-                    if (ifAt >= 0) {
-                      val cond = out.substring(ifAt + 2, close).trim
-                      s"transform(filter($list, $v -> $cond), $v -> $expr)"
-                    } else s"transform($list, $v -> $expr)"
-                  out = out.substring(0, i) + repl + out.substring(close + 1)
-                  changed = true
-                }
-              }
-            }
-          }
-        }
-        i += 1
+  /** DuckDB list comprehensions (passthrough long tail) →
+    * `transform`/`filter` higher-order functions:
+    *
+    *   `[expr FOR x IN list]`         → `transform(list, x -> expr)`
+    *   `[expr FOR x IN list IF cond]` → `transform(filter(list, x -> cond),
+    *                                               x -> expr)`
+    *
+    * Only brackets whose body contains a top-level `FOR` are touched —
+    * plain `[1, 2]` array literals and `arr[i]` indexing pass through
+    * untouched (their 1-based-vs-0-based semantics must fail loudly at
+    * parse time, not be silently shifted). Nested comprehensions resolve
+    * outermost-first; the re-scan loop picks up the inner ones on the
+    * next pass.
+    */
+  private[fm] def rewriteListComp(sql: String): String = Scan.fixpoint(sql) { s =>
+    import s.msk
+    val out = s.sql
+    (0 until msk.length).iterator.filter(i => msk.charAt(i) == '[' && !s.lit(i)).flatMap { i =>
+      val close = s.close(i)
+      val forAt = if (close > i) s.topKeyword(i + 1, close, "FOR") else -1
+      val inAt = if (forAt >= 0) s.topKeyword(forAt + 3, close, "IN") else -1
+      if (inAt < 0) None
+      else {
+        val ifAt = s.topKeyword(inAt + 2, close, "IF")
+        val expr = out.substring(i + 1, forAt).trim
+        val v = out.substring(forAt + 3, inAt).trim
+        val list = out.substring(inAt + 2, if (ifAt >= 0) ifAt else close).trim
+        if (expr.nonEmpty && list.nonEmpty && v.nonEmpty && v.forall(Scan.wordChar)) {
+          val repl =
+            if (ifAt >= 0) {
+              val cond = out.substring(ifAt + 2, close).trim
+              s"transform(filter($list, $v -> $cond), $v -> $expr)"
+            } else s"transform($list, $v -> $expr)"
+          Some(out.substring(0, i) + repl + out.substring(close + 1))
+        } else None
       }
-    }
-    out
+    }.nextOption()
   }
 }

@@ -62,10 +62,12 @@ final class QueryEngine(
   /** The dialect surface runs on a PRIVATE session clone: same
     * SparkContext, shared cache manager (persisted corpus frames still
     * hit), but its own parser conf and temp-view catalog. The
-    * raw-literal parser flag (DuckDB keeps backslashes in '\.md') is
-    * set once here and never touches the user's session, and the
-    * `files` view name can't collide with other engine instances or
-    * other threads using the shared session (advice r9).
+    * raw-literal parser flag (DuckDB keeps backslashes in '\.md') and
+    * the double-quoted-identifier flag (DuckDB reads `"title"` as a
+    * column, not a string) are set once here and never touch the
+    * user's session, and the `files` view name can't collide with
+    * other engine instances or other threads using the shared session
+    * (advice r9).
     */
   private val sqlSession: SparkSession = {
     val s = spark.newSession()
@@ -74,6 +76,7 @@ final class QueryEngine(
     for (k <- Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone"))
       spark.conf.getOption(k).foreach(s.conf.set(k, _))
     s.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    s.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
     Dialect.register(s)
     // Builtin-name overrides (regexp_replace, element_at) install ONLY
     // here: the user's session keeps Spark's own semantics (review r10

@@ -61,7 +61,7 @@ object TableFunctions {
   }
 
   private val FnNames = Seq(
-    // longest-first is irrelevant (isKeywordAt enforces word boundaries)
+    // longest-first is irrelevant (keyword sites are whole words)
     "READ_PARQUET", "PARQUET_SCAN", "READ_CSV_AUTO", "READ_CSV",
     "READ_JSON_AUTO", "READ_JSON", "READ_NDJSON_AUTO", "READ_NDJSON",
     "GLOB")
@@ -72,65 +72,20 @@ object TableFunctions {
     * are almost always literals, and a dynamic path cannot be registered
     * ahead of execution).
     */
-  def rewrite(sql: String, resolve: Call => String): String = {
-    val sb = new StringBuilder(sql)
-    var changed = true
-    var guard = 0
-    while (changed && guard < 200) {
-      changed = false
-      guard += 1
-      val msk = Dialect.maskComments(sb.toString)
-      val u = msk.toUpperCase
-      val lit = Dialect.literalMask(msk)
-      var best = -1
-      var bestFn = ""
-      for (fn <- FnNames) {
-        var i = u.indexOf(fn)
-        while (i >= 0) {
-          if (!lit(i) && Dialect.isKeywordAt(u, i + fn.length - 1, fn) &&
-            (best < 0 || i < best)) {
-            var k = i + fn.length
-            while (k < msk.length && msk.charAt(k).isWhitespace) k += 1
-            if (k < msk.length && msk.charAt(k) == '(' &&
-              Dialect.fromContext(u, i - 1)) {
-              best = i; bestFn = fn
-            }
-          }
-          i = u.indexOf(fn, i + 1)
-        }
-      }
-      if (best >= 0) {
-        var open = best + bestFn.length
-        while (msk.charAt(open) != '(') open += 1
-        val close = Dialect.matchParen(msk, open)
-        require(close > open, s"unbalanced parens in ${bestFn.toLowerCase}(…)")
-        val call = parseCall(bestFn.toLowerCase, sb.substring(open + 1, close))
-        val view = resolve(call)
-        sb.replace(best, close + 1, view)
-        changed = true
-      }
+  def rewrite(sql: String, resolve: Call => String): String = Scan.fixpoint(sql) { s =>
+    val calls = FnNames.flatMap { fn =>
+      s.sites(fn).find { i =>
+        val k = s.skipWs(i + fn.length)
+        k < s.length && s.msk.charAt(k) == '(' && s.inFrom(i - 1)
+      }.map(i => (i, fn))
     }
-    sb.toString
-  }
-
-  /** Split `s` on commas at depth 0 of (), [], {} and outside '…'. */
-  private[fm] def splitArgs(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0
-    var inStr = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(' || c == '[' || c == '{') depth += 1
-      else if (c == ')' || c == ']' || c == '}') depth -= 1
-      else if (c == ',' && depth == 0) { out += s.substring(start, i); start = i + 1 }
-      i += 1
+    calls.minByOption(_._1).map { case (at, fn) =>
+      val open = s.skipWs(at + fn.length)
+      val close = s.close(open)
+      require(close > open, s"unbalanced parens in ${fn.toLowerCase}(…)")
+      val view = resolve(parseCall(fn.toLowerCase, s.sql.substring(open + 1, close)))
+      s.sql.substring(0, at) + view + s.sql.substring(close + 1)
     }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
   }
 
   private def unquote(t: String): Option[String] = {
@@ -141,13 +96,13 @@ object TableFunctions {
   }
 
   private[fm] def parseCall(fn: String, argsStr: String): Call = {
-    val args = splitArgs(argsStr)
+    val args = Scan.items(argsStr)
     require(args.nonEmpty, s"$fn requires a path argument")
     val first = args.head
     val paths: Seq[String] =
       if (first.startsWith("[")) {
         require(first.endsWith("]"), s"$fn: unterminated path list")
-        splitArgs(first.substring(1, first.length - 1)).map { e =>
+        Scan.items(first.substring(1, first.length - 1)).map { e =>
           unquote(e).getOrElse(
             throw new IllegalArgumentException(
               s"$fn: path list elements must be string literals, got: $e"))
@@ -159,27 +114,15 @@ object TableFunctions {
     var opts = Map.empty[String, String]
     var columns: Option[Seq[(String, String)]] = None
     for (a <- args.tail) {
-      val eq = {
-        // named-arg separator: `name = value` (also `name := value`)
-        var d = 0; var inS = false; var idx = -1; var i = 0
-        while (i < a.length && idx < 0) {
-          val c = a.charAt(i)
-          if (inS) { if (c == '\'') inS = false }
-          else if (c == '\'') inS = true
-          else if (c == '(' || c == '[' || c == '{') d += 1
-          else if (c == ')' || c == ']' || c == '}') d -= 1
-          else if (c == '=' && d == 0) idx = i
-          i += 1
-        }
-        idx
-      }
+      // named-arg separator: `name = value` (also `name := value`)
+      val eq = new Scan(a).topIndexOf('=', 0, a.length)
       require(eq > 0, s"$fn: expected name=value argument, got: $a")
       val name = a.substring(0, eq).stripSuffix(":").trim.toLowerCase
       val value = a.substring(eq + 1).trim
       if (name == "columns") {
         require(value.startsWith("{") && value.endsWith("}"),
           s"$fn: columns must be a {'name': 'TYPE'} struct")
-        columns = Some(splitArgs(value.substring(1, value.length - 1)).map { p =>
+        columns = Some(Scan.items(value.substring(1, value.length - 1)).map { p =>
           val c = p.indexOf(':')
           require(c > 0, s"$fn: bad columns entry: $p")
           val k = unquote(p.substring(0, c)).getOrElse(p.substring(0, c).trim)

@@ -462,7 +462,7 @@ object FrontmatterQueries {
         |ORDER BY path LIMIT 30""".stripMargin),
 
     // DuckDB's bare SEMI JOIN / ANTI JOIN keywords (left variants) —
-    // Dialect.rewriteSemiAnti → Spark LEFT SEMI / LEFT ANTI JOIN.
+    // Spark 4.1 parses the unprefixed forms natively, no rewrite.
     "q_fm_semijoin" -> run(
       """SELECT f.path, f.lang FROM files f
         |SEMI JOIN (SELECT path AS p FROM files WHERE lang IN ('en','fr')) e

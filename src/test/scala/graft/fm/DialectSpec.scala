@@ -532,20 +532,59 @@ class DialectSpec extends AnyFunSuite {
     assert(Dialect.rewriteOrderedAgg(once) == once)
   }
 
-  test("bare SEMI/ANTI JOIN gain the LEFT prefix; prefixed forms untouched") {
-    assert(Dialect.rewriteSemiAnti("SELECT * FROM a SEMI JOIN b ON a.x = b.x")
-      == "SELECT * FROM a LEFT SEMI JOIN b ON a.x = b.x")
-    assert(Dialect.rewriteSemiAnti("SELECT * FROM a ANTI JOIN b ON a.x = b.x")
-      == "SELECT * FROM a LEFT ANTI JOIN b ON a.x = b.x")
-    val q = "SELECT * FROM a LEFT SEMI JOIN b ON a.x = b.x"
-    assert(Dialect.rewriteSemiAnti(q) == q)
-    val r = "SELECT * FROM a RIGHT ANTI JOIN b ON a.x = b.x"
-    assert(Dialect.rewriteSemiAnti(r) == r)
-    // identifiers containing the keyword are not joins
-    val id = "SELECT semicolon, anti_x, xsemi FROM t JOIN u ON t.x = u.x"
-    assert(Dialect.rewriteSemiAnti(id) == id)
-    val once = Dialect.rewriteSemiAnti("SELECT * FROM a SEMI JOIN b ON a.x = b.x ANTI JOIN c ON a.y = c.y")
-    assert(Dialect.rewriteSemiAnti(once) == once)
+  test("quoted tokens and comments come out of every rewrite byte-identical") {
+    // each token holds text the scanner must not read as syntax
+    val tokens = Seq(
+      "'it''s -- not /* a ( [ comment'", "'qualify from semi unnest ) ]'",
+      "\"it's\"", "\"a--b\"", "\"q\"\"d\"", "\"qualify\"", "\"from (\"",
+      "\"semi [\"", "`unnest(`", "`a/*b`", "`x``y`",
+      "/* it's ( [ qualify */", "-- from ' unnest (\n")
+    // (statement shape, text the rewrite must have produced)
+    val shapes: Seq[(String => String, String)] = Seq(
+      (t => s"SELECT title, $t AS c FROM files " +
+        "QUALIFY row_number() OVER (PARTITION BY title ORDER BY path) = 1",
+        "__graft_qualify"),
+      (t => s"SELECT tag, $t AS c FROM files, " +
+        "UNNEST(from_json(tags, '[\"VARCHAR\"]')) AS u(tag)",
+        "LATERAL VIEW explode(from_json(tags, 'array<string>')) u AS tag"),
+      (t => s"FROM files SELECT $t AS c, [x * 2 FOR x IN [1, 2]] AS l",
+        "transform(array(1, 2), x -> x * 2)"),
+      (t => s"SELECT DISTINCT ON (title) * EXCLUDE (tags), $t AS c FROM files ORDER BY title",
+        "__graft_rn"),
+      (t => s"SELECT tags ->> 0 AS t0, $t AS c, CAST(n AS VARCHAR) AS v FROM files",
+        "json_extract_string(tags, 0)"),
+      (t => s"SELECT {'k': 1} AS s, $t AS c, x // 2 AS d FROM files",
+        "named_struct('k', 1)"),
+      (t => s"SELECT f.path, $t AS c FROM files f SEMI JOIN files g ON f.path = g.path",
+        "SEMI JOIN files g"))
+    for ((shape, produced) <- shapes; t <- tokens) {
+      val in = shape(t)
+      val out = Dialect.rewrite(in)
+      assert(out.contains(t), s"token lost: $t\n  in:  $in\n  out: $out")
+      assert(out.contains(produced), s"rewrite missed: $produced\n  in:  $in\n  out: $out")
+    }
+    for (t <- tokens) {
+      val in = s"SELECT $t AS c FROM read_csv('d.csv', header = true), glob('*.md') g"
+      val out = TableFunctions.rewrite(in, call => s"v_${call.fn}")
+      assert(out == s"SELECT $t AS c FROM v_read_csv, v_glob g", s"in: $in")
+    }
+  }
+
+  test("SEMI/ANTI joins pass through unrewritten (Spark parses them natively)") {
+    for (q <- Seq(
+      "SELECT * FROM a SEMI JOIN b ON a.x = b.x",
+      "SELECT * FROM a LEFT ANTI JOIN b ON a.x = b.x",
+      "SELECT semicolon, anti_x FROM t JOIN u ON t.x = u.x"))
+      assert(Dialect.rewrite(q) == q)
+  }
+
+  test("two select-list UNNESTs are refused, not cross-multiplied") {
+    val e = intercept[IllegalArgumentException](
+      Dialect.rewrite("SELECT UNNEST(a) AS x, UNNEST(b) AS y FROM t"))
+    assert(e.getMessage.contains("UNNEST"))
+    // one per select list is fine, also next to a subquery with its own
+    val ok = "SELECT UNNEST(a) AS x, (SELECT max(y) FROM (SELECT UNNEST(b) AS y)) AS m FROM t"
+    assert(Dialect.rewrite(ok) == ok)
   }
 
   test("UNION BY NAME desugars to aligned projections") {

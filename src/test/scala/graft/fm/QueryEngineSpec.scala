@@ -599,4 +599,66 @@ class QueryEngineSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       e.query("**/*.md", "COPY files TO 'x.csv' (DELIMITER ';')"))
   }
+
+  test("SEMI and ANTI joins run natively: bare, LEFT-prefixed, chained") {
+    val e = eng(corpus(
+      "a.md" -> "---\ngrp: x\nsemicolon: s1\nanti_x: t1\n---\n",
+      "b.md" -> "---\ngrp: y\nsemicolon: s2\nanti_x: t2\n---\n",
+      "c.md" -> "---\ngrp: x\n---\n"))
+    def col(sql: String): Seq[String] =
+      e.query("**/*.md", sql).results.collect().map(_.getString(0)).toSeq
+    val xs = "(SELECT path AS p FROM files WHERE grp = 'x') g"
+    for (prefix <- Seq("", "LEFT ")) {
+      assert(col(s"SELECT f.path FROM files f ${prefix}SEMI JOIN $xs ON f.path = g.p " +
+        "ORDER BY f.path") == Seq("a.md", "c.md"))
+      assert(col(s"SELECT f.path FROM files f ${prefix}ANTI JOIN $xs ON f.path = g.p " +
+        "ORDER BY f.path") == Seq("b.md"))
+    }
+    assert(col("SELECT path FROM files AS f SEMI JOIN " +
+      "(SELECT path FROM files WHERE grp = 'y') g USING (path)") == Seq("b.md"))
+    // chained SEMI then ANTI
+    assert(col(s"SELECT f.path FROM files f SEMI JOIN $xs ON f.path = g.p " +
+      "ANTI JOIN (SELECT path AS q FROM files WHERE semicolon IS NULL) h " +
+      "ON f.path = h.q ORDER BY f.path") == Seq("a.md"))
+    // identifiers that contain the keywords are plain columns
+    assert(col("SELECT f.semicolon, f.anti_x FROM files f JOIN files g ON f.path = g.path " +
+      "WHERE f.semicolon IS NOT NULL ORDER BY f.semicolon") == Seq("s1", "s2"))
+    // RIGHT SEMI has no Spark spelling: it fails at parse, never flips sides
+    intercept[Exception](col(s"SELECT g.p FROM files f RIGHT SEMI JOIN $xs ON f.path = g.p"))
+  }
+
+  test("double-quoted identifiers name columns, as in DuckDB") {
+    val e = eng(corpus(threeDocs: _*))
+    def col(sql: String): Seq[String] =
+      e.query("**/*.md", sql).results.collect().map(r => String.valueOf(r.get(0))).toSeq
+    assert(col("""SELECT "title" FROM files ORDER BY "path"""") == Seq("Alpha", "Beta", "Gamma"))
+    assert(col("""SELECT f."title" FROM files f WHERE "title" = 'Beta'""") == Seq("Beta"))
+    assert(e.query("**/*.md", """SELECT title AS "T", path AS "q""d" FROM files""").columns ==
+      Seq("T", "q\"d"))
+    // keyword-named aliases and aliases holding quote or comment
+    // characters neither trip nor hide the QUALIFY rewrite
+    assert(col("""SELECT title AS "qualify" FROM files ORDER BY 1""") ==
+      Seq("Alpha", "Beta", "Gamma"))
+    for (alias <- Seq("\"it's\"", "\"a--b\"", "\"x/*y\""))
+      assert(col(s"SELECT title AS $alias FROM files " +
+        "QUALIFY row_number() OVER (ORDER BY title DESC) = 1") == Seq("Gamma"))
+    // double quotes inside string literals stay data
+    assert(col("""SELECT '["a"]' AS j FROM files LIMIT 1""") == Seq("[\"a\"]"))
+  }
+
+  test("select-list UNNEST: one row per element, none for empty or NULL lists") {
+    val e = eng(corpus(
+      "a.md" -> "---\ntags:\n- x\n- y\n---\n",
+      "b.md" -> "---\ntags: []\n---\n",
+      "c.md" -> "---\ntitle: none\n---\n"))
+    val rows = e.query("**/*.md", "SELECT path, UNNEST(from_json(tags, '[\"VARCHAR\"]')) AS tag " +
+      "FROM files ORDER BY path, tag").results.collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+    assert(rows == Seq(("a.md", "x"), ("a.md", "y")))
+    // DuckDB zips two select-list UNNESTs; Spark would cross-multiply
+    val err = intercept[IllegalArgumentException](e.query("**/*.md",
+      "SELECT UNNEST(from_json(tags, '[\"VARCHAR\"]')) AS t1, " +
+        "UNNEST(from_json(tags, '[\"VARCHAR\"]')) AS t2 FROM files"))
+    assert(err.getMessage.contains("UNNEST"))
+  }
 }

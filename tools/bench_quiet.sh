@@ -53,6 +53,14 @@ except Exception:
     cfg["rev"] = ""
 cur = json.load(open('BENCH_FULL.json')) if os.path.exists('BENCH_FULL.json') else None
 meta = json.load(open('BENCH_FULL.meta.json')) if os.path.exists('BENCH_FULL.meta.json') else None
+if cur is not None and meta is None and cur.get("sf") == cfg["sf"]:
+    # A record that predates the meta file but was taken on the same sf:
+    # backfill its meta (the record does not name its core count, so the
+    # configured one is assumed) and let it compete monotonically,
+    # instead of being replaced outright by whatever this attempt scored.
+    meta = {"cpus": cfg["cpus"], "sf": cur["sf"], "rev": ""}
+    json.dump(meta, open('BENCH_FULL.meta.json', 'w'), indent=0)
+    print(f"[bench_quiet] backfilled meta for the current record: {meta}")
 same_cfg = (cur is not None and meta is not None
             and meta.get("cpus") == cfg["cpus"] and meta.get("sf") == cfg["sf"])
 print(f"[bench_quiet] try: total {new['value']} floor {new['noise_floor_sec']} "
