@@ -979,8 +979,8 @@ object Dialect {
   private[fm] def rewriteTrailingBackslash(sql: String): String = Scan.fixpoint(sql) { s =>
     import s.{msk, str}
     // closing quote of a literal whose last content char is '\'
-    (2 until msk.length).find(i => msk.charAt(i) == '\'' && str(i - 1) &&
-      msk.charAt(i - 1) == '\\' && (i + 1 >= msk.length || !str(i + 1))).map { i =>
+    Iterator.iterate(msk.indexOf("\\'"))(p => msk.indexOf("\\'", p + 1)).takeWhile(_ >= 0)
+      .map(_ + 1).find(i => str(i - 1) && (i + 1 >= msk.length || !str(i + 1))).map { i =>
       var k = i - 1
       while (k > 0 && msk.charAt(k - 1) == '\\' && str(k - 1)) k -= 1
       val run = i - k
@@ -1213,9 +1213,7 @@ object Dialect {
     * rewrite.
     */
   private[fm] def rewriteJsonOps(sql: String): String = Scan.fixpoint(sql) { s =>
-    (0 until s.length - 1).iterator
-      .filter(i => !s.lit(i) && s.msk.charAt(i) == '-' && s.msk.charAt(i + 1) == '>')
-      .flatMap(jsonArrowAt(s, _)).nextOption()
+    s.occurrences("->").flatMap(jsonArrowAt(s, _)).nextOption()
   }
 
   /** The statement with the arrow at `i` rewritten to its json_extract
@@ -1365,9 +1363,7 @@ object Dialect {
       else None
     }
     // `expr::TYPE`
-    (0 until msk.length - 1).iterator
-      .filter(i => msk.charAt(i) == ':' && msk.charAt(i + 1) == ':' && !s.lit(i))
-      .flatMap(i => retype(s.skipWs(i + 2))).nextOption()
+    s.occurrences("::").flatMap(i => retype(s.skipWs(i + 2))).nextOption()
       .orElse {
         // last top-level `AS <type>` inside CAST(...) / TRY_CAST(...)
         (s.sites("CAST") ++ s.sites("TRY_CAST")).flatMap { k =>
@@ -1463,7 +1459,6 @@ object Dialect {
     * parenthesized subqueries (`SELECT * FROM (FROM t WHERE …)`).
     */
   private[fm] def rewriteFromFirst(sql: String): String = Scan.fixpoint(sql) { s =>
-    import s.msk
     val text = s.sql
     // (a) statement start (after optional WITH clause)
     val mainAt = mainQueryStart(s)
@@ -1471,7 +1466,7 @@ object Dialect {
       Some(text.substring(0, mainAt) + fromFirstToSelect(text.substring(mainAt)))
     else {
       // (b) parenthesized subquery whose first token is FROM
-      (0 until msk.length).iterator.filter(i => msk.charAt(i) == '(' && !s.lit(i)).flatMap { i =>
+      s.occurrences("(").flatMap { i =>
         val j = s.skipWs(i + 1)
         val close = if (s.kwAt(j, "FROM")) s.close(i) else -1
         if (close > i)
@@ -1813,27 +1808,21 @@ object Dialect {
     // `abs(x)`. The bare `@x` spelling stays untouched for Spark's
     // parser to reject loudly (no silent guess at operand extent).
     val withAbs = Scan.fixpoint(rewritePower(sql)) { s =>
-      (0 until s.length).find { i =>
-        s.msk.charAt(i) == '@' && !s.lit(i) && {
-          val j = s.skipWs(i + 1)
-          j < s.length && s.msk.charAt(j) == '('
-        }
+      s.occurrences("@").find { i =>
+        val j = s.skipWs(i + 1)
+        j < s.length && s.msk.charAt(j) == '('
       }.map(i => s.sql.substring(0, i) + "abs" + s.sql.substring(i + 1))
     }
     // `//` → DIV: same token length not needed; straight splice.
     Scan.fixpoint(withAbs) { s =>
-      (0 until s.length - 1).find(i =>
-        s.msk.charAt(i) == '/' && s.msk.charAt(i + 1) == '/' && !s.lit(i))
+      s.occurrences("//").nextOption()
         .map(i => s.sql.substring(0, i) + " DIV " + s.sql.substring(i + 2))
     }
   }
 
   private def rewritePower(sql: String): String = Scan.fixpoint(sql) { s =>
     import s.{msk, u}
-    (0 until msk.length).iterator.filter { i =>
-      val c = msk.charAt(i)
-      !s.lit(i) && ((c == '*' && i + 1 < msk.length && msk.charAt(i + 1) == '*') || c == '^')
-    }.flatMap { i =>
+    (s.occurrences("**") ++ s.occurrences("^")).toSeq.sorted.iterator.flatMap { i =>
       val opEnd = if (msk.charAt(i) == '^') i + 1 else i + 2
       // left operand: base segment, absorbing a unary sign in prefix
       // position (DuckDB: -2 ** 2 = 4, the sign binds tighter)
@@ -2134,7 +2123,6 @@ object Dialect {
   def rewriteDescribe(
       sql: String, schemaOf: String => Seq[(String, String)]): String =
     Scan.fixpoint(sql) { s =>
-      import s.msk
       def kwLen(i: Int): Int =
         if (s.kwAt(i, "DESCRIBE")) 8 else if (s.kwAt(i, "DESC")) 4 else -1
       // splice [from, end) where the region is `DESCRIBE <target>`
@@ -2163,8 +2151,7 @@ object Dialect {
         // DESCRIBE spelling here: a parenthesized expression over a column
         // named `desc` must not trigger (the DESC shorthand stays
         // statement-level, like DuckDB's own contextual resolution).
-        (0 until msk.length).iterator.filter(i => msk.charAt(i) == '(' && !s.lit(i))
-          .flatMap { i =>
+        s.occurrences("(").flatMap { i =>
             val j = s.skipWs(i + 1)
             val close = if (kwLen(j) == 8) s.close(i) else -1
             if (close > i) tryAt(j, close) else None
@@ -3418,8 +3405,7 @@ object Dialect {
     * rewrite (`({'a': x}).a`) is native Spark.
     */
   private[fm] def rewriteStructLit(sql: String): String = Scan.fixpoint(sql) { s =>
-    import s.msk
-    (0 until msk.length).iterator.filter(i => msk.charAt(i) == '{' && !s.lit(i)).flatMap { i =>
+    s.occurrences("{").flatMap { i =>
       val close = s.close(i)
       val pairs = if (close > i) structPairs(s, i + 1, close) else None
       pairs.filter(_.nonEmpty).map { ps =>
@@ -3479,9 +3465,8 @@ object Dialect {
     * defensively anyway.
     */
   private[fm] def rewriteBrackets(sql: String): String = Scan.fixpoint(sql) { s =>
-    import s.msk
     val out = s.sql
-    (0 until msk.length).iterator.filter(i => msk.charAt(i) == '[' && !s.lit(i)).flatMap { i =>
+    s.occurrences("[").flatMap { i =>
       val close = s.close(i)
       val isComp = close > i && s.topKeyword(i + 1, close, "FOR") >= 0
       val j = s.prevNonWs(i - 1)
@@ -4102,9 +4087,8 @@ object Dialect {
     * next pass.
     */
   private[fm] def rewriteListComp(sql: String): String = Scan.fixpoint(sql) { s =>
-    import s.msk
     val out = s.sql
-    (0 until msk.length).iterator.filter(i => msk.charAt(i) == '[' && !s.lit(i)).flatMap { i =>
+    s.occurrences("[").flatMap { i =>
       val close = s.close(i)
       val forAt = if (close > i) s.topKeyword(i + 1, close, "FOR") else -1
       val inAt = if (forAt >= 0) s.topKeyword(forAt + 3, close, "IN") else -1

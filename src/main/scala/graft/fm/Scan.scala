@@ -49,10 +49,14 @@ final class Scan(val sql: String) {
   }
 
   val u: String = {
-    val a = msk.toCharArray
-    var i = 0
-    while (i < n) { a(i) = Character.toUpperCase(a(i)); i += 1 }
-    new String(a)
+    val up = msk.toUpperCase(java.util.Locale.ROOT)
+    if (up.length == n) up
+    else { // a character whose upper case is longer (`ß`): keep indices aligned
+      val a = msk.toCharArray
+      var i = 0
+      while (i < n) { a(i) = Character.toUpperCase(a(i)); i += 1 }
+      new String(a)
+    }
   }
 
   def length: Int = n
@@ -72,10 +76,13 @@ final class Scan(val sql: String) {
   /** Keyword `kw` ends at `end` (inclusive). */
   def kwEndingAt(end: Int, kw: String): Boolean = kwAt(end - kw.length + 1, kw)
 
+  /** Every code position where `tok` (upper case) starts, left to right. */
+  def occurrences(tok: String): Iterator[Int] =
+    Iterator.iterate(u.indexOf(tok))(i => u.indexOf(tok, i + 1))
+      .takeWhile(_ >= 0).filter(!lit(_))
+
   /** Every position where `kw` starts as a keyword, left to right. */
-  def sites(kw: String): Iterator[Int] =
-    Iterator.iterate(u.indexOf(kw))(i => u.indexOf(kw, i + 1))
-      .takeWhile(_ >= 0).filter(kwAt(_, kw))
+  def sites(kw: String): Iterator[Int] = occurrences(kw).filter(kwAt(_, kw))
 
   /** First index at or after `i` that is not whitespace (or `length`). */
   def skipWs(i: Int): Int = {
