@@ -6,6 +6,7 @@ import java.{util => ju}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** One serialized frontmatter field of one file. */
@@ -25,9 +26,10 @@ final case class ParseWarning(path: String, error: String)
   * Like the reference, the per-file metadata lives on the driver: files
   * are read and parsed there ([[parseFiles]]), and the key union and the
   * warning list are folds over the records ([[build]]) — no Spark job.
-  * Only the finished rows go to Spark, as the persisted serving frame.
-  * [[QueryEngine]] keeps the records in a per-file mtime cache, so a
-  * one-file edit re-reads one file.
+  * Only the finished rows go to Spark: up to [[LocalRows]] rows as a
+  * driver-local relation, above it as a distributed frame in the parse
+  * layout. [[QueryEngine]] keeps the records in a per-file mtime cache,
+  * so a one-file edit re-reads one file.
   */
 object Corpus {
 
@@ -92,9 +94,29 @@ object Corpus {
       maxWarnings: Int = Settings.maxListed()): (DataFrame, Seq[ParseWarning]) =
     build(spark, records(parsed), maxWarnings)
 
+  /** Row gate between the two serving layouts of [[build]]. At or below
+    * it the `files` frame is a LocalRelation: Spark's
+    * ConvertToLocalRelation folds Project/Filter/Limit over it on the
+    * driver, so `SELECT *` runs no Spark job, and a rebuild after an edit
+    * neither distributes nor persists anything. Above it the frame keeps
+    * the distributed parse layout, because folded projections then run
+    * on one driver thread. Measured on 4 cores (`local[4]`, AQE off as
+    * in Bench): the 70 `q_fm_*` catalog rows over the first n documents
+    * of sf0.1, best of two passes per layout, local against
+    * distributed, in total: n = 1,000: 7.19 against 7.85 s; 2,000: 7.90
+    * against 7.78 s; 3,000: 8.64 against 8.26 s; 5,000: 11.41 against
+    * 10.02 s (q_fm_agg_parity, q_fm_fn_parity, q_fm_json_ops +0.13 to
+    * +0.14 s each). Read-only queries cross over near 2,000 rows; the
+    * product path also saves the rebuild after every edit, which the
+    * catalog does not measure (1,000-file notes_edit: 253 → 181 ms of
+    * CPU per request, 10/10 paired perfbench runs).
+    */
+  private[graft] val LocalRows = 2048
+
   /** Union-of-keys all-strings DataFrame + parse warnings, from records
     * in path order. Column order: `path` first, then sorted keys
     * (deterministic; the reference's set-iteration order is arbitrary).
+    * The frame is driver-local up to [[LocalRows]] parsed files.
     */
   def build(spark: SparkSession, records: Seq[ParsedFile],
       maxWarnings: Int = Settings.maxListed()): (DataFrame, Seq[ParseWarning]) = {
@@ -114,12 +136,20 @@ object Corpus {
     // while expression-heavy rows lost their scan parallelism — the 66
     // fm rows without their own r17 fixes regressed +2.4 s in
     // aggregate, led by q_fm_json_ops 0.20→0.48 s and q_fm_listfns
-    // 0.16→0.36 s (run spreads ≤ 0.03, i.e. real). servingParts is the
-    // right serving layout at every scale probed.
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, servingParts(spark, records.size)), schema)
+    // 0.16→0.36 s (run spreads ≤ 0.03, i.e. real). Above LocalRows,
+    // servingParts is the right serving layout at every scale probed.
+    val df =
+      if (rows.size <= LocalRows) spark.createDataFrame(rows.asJava, schema)
+      else spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, servingParts(spark, records.size)), schema)
     (df, warnings(records, maxWarnings))
   }
+
+  /** Whether `df` is a driver-local relation, as [[build]] makes below
+    * [[LocalRows]].
+    */
+  private[fm] def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[LocalRelation]
 
   /** Serving layout: ≥32 files per partition, capped at defaultParallelism. */
   private def servingParts(spark: SparkSession, files: Int): Int =
@@ -141,7 +171,7 @@ object Corpus {
   }
 
   /** Corpus fingerprint over (relPath, mtime): when unchanged, the
-    * engine reuses its persisted `files` frame (see [[QueryEngine]]).
+    * engine reuses its `files` frame (see [[QueryEngine]]).
     */
   def fingerprint(pathsWithMtime: Seq[(String, Long)]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")

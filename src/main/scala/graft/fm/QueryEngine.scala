@@ -1,6 +1,7 @@
 package graft.fm
 
 import scala.collection.concurrent.TrieMap
+import scala.collection.immutable.VectorMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -30,7 +31,12 @@ final case class QueryResult(
     * API-sized results, not bulk extracts.
     */
   def response(): Map[String, Any] = {
-    val rows = results.collect().map(r => columns.map(c => c -> r.getAs[Any](c)).toMap).toSeq
+    // Each row lists its keys in column order, like the reference's
+    // `dict(zip(columns, row))`: a duplicated name keeps its first
+    // position and takes its last value.
+    val rows = results.collect().map { r =>
+      columns.indices.foldLeft(VectorMap.empty[String, Any])((m, i) => m.updated(columns(i), r.get(i)))
+    }.toSeq
     val base = Map(
       "results" -> rows,
       "row_count" -> rows.length,
@@ -48,8 +54,10 @@ final case class QueryResult(
   * one record cache, relPath → (mtime, parsed record), shared by every
   * glob, re-reads only new files and files whose mtime moved (reference
   * `files.py:19-49`). Each glob's `files` frame is built from the cached
-  * records and persisted, keyed by a fingerprint of its (path, mtime)
-  * pairs; an unchanged corpus reuses the frame across queries.
+  * records, keyed by a fingerprint of its (path, mtime) pairs; an
+  * unchanged corpus reuses the frame across queries. Up to
+  * [[Corpus.LocalRows]] files the frame is a driver-local relation and
+  * nothing is persisted; above it the distributed frame is persisted.
   */
 final class QueryEngine(
     val spark: SparkSession,
@@ -129,10 +137,16 @@ final class QueryEngine(
         // from the cached records: no re-read.
         val recs = prev.filter(_.fingerprint == fp).map(_.records)
           .getOrElse(refresh(glob, pm))
-        prev.foreach(_.files.unpersist())
+        prev.filterNot(c => Corpus.isLocal(c.files)).foreach(_.files.unpersist())
         val (base, warnings) = Corpus.build(spark, recs)
         val files =
-          (if (wantSemantic) semantic.get.withEmbedding(base) else base).persist()
+          if (!Corpus.isLocal(base))
+            (if (wantSemantic) semantic.get.withEmbedding(base) else base).persist()
+          else if (wantSemantic) {
+            // The embedding join runs once, here, and its result stays local.
+            val joined = semantic.get.withEmbedding(base)
+            spark.createDataFrame(joined.collectAsList(), joined.schema)
+          } else base
         val entry = Cached(fp, recs, files, warnings, wantSemantic)
         cache.put(glob, entry)
         entry

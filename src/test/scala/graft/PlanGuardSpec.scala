@@ -46,12 +46,28 @@ class PlanGuardSpec extends AnyFunSuite {
     // Parquet-backed scan: predicates must reach the parquet reader.
     val pw = plan("q_filter_where")
     assert("PushedFilters: \\[[^\\]]".r.findFirstIn(pw).isDefined, pw.take(800))
-    // The files view is a cached in-memory relation; there the filter
-    // must reach the InMemoryTableScan (partition-batch pruning), not
-    // sit in a separate post-scan Filter only.
+    // The files view of a small corpus is a driver-local relation: the
+    // filter is evaluated into the relation during optimization
+    // (ConvertToLocalRelation), so no Filter is left above the scan.
     val pf = plan("q_fm_flagship")
-    assert("InMemoryTableScan \\[[^\\]]+\\], \\[[^\\]]".r.findFirstIn(pf).isDefined,
-      pf.take(800))
+    assert(pf.contains("LocalTableScan") && !pf.contains("Filter"), pf.take(800))
+    // Above the local-relation gate the files view is a cached in-memory
+    // relation; there the filter must reach the InMemoryTableScan
+    // (partition-batch pruning), not sit in a separate post-scan Filter
+    // only. Same statement as q_fm_flagship.
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_guard")
+    (0 to graft.fm.Corpus.LocalRows).foreach { i =>
+      java.nio.file.Files.write(dir.resolve(f"n$i%05d.md"),
+        f"---\ncreated: 2025-${i % 12 + 1}%02d-01\n---\n".getBytes("UTF-8"))
+    }
+    val engine = new graft.fm.QueryEngine(
+      spark, graft.fm.Settings(dir.toString, enableSemantic = false, "", None))
+    val pd = engine.query("**/*.md",
+      """SELECT path, created FROM files
+        |WHERE created >= '2025-06-01' ORDER BY created DESC, path""".stripMargin)
+      .results.queryExecution.executedPlan.toString
+    assert("InMemoryTableScan \\[[^\\]]+\\], \\[[^\\]]".r.findFirstIn(pd).isDefined,
+      pd.take(800))
   }
 
   test("q_rag_retrieve stays shuffle-free up to the final top-k") {

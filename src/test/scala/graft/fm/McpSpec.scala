@@ -75,6 +75,21 @@ class McpSpec extends AnyFunSuite {
     assert(structured("row_count") == 2)
   }
 
+  test("query result rows list their keys in column order; a duplicated name keeps its first place") {
+    val (server, _) = mkServer()
+    val sql = "SELECT path, 'z' AS zeta, title, 'a' AS alpha, 'm' AS mid, 'dup' AS title " +
+      "FROM files WHERE path = 'a.md'"
+    val r = rpc(server,
+      s"""{"jsonrpc":"2.0","id":4,"method":"tools/call","params":{"name":"query","arguments":{"glob":"**/*.md","sql":"$sql"}}}""")
+    val result = r("result").asInstanceOf[Map[String, Any]]
+    val text = result("content").asInstanceOf[Seq[Map[String, Any]]].head("text").toString
+    // Python's dict(zip(columns, row)): first position, last value.
+    assert(text.contains(
+      """"results":[{"path":"a.md","zeta":"z","title":"dup","alpha":"a","mid":"m"}]"""), text)
+    assert(Json.parse(text).asInstanceOf[Map[String, Any]]("columns") ==
+      Seq("path", "zeta", "title", "alpha", "mid", "title"))
+  }
+
   test("parse warnings go over the wire as {path, error} objects") {
     val (server, dir) = mkServer()
     Files.write(dir.resolve("bad.md"), "---\n{ not: valid: yaml: [\n---\n".getBytes)

@@ -2,6 +2,10 @@ package graft.fm
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -279,13 +283,106 @@ class QueryEngineSpec extends AnyFunSuite {
     assert(Corpus.filesDF(spark, spark.createDataset(recs), maxWarnings = 3)._2 == capped)
   }
 
-  test("the files frame keeps the parse layout's partition count") {
-    val recs = (0 until 100).map(i => ParsedFile(f"f$i%03d.md", ok = true, null,
-      Seq(ParsedField("path", f"f$i%03d.md", false))))
-    for (n <- Seq(0, 1, 31, 32, 100)) {
-      val want = math.max(1, math.min(spark.sparkContext.defaultParallelism, n / 32 + 1))
-      assert(Corpus.build(spark, recs.take(n))._1.rdd.getNumPartitions == want, s"n=$n")
+  private def pathRecs(n: Int): Seq[ParsedFile] = (0 until n).map { i =>
+    val p = f"f$i%05d.md"
+    ParsedFile(p, ok = true, null, Seq(ParsedField("path", p, false)))
+  }
+
+  test("the files frame is a LocalRelation up to LocalRows parsed files") {
+    val n = Corpus.LocalRows
+    for (k <- Seq(0, 1, 32, n)) {
+      val (local, _) = Corpus.build(spark, pathRecs(k))
+      assert(local.queryExecution.logical.isInstanceOf[LocalRelation], s"n=$k")
+      assert(local.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec], s"n=$k")
+      assert(local.count() == k, s"n=$k")
     }
+    // The gate counts parsed rows: unparseable files do not push it over.
+    val bad = (0 until 3).map(i => ParsedFile(s"bad$i.md", ok = false, "E", Nil))
+    assert(Corpus.isLocal(Corpus.build(spark, pathRecs(n) ++ bad)._1))
+    assert(!Corpus.isLocal(Corpus.build(spark, pathRecs(n + 1))._1))
+  }
+
+  test("the files frame keeps the parse layout's partition count") {
+    // Above the local gate, the distributed frame has the parse layout.
+    val recs = pathRecs(Corpus.LocalRows + 100)
+    for (n <- Seq(Corpus.LocalRows + 1, Corpus.LocalRows + 100)) {
+      val want = math.max(1, math.min(spark.sparkContext.defaultParallelism, n / 32 + 1))
+      val df = Corpus.build(spark, recs.take(n))._1
+      assert(df.rdd.getNumPartitions == want, s"n=$n")
+      assert(df.count() == n, s"n=$n")
+    }
+  }
+
+  /** Spark jobs `f` starts on this thread, counted by job tag. */
+  private def jobs[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = "graft-spec-" + java.util.UUID.randomUUID()
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      val a = f
+      ListenerDrain(sc)
+      (a, n.get())
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("SELECT * on a small glob runs no Spark job") {
+    val e = eng(corpus(threeDocs: _*))
+    e.filesTable("**/*.md")
+    val (resp, n) = jobs(e.query("**/*.md", "SELECT * FROM files").response())
+    assert(resp("row_count") == 3 && n == 0)
+    // Project, Filter and Limit fold into the local relation too.
+    val (rows, n2) = jobs(e.query("**/*.md",
+      "SELECT path, upper(title) FROM files WHERE title <> 'Beta' LIMIT 5").results.collect())
+    assert(rows.map(_.getString(1)).toSet == Set("ALPHA", "GAMMA") && n2 == 0)
+  }
+
+  test("a one-file edit on a small glob rebuilds with no job and caches nothing") {
+    val dir = corpus()
+    val t0 = System.currentTimeMillis() - 60000
+    (0 until 6).foreach(i => write(dir, s"n$i.md", s"---\nv: a$i\n---\n", t0))
+    spark.catalog.clearCache()
+    val e = eng(dir)
+    val before = e.filesTable("**/*.md")._1
+    write(dir, "n3.md", "---\nv: edited\n---\n", t0 + 1000)
+    val ((after, _), n) = jobs(e.filesTable("**/*.md"))
+    assert(n == 0 && !(after eq before) && Corpus.isLocal(after))
+    assert(col(e, "**/*.md", "v")(3) == ("n3.md" -> "edited"))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("a semantic readiness flip on a small glob joins the embeddings into a local frame") {
+    val dir = corpus(threeDocs: _*)
+    val flag = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val provider = new SemanticProvider {
+      def isReady: Boolean = flag.get()
+      def dim: Int = 2
+      def withEmbedding(files: org.apache.spark.sql.DataFrame) = {
+        import spark.implicits._
+        files.join(Seq("a.md" -> Seq(1f, 2f)).toDF("path", "embedding"), Seq("path"), "left")
+      }
+      def registerFunctions(spark: org.apache.spark.sql.SparkSession): Unit = ()
+    }
+    spark.catalog.clearCache()
+    val e = new QueryEngine(spark, Settings(dir.toString, enableSemantic = true, "", None), Some(provider))
+    assert(!e.filesTable("**/*.md")._1.columns.contains("embedding"))
+    flag.set(true)
+    val df = e.filesTable("**/*.md")._1
+    assert(df.columns.contains("embedding") && Corpus.isLocal(df))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val (rows, n) = jobs(e.query("**/*.md", "SELECT path, embedding FROM files")
+      .results.collect().map(r => r.getString(0) -> Option(r.getSeq[Float](1)).map(_.toSeq)).toSeq)
+    assert(rows.sortBy(_._1) == Seq("a.md" -> Some(Seq(1f, 2f)), "b.md" -> None, "sub/c.md" -> None))
+    assert(n == 0)
   }
 
   test("inspect examples follow code-point path order, not UTF-16 order") {

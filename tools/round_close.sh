@@ -14,10 +14,29 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 round="${1:-}"
 shopt -s nullglob
+# BENCH_FULL.json must be the run its meta describes: refuse to stage the
+# pair when the record's total is the total of a BENCH_r*.json run made
+# on a different core count than the meta names (an 8-core leg filed
+# under a 32-core meta, for instance).
+if [ -f BENCH_FULL.json ] && [ -f BENCH_FULL.meta.json ]; then
+  python3 - BENCH_r*.json <<'PY'
+import json, sys
+value = json.load(open("BENCH_FULL.json"))["value"]
+cpus = json.load(open("BENCH_FULL.meta.json")).get("cpus")
+for f in sys.argv[1:]:
+    run = json.load(open(f))
+    total = (run.get("parsed") or {}).get("value")
+    if total == value and run.get("cpus") != cpus:
+        sys.exit(f"[round_close] BENCH_FULL.json ({value} s) is the total of {f}, "
+                 f"a {run.get('cpus')}-core run, but BENCH_FULL.meta.json says cpus={cpus}; "
+                 "restore the matching record or re-stamp the meta")
+PY
+fi
 for f in BENCH_r*.json CORRECTNESS_r*.json PERF_r*.json VERIFY_r*.json \
          BENCH_FULL.json BENCH_FULL.meta.json LEAKCHECK.json COPYCHECK.json \
          SCALE_PROBE.json DUCKDB_BASELINE.json CORRECTNESS_RETAIN.json \
          VERDICT.md ADVICE.md; do
+  [ -e "$f" ] || continue
   if git check-ignore -q -- "$f"; then
     echo "[round_close] skipping ignored $f"
   else
