@@ -6,7 +6,10 @@ import org.apache.spark.sql.SparkSession
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`
   * (failures + most-expensive queries, budgeted to fit the consumer's
   * 2 kB output tail), plus the exhaustive per-query record written to
-  * `BENCH_FULL.json` (override with SPARK_GRAFT_BENCH_OUT).
+  * `BENCH_FULL.json` (override with SPARK_GRAFT_BENCH_OUT). A
+  * SPARK_GRAFT_ONLY subset is not a full record: unless
+  * SPARK_GRAFT_BENCH_OUT names a file, it goes to
+  * `graft_bench_only.json` in the JVM's temp directory.
   *
   * Methodology (VERDICT r1 item 8, r7 item 6): stable sorted query
   * order; a full warm-up pass first (absorbs session/codegen warm-up,
@@ -180,13 +183,15 @@ object Bench {
       .map { case (k, r) => s"${jstr(k)}:${fmt(r)}" }.mkString("{", ",", "}")
     val fullJson =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$allQs,"sf":${jstr(sfDir)},""" +
-        s""""n_queries":${timed.length},"n_failed":$nFailed,"tables_cached":true,""" +
+        s""""cpus":${cpus.toInt},"n_queries":${timed.length},"n_failed":$nFailed,"tables_cached":true,""" +
         s""""runs_per_query":2,"third_runs":$thirdRuns,"noise_floor_sec":${fmt(noiseMed)},""" +
         s""""strategy_variants":$variantsJson,""" +
         s""""weak_over_2x":${ratioJson(weakDrift)},""" +
         s""""weak_strategy_variants":${ratioJson(weakVariant)},""" +
         s""""isolated":$isoJson,"run_spread":$allSpreads,"errors":$allErrs}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      if (only.isEmpty) "BENCH_FULL.json"
+      else java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft_bench_only.json").toString)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath), (fullJson + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"bench: could not write $outPath: $e") }
 

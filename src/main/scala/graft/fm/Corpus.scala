@@ -116,10 +116,12 @@ object Corpus {
   /** Union-of-keys all-strings DataFrame + parse warnings, from records
     * in path order. Column order: `path` first, then sorted keys
     * (deterministic; the reference's set-iteration order is arbitrary).
-    * The frame is driver-local up to [[LocalRows]] parsed files.
+    * The frame is driver-local up to [[LocalRows]] parsed files, unless
+    * `allowLocal` is false.
     */
   def build(spark: SparkSession, records: Seq[ParsedFile],
-      maxWarnings: Int = Settings.maxListed()): (DataFrame, Seq[ParseWarning]) = {
+      maxWarnings: Int = Settings.maxListed(),
+      allowLocal: Boolean = true): (DataFrame, Seq[ParseWarning]) = {
     val good = records.filter(_.ok)
     val keys = good.iterator.flatMap(_.fields.iterator.map(_.key)).toSet - "path"
     val ordered = "path" +: keys.toSeq.sorted
@@ -139,7 +141,7 @@ object Corpus {
     // 0.16→0.36 s (run spreads ≤ 0.03, i.e. real). Above LocalRows,
     // servingParts is the right serving layout at every scale probed.
     val df =
-      if (rows.size <= LocalRows) spark.createDataFrame(rows.asJava, schema)
+      if (allowLocal && rows.size <= LocalRows) spark.createDataFrame(rows.asJava, schema)
       else spark.createDataFrame(
         spark.sparkContext.parallelize(rows, servingParts(spark, records.size)), schema)
     (df, warnings(records, maxWarnings))

@@ -58,6 +58,8 @@ final case class QueryResult(
   * unchanged corpus reuses the frame across queries. Up to
   * [[Corpus.LocalRows]] files the frame is a driver-local relation and
   * nothing is persisted; above it the distributed frame is persisted.
+  * A frame joined with semantic search's embeddings is distributed and
+  * persisted at any size.
   */
 final class QueryEngine(
     val spark: SparkSession,
@@ -137,16 +139,16 @@ final class QueryEngine(
         // from the cached records: no re-read.
         val recs = prev.filter(_.fingerprint == fp).map(_.records)
           .getOrElse(refresh(glob, pm))
-        prev.filterNot(c => Corpus.isLocal(c.files)).foreach(_.files.unpersist())
-        val (base, warnings) = Corpus.build(spark, recs)
+        prev.foreach(_.files.unpersist())
+        // A frame to be joined with the embeddings keeps the distributed,
+        // persisted layout at any size. Served as a local relation instead,
+        // vault_large's 500-file sub-tree glob cost more CPU per request
+        // (median 294 -> 379 ms over 10 paired perfbench runs on 4 cores)
+        // for 19 MiB less heap.
+        val (base, warnings) = Corpus.build(spark, recs, allowLocal = !wantSemantic)
         val files =
-          if (!Corpus.isLocal(base))
-            (if (wantSemantic) semantic.get.withEmbedding(base) else base).persist()
-          else if (wantSemantic) {
-            // The embedding join runs once, here, and its result stays local.
-            val joined = semantic.get.withEmbedding(base)
-            spark.createDataFrame(joined.collectAsList(), joined.schema)
-          } else base
+          if (Corpus.isLocal(base)) base
+          else (if (wantSemantic) semantic.get.withEmbedding(base) else base).persist()
         val entry = Cached(fp, recs, files, warnings, wantSemantic)
         cache.put(glob, entry)
         entry

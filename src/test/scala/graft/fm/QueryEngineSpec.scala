@@ -360,7 +360,7 @@ class QueryEngineSpec extends AnyFunSuite {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
-  test("a semantic readiness flip on a small glob joins the embeddings into a local frame") {
+  test("a semantic readiness flip on a small glob persists the joined frame alone") {
     val dir = corpus(threeDocs: _*)
     val flag = new java.util.concurrent.atomic.AtomicBoolean(false)
     val provider = new SemanticProvider {
@@ -375,14 +375,18 @@ class QueryEngineSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     val e = new QueryEngine(spark, Settings(dir.toString, enableSemantic = true, "", None), Some(provider))
     assert(!e.filesTable("**/*.md")._1.columns.contains("embedding"))
+    assert(spark.sharedState.cacheManager.isEmpty)
     flag.set(true)
     val df = e.filesTable("**/*.md")._1
-    assert(df.columns.contains("embedding") && Corpus.isLocal(df))
-    assert(spark.sharedState.cacheManager.isEmpty)
-    val (rows, n) = jobs(e.query("**/*.md", "SELECT path, embedding FROM files")
-      .results.collect().map(r => r.getString(0) -> Option(r.getSeq[Float](1)).map(_.toSeq)).toSeq)
+    assert(df.columns.contains("embedding") && !Corpus.isLocal(df))
+    assert(df.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    val rows = e.query("**/*.md", "SELECT path, embedding FROM files")
+      .results.collect().map(r => r.getString(0) -> Option(r.getSeq[Float](1)).map(_.toSeq)).toSeq
     assert(rows.sortBy(_._1) == Seq("a.md" -> Some(Seq(1f, 2f)), "b.md" -> None, "sub/c.md" -> None))
-    assert(n == 0)
+    // Back off: the joined frame is unpersisted and the local one caches nothing.
+    flag.set(false)
+    assert(Corpus.isLocal(e.filesTable("**/*.md")._1))
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("inspect examples follow code-point path order, not UTF-16 order") {

@@ -4,8 +4,9 @@
 #
 #   tools/perf_pairs.sh <parent-checkout> <change-checkout> <workload> <seed>...
 #
+# Each run lasts the `run_seconds` that BENCHMARK.json sets.
+#
 # Environment:
-#   PERF_SECONDS  timed seconds per run (default 8)
 #   PERF_TRACE    0 for the end-to-end metrics, 1 for the per-layer trace (default 0)
 #   PERF_OUT      JSONL file the results are appended to
 #                 (default perf_pairs_<workload>.jsonl in the current directory)
@@ -23,14 +24,15 @@
 set -euo pipefail
 
 if [ $# -lt 4 ]; then
-  sed -n '2,11p' "$0" >&2
+  sed -n '2,12p' "$0" >&2
   exit 2
 fi
 parent=$(cd "$1" && pwd)
 change=$(cd "$2" && pwd)
 workload=$3
 shift 3
-seconds=${PERF_SECONDS:-8}
+seconds=$(python3 -c 'import json, sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
+  "$change/BENCHMARK.json")
 trace=${PERF_TRACE:-0}
 out=$(realpath -m "${PERF_OUT:-perf_pairs_${workload}.jsonl}")
 

@@ -14,22 +14,34 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 round="${1:-}"
 shopt -s nullglob
-# BENCH_FULL.json must be the run its meta describes: refuse to stage the
-# pair when the record's total is the total of a BENCH_r*.json run made
-# on a different core count than the meta names (an 8-core leg filed
-# under a 32-core meta, for instance).
+# BENCH_FULL.json must be the full run its meta describes. Refuse to
+# stage anything when the record
+#   - timed fewer queries than the catalog has (the most any BENCH_r*.json
+#     run timed): a SPARK_GRAFT_ONLY subset, for instance;
+#   - names another sf, or another core count, than the meta;
+#   - has the total of a BENCH_r*.json run made on a different core count
+#     than the meta names (an 8-core leg filed under a 32-core meta).
 if [ -f BENCH_FULL.json ] && [ -f BENCH_FULL.meta.json ]; then
   python3 - BENCH_r*.json <<'PY'
 import json, sys
-value = json.load(open("BENCH_FULL.json"))["value"]
-cpus = json.load(open("BENCH_FULL.meta.json")).get("cpus")
-for f in sys.argv[1:]:
-    run = json.load(open(f))
-    total = (run.get("parsed") or {}).get("value")
-    if total == value and run.get("cpus") != cpus:
-        sys.exit(f"[round_close] BENCH_FULL.json ({value} s) is the total of {f}, "
-                 f"a {run.get('cpus')}-core run, but BENCH_FULL.meta.json says cpus={cpus}; "
-                 "restore the matching record or re-stamp the meta")
+rec = json.load(open("BENCH_FULL.json"))
+meta = json.load(open("BENCH_FULL.meta.json"))
+value, cpus = rec["value"], meta.get("cpus")
+runs = {f: json.load(open(f)) for f in sys.argv[1:]}
+def refuse(why):
+    sys.exit(f"[round_close] BENCH_FULL.json ({value} s) {why}; "
+             "restore the matching record or re-stamp the meta")
+catalog = max(((r.get("parsed") or {}).get("n_queries") or 0 for r in runs.values()), default=0)
+if (rec.get("n_queries") or 0) < catalog:
+    refuse(f"timed {rec.get('n_queries')} queries, but the catalog has {catalog}")
+if rec.get("sf") != meta.get("sf"):
+    refuse(f"was run on {rec.get('sf')}, but BENCH_FULL.meta.json says sf={meta.get('sf')}")
+if "cpus" in rec and rec["cpus"] != cpus:
+    refuse(f"was run on {rec['cpus']} cores, but BENCH_FULL.meta.json says cpus={cpus}")
+for f, r in runs.items():
+    if (r.get("parsed") or {}).get("value") == value and r.get("cpus") != cpus:
+        refuse(f"is the total of {f}, a {r.get('cpus')}-core run, "
+               f"but BENCH_FULL.meta.json says cpus={cpus}")
 PY
 fi
 for f in BENCH_r*.json CORRECTNESS_r*.json PERF_r*.json VERIFY_r*.json \
