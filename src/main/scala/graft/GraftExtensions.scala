@@ -14,7 +14,7 @@ import graft.semantic.{ArrayCosineDistance, ArrayCosineSimilarity}
   * graft SQL surface without calling any Scala API first.
   *
   * Injected functions are exactly the expression-backed ones from
-  * `SparkEntry.registerSessionFunctions`; the `embed` UDF is NOT here
+  * `SparkEntry.registerSessionFunctions`; `embed` is NOT here
   * because it binds to a configured encoder (model name, dim) and is
   * session state, not a static function — `semantic.Embed.register` /
   * `SemanticContext` remain its seam.

@@ -98,20 +98,24 @@ object Corpus {
     * it the `files` frame is a LocalRelation: Spark's
     * ConvertToLocalRelation folds Project/Filter/Limit over it on the
     * driver, so `SELECT *` runs no Spark job, and a rebuild after an edit
-    * neither distributes nor persists anything. Above it the frame keeps
-    * the distributed parse layout, because folded projections then run
-    * on one driver thread. Measured on 4 cores (`local[4]`, AQE off as
-    * in Bench): the 70 `q_fm_*` catalog rows over the first n documents
-    * of sf0.1, best of two passes per layout, local against
-    * distributed, in total: n = 1,000: 7.19 against 7.85 s; 2,000: 7.90
-    * against 7.78 s; 3,000: 8.64 against 8.26 s; 5,000: 11.41 against
-    * 10.02 s (q_fm_agg_parity, q_fm_fn_parity, q_fm_json_ops +0.13 to
-    * +0.14 s each). Read-only queries cross over near 2,000 rows; the
-    * product path also saves the rebuild after every edit, which the
-    * catalog does not measure (1,000-file notes_edit: 253 → 181 ms of
-    * CPU per request, 10/10 paired perfbench runs).
+    * neither distributes nor persists anything; [[QueryEngine]]'s session
+    * plans the rest of the query over one partition
+    * ([[OnePartitionLocalScan]]), so Aggregate, Sort and Window run as
+    * one task with no exchange. Above it the frame keeps the distributed
+    * parse layout and its scan parallelism. Measured on 4 cores
+    * (`local[4]`, AQE off as in Bench): the 70 `q_fm_*` catalog rows
+    * over the first n documents of sf0.1, every frame local against
+    * every frame distributed, best of two passes, in total: n = 1,000:
+    * 6.60 against 10.20 s; 2,000: 6.90 against 11.09 s; 3,000: 8.12
+    * against 11.83 s; 4,000: 9.95 against 12.64 s; 5,000: 9.58 against
+    * 13.57 s. Scanned at `defaultParallelism` with an exchange before
+    * each aggregate, the local frame had crossed over near 2,000 rows;
+    * in one task it wins at every size probed. The gate sits at 4,096,
+    * below the 5,000-document sf0.1 fixture, so the catalog's `q_fm_*`
+    * rows keep checking the distributed layout there (sf0.01, 500
+    * documents, checks the local one).
     */
-  private[graft] val LocalRows = 2048
+  private[graft] val LocalRows = 4096
 
   /** Union-of-keys all-strings DataFrame + parse warnings, from records
     * in path order. Column order: `path` first, then sorted keys

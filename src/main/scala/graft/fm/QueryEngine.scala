@@ -94,6 +94,7 @@ final class QueryEngine(
     // plain Spark SQL means elsewhere in the application).
     Dialect.registerOverrides(s)
     semantic.foreach(_.registerFunctions(s))
+    s.experimental.extraStrategies = Seq(OnePartitionLocalScan)
     s
   }
 
@@ -108,7 +109,10 @@ final class QueryEngine(
       records: Seq[ParsedFile],
       files: DataFrame,
       warnings: Seq[ParseWarning],
-      semanticApplied: Boolean)
+      semanticApplied: Boolean) {
+    /** `query_inspect`'s fold, once per frame: dropped with it. */
+    lazy val inspected: (Long, Seq[Row]) = SchemaInfer.infer(records)
+  }
 
   private val cache = TrieMap.empty[String, Cached]
 
@@ -751,13 +755,14 @@ final class QueryEngine(
   }
 
   /** `query_inspect` tool: file count and one schema row per property,
-    * one fold over the glob's cached records. Appends the
+    * one fold over the glob's cached records, memoized with the cached
+    * frame, so an unchanged glob does not re-fold. Appends the
     * `embedding FLOAT[dim]` row when semantic is ready (reference
     * `semantic/query_schema.py:7-18`).
     */
   def inspectRows(glob: String): (Long, Seq[Row], Seq[ParseWarning]) = {
     val entry = cachedParse(glob)
-    val (fileCount, rows) = SchemaInfer.infer(entry.records)
+    val (fileCount, rows) = entry.inspected
     val embedding = semantic.filter(_.isReady).map(p =>
       Row("embedding", s"FLOAT[${p.dim}]", false, "[]"))
     (fileCount, rows ++ embedding, entry.warnings)

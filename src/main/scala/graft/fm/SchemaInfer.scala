@@ -36,10 +36,14 @@ object SchemaInfer {
     if (i < n) fix(a.charAt(i)) - fix(b.charAt(i)) else a.length - b.length
   }
 
+  /** Calls of [[infer]] since start-up (cache tests count re-folds). */
+  private[fm] val inferCalls = new java.util.concurrent.atomic.AtomicLong
+
   /** Ok-file count and one row per property: (property, type, nullable,
     * examples as a JSON array string of the serialized values).
     */
   def infer(records: Seq[ParsedFile], maxSamples: Int = 5): (Long, Seq[Row]) = {
+    inferCalls.incrementAndGet()
     final class Acc {
       var nonNull = 0L
       var array = false

@@ -3,6 +3,9 @@ package graft.semantic
 import java.security.MessageDigest
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType}
 
 /** Deterministic offline stand-in for the sentence-transformers encoder
   * (reference `semantic/model.py`; ADR-0009 fixes the FLOAT[dim]
@@ -76,11 +79,30 @@ object Embed {
     * `semantic/query.py:31-39`, B24).
     */
   def register(spark: SparkSession, dim: Int = DefaultDim): Unit =
-    spark.udf.register("embed", (s: String) => if (s == null) null else encode(s, dim))
+    register(spark, new WordHashEncoder("embed", dim))
 
   /** Register `embed` bound to a resolved encoder, so the SQL surface
     * follows the configured model (SemanticContext.registerFunctions).
     */
   def register(spark: SparkSession, enc: TextEncoder): Unit =
-    spark.udf.register("embed", (s: String) => if (s == null) null else enc.encode(s))
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction("embed", { e =>
+      require(e.size == 1, s"embed takes one argument, got ${e.size}")
+      EmbedText(e.head, enc)
+    }, "built-in")
+}
+
+/** `embed(text)` as a Catalyst expression. Deterministic and foldable
+  * when its argument is, so `embed('<literal>')` is encoded once, at
+  * optimization, not once per row as a ScalaUDF (which Spark never
+  * constant-folds) would be.
+  */
+case class EmbedText(child: Expression, enc: TextEncoder)
+    extends UnaryExpression with ImplicitCastInputTypes with CodegenFallback {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
+  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
+  override def prettyName: String = "embed"
+  override protected def nullSafeEval(v: Any): Any =
+    UnsafeArrayData.fromPrimitiveArray(enc.encode(v.toString))
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

@@ -3,7 +3,7 @@ package graft.fm
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -151,6 +151,19 @@ class QueryEngineSpec extends AnyFunSuite {
     assert(byProp("tags")._1 == "array")
     assert(byProp("extra") == ("string", true, "[\"42\"]"))
     assert(byProp("title")._2 == false)
+  }
+
+  test("query_inspect re-folds the records only when the glob's frame changes") {
+    val dir = corpus(threeDocs: _*)
+    val e = eng(dir)
+    val first = e.inspectRows("**/*.md")
+    val folds = SchemaInfer.inferCalls.get()
+    assert(e.inspectRows("**/*.md")._2 == first._2)
+    assert(SchemaInfer.inferCalls.get() == folds)
+    write(dir, "b.md", "---\ntitle: Beta\nextra: 43\n---\n", System.currentTimeMillis() + 5000)
+    val edited = e.inspectRows("**/*.md")
+    assert(SchemaInfer.inferCalls.get() == folds + 1)
+    assert(edited._2.find(_.getString(0) == "extra").get.getString(3) == "[\"43\"]")
   }
 
   test("examples cap at 5 first-seen distinct values") {
@@ -313,26 +326,39 @@ class QueryEngineSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark jobs `f` starts on this thread, counted by job tag. */
-  private def jobs[A](f: => A): (A, Int) = {
+  /** Spark jobs and tasks `f` starts on this thread, counted by job tag. */
+  private def jobsAndTasks[A](f: => A): (A, Int, Int) = {
     val sc = spark.sparkContext
     val tag = "graft-spec-" + java.util.UUID.randomUUID()
     val n = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) n.incrementAndGet()
+            .exists(_.split(",").contains(tag))) {
+          n.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        if (stages.contains(e.stageId)) tasks.incrementAndGet()
     }
     sc.addSparkListener(listener)
     sc.addJobTag(tag)
     try {
       val a = f
       ListenerDrain(sc)
-      (a, n.get())
+      (a, n.get(), tasks.get())
     } finally {
       sc.removeJobTag(tag)
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** Spark jobs `f` starts on this thread, counted by job tag. */
+  private def jobs[A](f: => A): (A, Int) = {
+    val (a, n, _) = jobsAndTasks(f)
+    (a, n)
   }
 
   test("SELECT * on a small glob runs no Spark job") {
@@ -344,6 +370,57 @@ class QueryEngineSpec extends AnyFunSuite {
     val (rows, n2) = jobs(e.query("**/*.md",
       "SELECT path, upper(title) FROM files WHERE title <> 'Beta' LIMIT 5").results.collect())
     assert(rows.map(_.getString(1)).toSet == Set("ALPHA", "GAMMA") && n2 == 0)
+  }
+
+  test("GROUP BY, ORDER BY, COUNT(*) and windows on a small glob run one job with one task") {
+    val e = eng(corpus(threeDocs: _*))
+    e.filesTable("**/*.md")
+    def run(sql: String): (Seq[String], Int, Int) = {
+      val (rows, n, t) = jobsAndTasks(e.query("**/*.md", sql).results.collect())
+      (rows.map(_.toSeq.mkString("|")).toSeq, n, t)
+    }
+    val cases = Seq(
+      "SELECT title, COUNT(*) AS n FROM files GROUP BY title ORDER BY n DESC, title" ->
+        Seq("Alpha|1", "Beta|1", "Gamma|1"),
+      "SELECT path FROM files ORDER BY date DESC LIMIT 2" -> Seq("a.md", "b.md"),
+      "SELECT COUNT(*) AS n FROM files" -> Seq("3"),
+      "SELECT path, row_number() OVER (ORDER BY date) AS rn FROM files ORDER BY path" ->
+        Seq("a.md|3", "b.md|2", "sub/c.md|1"),
+      """SELECT tag, COUNT(*) AS count FROM files, UNNEST(from_json(tags, '["VARCHAR"]')) AS t(tag)
+        |GROUP BY tag ORDER BY count DESC, tag""".stripMargin -> Seq("x|1", "y|1"))
+    for ((sql, want) <- cases) withClue(sql) {
+      assert(run(sql) == ((want, 1, 1)))
+    }
+  }
+
+  test("mixed plans over a small glob return the distributed frame's rows") {
+    // small/ is a local frame on its own glob and a path-filtered slice of
+    // a distributed frame on **; both must give the same rows.
+    val dir = corpus()
+    (0 until 12).foreach(i => write(dir, f"small/s$i%02d.md", s"---\nv: k${i % 3}\n---\n", 1000000L))
+    (0 until Corpus.LocalRows).foreach(i =>
+      write(dir, f"big/b$i%05d.md", s"---\nv: k${i % 5}\n---\n", 1000000L))
+    val e = eng(dir)
+    assert(Corpus.isLocal(e.filesTable("small/*.md")._1))
+    assert(!Corpus.isLocal(e.filesTable("**/*.md")._1))
+    import spark.implicits._
+    Seq("x.md" -> "k1", "y.md" -> "k9").toDF("path", "v").createOrReplaceTempView("graft_spec_extra")
+    try {
+      val slice = "path LIKE 'small/%'"
+      val statements = Seq(
+        s"""SELECT a.path AS p, b.path AS q FROM files a JOIN files b ON a.v = b.v AND a.path < b.path
+           |WHERE a.$slice AND b.$slice ORDER BY p, q""".stripMargin,
+        s"""CREATE OR REPLACE TABLE graft_spec_t AS SELECT v, COUNT(*) AS n FROM files WHERE $slice GROUP BY v;
+           |SELECT f.path, t.n FROM files f JOIN graft_spec_t t ON f.v = t.v WHERE f.$slice
+           |ORDER BY f.path""".stripMargin,
+        s"""SELECT v, COUNT(*) AS n FROM (SELECT path, v FROM files WHERE $slice
+           |UNION ALL SELECT path, v FROM graft_spec_extra) GROUP BY v ORDER BY v""".stripMargin)
+      for (sql <- statements) withClue(sql) {
+        def rows(glob: String) = e.query(glob, sql).results.collect().map(_.toSeq).toSeq
+        val local = rows("small/*.md")
+        assert(local.nonEmpty && local == rows("**/*.md"))
+      }
+    } finally spark.catalog.dropTempView("graft_spec_extra")
   }
 
   test("a one-file edit on a small glob rebuilds with no job and caches nothing") {

@@ -41,6 +41,27 @@ class SemanticSpec extends AnyFunSuite {
     assert(Embed.encode("completely different words", 64).toSeq != a.toSeq)
   }
 
+  test("embed('<literal>') folds to a literal; vectors are the encoder's, bit for bit") {
+    val s = spark.newSession()
+    val enc = Encoders.forModel("graft-trigram-encoder", Some(48))
+    Embed.register(s, enc)
+    val plan = s.sql("SELECT embed('spark table scan') AS v").queryExecution.optimizedPlan
+    assert(plan.expressions.exists(_.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal])))
+    assert(!plan.expressions.exists(_.exists(_.isInstanceOf[EmbedText])), plan)
+    val texts = Seq("spark table scan", "Ünïcode and  spaces", "")
+    val rows = s.sql(
+      "SELECT t, embed(t) AS v, embed('spark table scan') AS q FROM VALUES " +
+        texts.map(t => s"('$t')").mkString(", ") + ", (NULL) AS x(t) ORDER BY t").collect()
+    def bits(v: Seq[Float]) = v.map(java.lang.Float.floatToRawIntBits)
+    val want = bits(enc.encode("spark table scan").toSeq)
+    for (r <- rows) {
+      assert(bits(r.getSeq[Float](2)) == want)
+      if (r.isNullAt(0)) assert(r.isNullAt(1))
+      else assert(bits(r.getSeq[Float](1)) == bits(enc.encode(r.getString(0)).toSeq), r.getString(0))
+    }
+    assert(rows.length == 4)
+  }
+
   test("cosine expressions: eval matches a plain double loop; distance = 1 - sim") {
     CosineFunctions.register(spark)
     import spark.implicits._

@@ -17,8 +17,15 @@
 # {"side", "seed", "workload", "trace", "result"}. At the end, for each
 # metric, the script prints each side's median and quartiles over the
 # seeds given and the number of pairs the change won (lower wins unless
-# BENCHMARK.json marks the metric "higher"). A run that fails is
-# recorded with "result": null and its pair is left out of the summary.
+# BENCHMARK.json marks the metric "higher"), then two verdicts:
+#   gain rule   the change won at least 9/10 of the pairs and its median
+#               is better than the parent's by more than the distance
+#               between the parent's quartiles
+#   bound rule  (metrics with a `bound` in BENCHMARK.json) the change's
+#               median is no worse than the parent's by more than the
+#               bound: at most parent x (1 + bound) when lower is better
+# A run that fails is recorded with "result": null and its pair is left
+# out of the summary.
 # The script only calls perfbench/run.py; it changes nothing in either
 # checkout beyond what a perfbench run itself writes.
 set -euo pipefail
@@ -67,6 +74,7 @@ seeds = [int(s) for s in sys.argv[5:]]
 with open(bench) as f:
     b = json.load(f)
 higher = {m["name"] for m in b["end_to_end"] + b["per_layer"] if m.get("better") == "higher"}
+bounds = {m["name"]: m["bound"] for m in b["end_to_end"] + b["per_layer"] if "bound" in m}
 
 runs = {}
 with open(out) as f:
@@ -83,9 +91,15 @@ print(f"{workload}, trace {trace}: {len(pairs)} pairs"
       + (f", {failed} left out (a run failed)" if failed else "")
       + (f"; NOT CORRECT: {', '.join(bad)}" if bad else "; every run correct, 0 failed"))
 
+def quartiles(xs):
+    return statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
+
 def quart(xs):
-    q = statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
+    q = quartiles(xs)
     return f"{statistics.median(xs):.4g} [{q[0]:.4g}-{q[2]:.4g}]"
+
+def verdict(ok):
+    return "holds" if ok else "FAILS"
 
 names = []
 for s in pairs:
@@ -102,4 +116,14 @@ for n in names:
     pm, cm = statistics.median(p), statistics.median(c)
     delta = f"{(cm - pm) / pm * 100:+.1f}%" if pm else "n/a"
     print(f"  {n}: parent {quart(p)} -> change {quart(c)} ({delta}), change better in {wins}/{len(both)}")
+    q = quartiles(p)
+    gap = (cm - pm) if n in higher else (pm - cm)
+    print(f"    gain rule {verdict(wins >= 0.9 * len(both) and gap > q[2] - q[0])}: "
+          f"won {wins}/{len(both)} (needs >= 9/10), median gap {gap:+.4g} "
+          f"against the parent's quartile distance {q[2] - q[0]:.4g}")
+    if n in bounds:
+        limit = pm * (1 - bounds[n]) if n in higher else pm * (1 + bounds[n])
+        ok = cm >= limit if n in higher else cm <= limit
+        print(f"    bound rule {verdict(ok)}: change median {cm:.4g} "
+              f"{'>=' if n in higher else '<='} {limit:.4g} (parent x {'1 -' if n in higher else '1 +'} {bounds[n]})")
 EOF
